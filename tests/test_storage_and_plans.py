@@ -268,3 +268,200 @@ def test_window_funnel_ch_single_sort_plan(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
     assert len(re.findall(r"\bSort \[", plan)) == 1
     assert len(re.findall(r"\bWindow \[", plan)) == 3  # k-1 chained
+
+
+# -- FINAL snapshots ---------------------------------------------------------
+
+DAY = ("2024-12-21 00:00:00", "2024-12-21 23:59:59")
+
+
+def _plan_nodes(df) -> list[str]:
+    """Physical node names of ``df``'s plan, looking through adaptive
+    wrappers and query stages but not into cached relations."""
+    stack, names = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            stack.append(node.executedPlan())
+        elif "QueryStage" in name:
+            stack.append(node.plan())
+        else:
+            names.append(name)
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def _with_reversions(spark, n, mod=10):
+    """``n`` trades plus re-versions of every ``mod``-th, repriced +1."""
+    base = _trades_df(spark, n)
+    return base.filter(F.col("trade_no") % mod == 0).withColumn(
+        "_ingest_seq", F.col("_ingest_seq") + 10_000
+    ).withColumn("price", (F.col("price") + 1).cast("float"))
+
+
+def test_final_snapshot_serves_panel_queries(spark, tmp_path):
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 900), path, "transaq_trades")
+    expected = _rows(storage.read_table_range(spark, path, "transaq_trades", *DAY))
+    # a second read over the unchanged files, shared by panels via a view
+    snap = storage.read_table_range(spark, path, "transaq_trades", *DAY)
+    snap.createOrReplaceTempView("snap_trades")
+    panel = spark.sql("SELECT sec_code, count(*) AS n FROM snap_trades GROUP BY sec_code")
+    nodes = _plan_nodes(panel)
+    assert "InMemoryTableScan" in nodes
+    assert not any(n.startswith("Window") for n in nodes)
+    assert _rows(snap) == expected
+    assert sum(r.n for r in panel.collect()) == len(expected)
+
+
+def test_final_snapshot_sees_appended_versions(spark, tmp_path):
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 500), path, "transaq_trades")
+    before = _persistent_rdds(spark)
+    old = storage.read_table_range(spark, path, "transaq_trades")
+    old_prices = {r.trade_no: r.price for r in old.collect()}
+    old_rdds = _persistent_rdds(spark) - before
+    assert len(old_rdds) == 1  # the first action filled the snapshot
+
+    storage.write_table(_with_reversions(spark, 500), path, "transaq_trades")
+    new = storage.read_table_range(spark, path, "transaq_trades")
+    assert new is not old
+    new_prices = {r.trade_no: r.price for r in new.collect()}
+    assert len(new_prices) == 500
+    assert all(new_prices[k] == old_prices[k] + (1 if k % 10 == 0 else 0) for k in old_prices)
+    assert not old.is_cached
+    assert not old_rdds & _persistent_rdds(spark)
+
+
+def test_final_snapshot_across_compaction(spark, tmp_path):
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 600).repartition(6), path, "transaq_trades")
+    storage.write_table(_with_reversions(spark, 600).repartition(6), path, "transaq_trades")
+    expected = _rows(storage.read_table_range(spark, path, "transaq_trades"))
+    assert storage.compact_table(spark, path, "transaq_trades")
+    # the pre-compaction files are gone: a stale snapshot or file listing
+    # would fail here with FileNotFound
+    assert _rows(storage.read_table_range(spark, path, "transaq_trades")) == expected
+
+
+def test_final_snapshot_quotes_keep_in_range_version(spark, tmp_path):
+    """``transaq_quotes`` dedups on (sec_code, board, price, source) — no
+    time column — so a key's later version outside the range must not
+    shadow its in-range version."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from transaq_clickhouse_exporter_spark import schemas
+
+    day1, day2 = dt.datetime(2024, 12, 21, 10), dt.datetime(2024, 12, 22, 10)
+    rows = [
+        (day1, 1, "TQBR", "SBER", 100.0, "S", 0, 7, 0, 1),
+        (day2, 1, "TQBR", "SBER", 100.0, "S", 0, 9, 0, 2),
+        (day1, 2, "TQBR", "GAZP", 200.0, "S", 0, 3, 0, 3),
+    ]
+    schema = T.StructType(schemas.QUOTES.fields + [T.StructField("_ingest_seq", T.LongType())])
+    path = str(tmp_path / "quotes")
+    storage.write_table(spark.createDataFrame(rows, schema), path, "transaq_quotes")
+
+    def buys(frm=None, to=None):
+        df = storage.read_table_range(spark, path, "transaq_quotes", frm, to)
+        return {r.sec_code: r.buy for r in df.collect()}
+
+    assert buys() == {"SBER": 9, "GAZP": 3}
+    assert buys(*DAY) == {"SBER": 7, "GAZP": 3}
+    assert buys() == {"SBER": 9, "GAZP": 3}
+
+
+def test_final_snapshot_size_guard_falls_back(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 500), path, "transaq_trades")
+    old = {r.trade_no: r.price for r in storage.read_table_range(spark, path, "transaq_trades").collect()}
+    storage.write_table(_with_reversions(spark, 500), path, "transaq_trades")
+    monkeypatch.setattr(storage, "_free_storage_bytes", lambda spark: 0)
+    df = storage.read_table_range(spark, path, "transaq_trades")
+    assert not df.is_cached
+    nodes = _plan_nodes(df)
+    assert "InMemoryTableScan" not in nodes  # nor the old snapshot's cache
+    assert any(n.startswith("Window") for n in nodes)
+    new = {r.trade_no: r.price for r in df.collect()}
+    assert all(new[k] == old[k] + (1 if k % 10 == 0 else 0) for k in old)
+
+
+def test_final_snapshot_concurrent_readers(spark, tmp_path):
+    """More readers than cores race on one table and get equal rows."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 800), path, "transaq_trades")
+    storage.write_table(_with_reversions(spark, 800), path, "transaq_trades")
+    n = 8
+    start = threading.Barrier(n)
+
+    def read(_):
+        start.wait(timeout=60)
+        return _rows(storage.read_table_range(spark, path, "transaq_trades"))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(n) as pool:
+            got = [f.result(timeout=300) for f in [pool.submit(read, i) for i in range(n)]]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(rows == got[0] for rows in got)
+    assert len(got[0]) == 800
+
+
+def test_final_snapshot_later_reader_sees_append(spark, tmp_path, monkeypatch):
+    """Reader A lists the files, a batch is appended, reader B lists
+    again; A is held until B is done or blocked.  B must still read the
+    appended versions, whichever of the two registers its snapshot last."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 500), path, "transaq_trades")
+    old = {r.trade_no: r.price for r in storage.read_table_range(spark, path, "transaq_trades").collect()}
+    listed, go = threading.Event(), threading.Event()
+    parquet = DataFrameReader.parquet
+
+    def held_parquet(reader, *paths, **options):
+        df = parquet(reader, *paths, **options)
+        if threading.current_thread().name == "reader-a":
+            listed.set()
+            go.wait(timeout=60)
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", held_parquet)
+    got = {}
+
+    def read(who):
+        got[who] = storage.read_table_range(spark, path, "transaq_trades")
+
+    a = threading.Thread(target=read, args=("a",), name="reader-a")
+    a.start()
+    assert listed.wait(timeout=60)
+    storage.write_table(_with_reversions(spark, 500), path, "transaq_trades")
+    b = threading.Thread(target=read, args=("b",), name="reader-b")
+    b.start()
+    b.join(timeout=5)  # done, or waiting on A
+    go.set()
+    a.join(timeout=120)
+    b.join(timeout=120)
+    assert not a.is_alive() and not b.is_alive()
+    new = {r.trade_no: r.price for r in got["b"].collect()}
+    assert all(new[k] == old[k] + (1 if k % 10 == 0 else 0) for k in old)

@@ -29,6 +29,8 @@ def run_one(conc: int, extra_env: dict | None = None) -> dict:
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True, text=True, env=env, cwd=REPO,
     )
+    if p.returncode != 0:
+        raise RuntimeError(f"bench.py exited {p.returncode} at conc={conc}:\n{p.stderr}")
     last = [ln for ln in p.stdout.strip().splitlines() if ln.startswith("{")][-1]
     d = json.loads(last)
     return {

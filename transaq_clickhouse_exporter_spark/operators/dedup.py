@@ -44,26 +44,17 @@ def dedup_last_write_wins(
 
     ``strategy='window'`` (default) is the ``row_number``-over-sort
     form: one Exchange on the keys + one per-partition sort.
-    ``strategy='agg'`` implements the winner as
-    ``max_by(struct(payload), order_col)`` — conceptually a hash agg
-    with map-side combine, but Spark plans a struct-buffered max_by as
-    **SortAggregate** (struct isn't a mutable-buffer type), costing a
-    sort on BOTH sides of the exchange; measured at sf0.1 it loses to
-    the window form (1.9 s vs 1.6 s warm, 3.3 s vs 1.9 s cold).  'agg'
-    remains the right shape when duplicates-per-key ≫ 1 (its partial
-    step collapses dupes before the shuffle, the window form ships them
-    all); our trades feed is near-unique per key, so window wins.
     ``strategy='columns'`` runs one ``max_by(col, order_col)`` PER
     payload column: every buffer is primitive, so the whole pipeline
     stays HashAggregate with a map-side partial combine — no sorts at
     all (measured at sf0.1: 1.0 s steady vs 1.8 s window).  It also
-    collapses duplicates before the shuffle like 'agg'.  Correct ONLY
+    collapses duplicates before the shuffle.  Correct ONLY
     when ``order_col`` is unique per key (true for :data:`INGEST_SEQ`):
     with ties, different columns could be taken from different tied
     rows, breaking row atomicity — which is why 'window' stays the
     generic default.  Unused ``max_by`` columns are pruned by Catalyst
     when the caller projects a subset.
-    Output column order is keys-first under 'agg'/'columns'."""
+    Output column order is keys-first under 'columns'."""
     if order_col not in df.columns:
         # Exact-duplicate collapse: dropDuplicates does a partial
         # (map-side) dedup before the shuffle — cheaper than a window.
@@ -76,26 +67,15 @@ def dedup_last_write_wins(
             .drop("__rn")
         )
         return out if keep_order_col else out.drop(order_col)
+    if strategy != "columns":
+        raise ValueError(f"unknown dedup strategy {strategy!r}: 'window' or 'columns'")
     payload = [c for c in df.columns if c not in keys and c != order_col]
-    if strategy == "columns":
-        aggs = [F.max_by(c, order_col).alias(c) for c in payload]
-        if keep_order_col:
-            aggs.append(F.max(order_col).alias(order_col))
-        if not aggs:
-            return df.select(*keys).distinct()
-        return df.groupBy(*keys).agg(*aggs)
-    aggs = []
-    if payload:
-        aggs.append(F.max_by(F.struct(*payload), F.col(order_col)).alias("__win"))
+    aggs = [F.max_by(c, order_col).alias(c) for c in payload]
     if keep_order_col:
         aggs.append(F.max(order_col).alias(order_col))
     if not aggs:  # key-only table: dedup is just distinct
         return df.select(*keys).distinct()
-    out = df.groupBy(*keys).agg(*aggs)
-    cols = list(keys) + (["__win.*"] if payload else [])
-    if keep_order_col:
-        cols.append(order_col)
-    return out.select(*cols)
+    return df.groupBy(*keys).agg(*aggs)
 
 
 def dedup_streaming(df: DataFrame, keys: Sequence[str], watermark_col: str, delay: str) -> DataFrame:

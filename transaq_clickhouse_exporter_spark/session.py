@@ -58,26 +58,39 @@ def get_spark(
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     b = SparkSession.builder.master(f"local[{cpus}]").appName(app)
-    for k, v in _BASE_CONFS.items():
-        b = b.config(k, v)
-    # Ad-hoc conf overrides for measurement experiments (guide §1):
-    # `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"` — lets A/B runs of bench.py/
-    # profilers vary STATIC confs (codegen cache size, scheduler mode)
-    # without editing code.  Empty by default; anything that wins an
-    # A/B is promoted to _BASE_CONFS with its rationale.
-    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in kv:
-            k, _, v = kv.partition("=")
-            b = b.config(k.strip(), v.strip())
-    b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-    b = b.config("spark.sql.session.timeZone", tz)
-    b = b.config("spark.ui.enabled", "false")
-    b = b.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-    for k, v in (extra or {}).items():
+    for k, v in session_confs(cpus, tz, shuffle_partitions, extra).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_confs(
+    cpus: int,
+    tz: str = "UTC",
+    shuffle_partitions: int | None = None,
+    extra: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The confs :func:`get_spark` builds with, later entries winning:
+    :data:`_BASE_CONFS`, the fixed session confs, then
+    ``$SPARK_GRAFT_EXTRA_CONF``, then ``extra``."""
+    confs = dict(_BASE_CONFS)
+    confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    confs["spark.sql.session.timeZone"] = tz
+    confs["spark.ui.enabled"] = "false"
+    confs["spark.driver.memory"] = os.environ.get("SPARK_DRIVER_MEM", "8g")
+    # Ad-hoc conf overrides for measurement experiments (guide §1):
+    # `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"` — lets A/B runs of bench.py/
+    # profilers vary STATIC confs (codegen cache size, scheduler mode)
+    # without editing code, and override any fixed conf above.  Empty
+    # by default; anything that wins an A/B is promoted to _BASE_CONFS
+    # with its rationale.
+    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
+        if "=" in kv:
+            k, _, v = kv.partition("=")
+            confs[k.strip()] = v.strip()
+    confs.update(extra or {})
+    return confs
 
 
 def configure_session(spark: SparkSession, tz: str = "UTC", adaptive: bool | None = None) -> SparkSession:

@@ -13,9 +13,39 @@ key-range pruning and locality.  The Spark-native equivalent:
   dedup-on-read window finds its groups co-located.
 - **Repartition on the key before write** so one security's day lands
   in few files (no small-file explosion at 1000 executors).
+
+FINAL snapshots.  ReplacingMergeTree collapses row versions once, in
+background merges; a dashboard then reads merged parts from every
+panel.  :func:`read_table_range` with ``final=True`` gets the same
+shape: it persists the pruned, deduplicated DataFrame it returns, so a
+refresh that registers it as a view and runs 20 panels over it pays the
+dedup Exchange + Sort + Window once, not once per panel.
+
+- **Fresh per call:** every call lists the table's files and builds a
+  new snapshot over that listing, so it sees every append, overwrite
+  and :func:`compact_table` made before it.  Nothing is reused across
+  calls: dashboard time ranges move on every refresh.
+- **Bound:** at most one snapshot per table path.  A call unpersists
+  the path's previous snapshot *before* it builds its own: Spark's
+  cache matches any read of one root path with the same range as the
+  same plan, whatever its files, so a stale entry would otherwise
+  answer the new read.
+- **Ordering:** listing, unpersist and registration run under one
+  lock, so the registered snapshot always comes from the newest
+  listing.  An older DataFrame of the same range that is still in use
+  may then be served that newer snapshot, never an older one.
+- **Size guard:** a snapshot is taken only when Catalyst's size
+  estimate of the pruned read fits in the block managers' free storage
+  memory; otherwise the plain, recomputed-per-query DataFrame is
+  returned.  ``final=False`` never snapshots.
+
+The snapshot fills lazily, on the first action that reads it.
 """
 
 from __future__ import annotations
+
+import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,6 +112,34 @@ def write_table_bucketed(
     )
 
 
+#: Absolute table path → its one FINAL snapshot.
+_SNAPSHOTS: dict[str, DataFrame] = {}
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def _free_storage_bytes(spark: SparkSession) -> int:
+    """Storage memory still free across the cluster's block managers."""
+    status = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().valuesIterator()
+    free = 0
+    while status.hasNext():
+        free += status.next()._2()
+    return free
+
+
+def _pruned_read(spark: SparkSession, path: str, name: str, frm, to) -> tuple[DataFrame, list[str]]:
+    """The table's rows in [``frm``, ``to``], and its schema columns.
+    Building the DataFrame lists the table's files."""
+    raw = spark.read.parquet(path)
+    cols = [f.name for f in TABLES[name].schema.fields if f.name in raw.columns]
+    df = raw
+    tcol = _TIME_COL[name]
+    if tcol and frm is not None:
+        df = df.filter((F.col("p_date") >= F.to_date(F.lit(frm))) & (F.col(tcol) >= F.lit(frm)))
+    if tcol and to is not None:
+        df = df.filter((F.col("p_date") <= F.to_date(F.lit(to))) & (F.col(tcol) <= F.lit(to)))
+    return df, cols
+
+
 def read_table_range(
     spark: SparkSession,
     path: str,
@@ -94,17 +152,30 @@ def read_table_range(
     from the time range prunes day directories before any file opens;
     the raw time predicate then prunes row groups via min/max stats.
     Dedup-on-read (``final``) runs *after* pruning — the window only
-    sees surviving partitions."""
-    spec = TABLES[name]
-    df = spark.read.parquet(path)
-    tcol = _TIME_COL[name]
-    if tcol and frm is not None:
-        df = df.filter((F.col("p_date") >= F.to_date(F.lit(frm))) & (F.col(tcol) >= F.lit(frm)))
-    if tcol and to is not None:
-        df = df.filter((F.col("p_date") <= F.to_date(F.lit(to))) & (F.col(tcol) <= F.lit(to)))
-    if final:
-        df = dedup_last_write_wins(df, spec.dedup_keys, INGEST_SEQ)
-    return df.select(*[f.name for f in spec.schema.fields if f.name in df.columns])
+    sees surviving partitions.
+
+    ``final=True`` returns a FINAL snapshot (see the module docstring):
+    the deduplicated DataFrame over the files listed by this call,
+    persisted so that every query over it reuses one dedup, and
+    replacing the table path's previous snapshot.  When the pruned
+    read's size estimate does not fit in free storage memory it returns
+    the plain dedup plan instead."""
+    if not final:
+        df, cols = _pruned_read(spark, path, name, frm, to)
+        return df.select(*cols)
+    table = os.path.abspath(path)
+    with _SNAPSHOTS_LOCK:
+        old = _SNAPSHOTS.pop(table, None)
+        if old is not None and old.sparkSession.sparkContext is spark.sparkContext:
+            old.unpersist(blocking=False)
+        df, cols = _pruned_read(spark, path, name, frm, to)
+        out = dedup_last_write_wins(df, TABLES[name].dedup_keys, INGEST_SEQ).select(*cols)
+        # estimated on the pruned read, not on ``out``: planning ``out``
+        # before persist() would pin its plan to the uncached form
+        size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        if size <= _free_storage_bytes(spark):
+            _SNAPSHOTS[table] = out.persist()
+        return out
 
 
 def compact_table(

@@ -14,7 +14,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
-from .operators.dedup import INGEST_SEQ, dedup_last_write_wins
 
 
 @dataclass(frozen=True)
@@ -141,12 +140,12 @@ def read_table(spark: SparkSession, path: str, name: str, final: bool = True) ->
     """Read a stored table; ``final=True`` applies last-write-wins dedup
     on the ReplacingMergeTree key (deterministic ``FINAL`` semantics,
     SURVEY §1.5).  ``final=False`` matches the reference's dashboard
-    reads, which tolerate pre-merge duplicates."""
-    spec = TABLES[name]
-    df = spark.read.parquet(path)
-    if final:
-        df = dedup_last_write_wins(df, spec.dedup_keys, INGEST_SEQ)
-    return df.select(*[f.name for f in spec.schema.fields if f.name in df.columns])
+    reads, which tolerate pre-merge duplicates.  Delegates to
+    :func:`~transaq_clickhouse_exporter_spark.storage.read_table_range`
+    over the whole table, so a FINAL read is the table's snapshot."""
+    from .storage import read_table_range  # storage imports this module
+
+    return read_table_range(spark, path, name, final=final)
 
 
 def bootstrap_ddl() -> list[str]:
