@@ -4,6 +4,8 @@ a CH-style panel query verified against its DataFrame twin."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1578,3 +1580,56 @@ def test_r12o_quoted_names_survive_expression_scanners(spark):
     for q, want in cases:
         got = run_ch_sql(spark, q).collect()[0][0]
         assert got == want, f"{q!r} -> {got!r}, want {want!r}"
+
+
+@pytest.mark.parametrize("quoted, twin", [
+    ("SELECT sumIf(x, `a(b` > 0) AS c FROM t",
+     "SELECT sumIf(x, `ab` > 0) AS c FROM t"),
+    ("SELECT sumIf(x, `a,b` > 0) AS c FROM t",
+     "SELECT sumIf(x, `ab` > 0) AS c FROM t"),
+    ("SELECT avgIf(`p)`, `q` = 1) AS c FROM t",
+     "SELECT avgIf(`p`, `q` = 1) AS c FROM t"),
+    ("SELECT countIf(x, `a,b` > 0) AS c FROM t",
+     "SELECT countIf(x, `ab` > 0) AS c FROM t"),
+    ("SELECT * REPLACE (`a)` + 1 AS b) FROM t",
+     "SELECT * REPLACE (`a` + 1 AS b) FROM t"),
+    ("SELECT uniq(`x[1]`) AS u FROM t WHERE `g,h` IN [1, 2]",
+     "SELECT uniq(`x1`) AS u FROM t WHERE `gh` IN [1, 2]"),
+])
+def test_quoted_identifier_brackets_and_commas_are_opaque(quoted, twin):
+    """A backtick-quoted name holding a bracket or a comma translates
+    exactly like a plain quoted name: every scanner treats the
+    identifier as one opaque span."""
+    want = translate_ch_sql(twin)
+    for plain, name in zip(re.findall(r"`[^`]*`", twin),
+                           re.findall(r"`[^`]*`", quoted)):
+        want = want.replace(plain, name)
+    assert translate_ch_sql(quoted) == want
+
+
+def test_quoted_identifier_with_paren_runs(spark):
+    rows = run_ch_sql(
+        spark,
+        "SELECT sumIf(x, `a(b` > 0) AS c, countIf(x, `a,b` > 0) AS n"
+        " FROM (SELECT number AS x, number - 1 AS `a(b`,"
+        " number - 2 AS `a,b` FROM numbers(4))").collect()
+    assert [tuple(r) for r in rows] == [(5, 1)]
+
+
+def test_scanner_helpers():
+    from transaq_clickhouse_exporter_spark.queries.ch_compat import (
+        _find_partner, _split_args, _sub_masked)
+
+    s = "f(a, 'x)''(', `y)(`, g(b)) + [1, `]`]"
+    assert _find_partner(s, 1) == s.index(") +")
+    assert _find_partner(s, s.index(") +")) == 1
+    assert _find_partner(s, s.index("[")) == len(s) - 1
+    assert _find_partner(s, len(s) - 1) == s.index("[")
+    assert _find_partner(s, s.index("'")) == s.index("', `")
+    assert _find_partner("f(a", 1) == -1
+    assert _find_partner("a)", 1) == -1
+    assert _find_partner("'it''s", 0) == -1
+    assert _split_args(" a, 'b,''c', `d,e`, f(g, h) ") == [
+        "a", "'b,''c'", "`d,e`", "f(g, h)"]
+    assert _sub_masked(r"\bx\b", lambda m: m.group(0).upper(),
+                       "x + 'x' + x") == "X + 'x' + X"

@@ -12,7 +12,7 @@ $SPARK_GRAFT_SF_DIR (default sf0.1):
 * optionally (--pandas) also time the bench's toPandas action for the
   transfer-vs-compute split.
 
-Run: python tools/profile_r16.py [--plans TAG] [--pandas] [--reps N] [name ...]
+Run: python tools/profile_r17.py [--plans TAG] [--pandas] [--reps N] [name ...]
 """
 
 from __future__ import annotations

@@ -30,14 +30,8 @@ DEFAULT_BOARDS = ("TQBR", "TQCB", "FUT")
 def valid_securities(raw: DataFrame) -> DataFrame:
     """Validity filter (main.go:141-143) + projection/cast to the
     persisted 12-column schema (main.go:146-157, O-1)."""
-    persisted = [f.name for f in schemas.SECURITIES.fields]
-    out = raw.filter(
-        (F.col("secid") != 0)
-        & (F.col("active") == "true")
-        & (F.length("seccode") <= 16)
-    )
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schemas.SECURITIES.fields if f.name in persisted]
+    return valid_securities_raw(raw).select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schemas.SECURITIES.fields]
     )
 
 

@@ -94,6 +94,28 @@ Two mechanisms, used together by :func:`run_ch_sql`:
    ``('backward', 'head')`` and ``('forward', 'tail')``, raise by
    name.
 
+Scanning contract (every text pass of the translator): two kinds of
+span are OPAQUE — a single-quoted string literal (``'it''s'``: a
+doubled quote stays inside; CH backslash escapes are first rewritten
+to doubling by ``_normalize_escapes``) and a backtick-quoted
+identifier (a name like ``a(b, c]`` between backticks).  Brackets,
+commas, quotes and keywords inside either never count.  No pass
+scans quotes or counts brackets by hand; each uses one of three
+helpers:
+
+- ``_find_partner`` to MATCH: the partner of a ``(``/``)``/``[``/``]``
+  (forward from an opener, backward from a closer) or the closing
+  quote of a span, -1 when unbalanced (``_find_close`` raises
+  instead, for callers with no message of their own);
+- ``_split_args`` to SPLIT text on its top-level commas;
+- ``_sub_masked`` to SPLICE: a regex run on the ``_mask_literals``
+  shadow, its string or function replacement spliced into the
+  original text.
+
+Regex scans read a same-length shadow: ``_mask_literals`` blanks
+literal content, ``_mask_idents`` blanks identifier content as well;
+``_depth_map`` gives a per-character paren depth that ignores both.
+
 Documented deviations from ClickHouse (each also noted at its shim):
 
 - ``toDate(N)`` for a NUMERIC argument that spells a valid yyyyMMdd
@@ -257,7 +279,7 @@ from __future__ import annotations
 import itertools
 import re
 
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1097,8 +1119,6 @@ _SHIM_DEPS: dict[str, frozenset] = {}
 
 
 def _shim_closure(names) -> set:
-    import re
-
     if not _SHIM_DEPS:
         low = {n.lower(): n for n in _SCALAR_SHIMS}
         for n, b in _SCALAR_SHIMS.items():
@@ -1614,62 +1634,150 @@ _STATE_COMBINATOR_RX = (
     r"(If)?(State|Merge|MergeState|SimpleState)$")
 
 
-def _find_close(sql: str, open_idx: int) -> int:
-    """Index of the ')' matching sql[open_idx] == '(', respecting
-    nested parens and single-quoted literals."""
+# ---- the quote-and-bracket scanner ------------------------------------
+# Every pass reads SQL text through these helpers; see "Scanning
+# contract" in the module docstring.
+
+_QUOTE_RX = re.compile("['`]")
+_FORWARD_RX = {"(": re.compile(r"[()'`]"), "[": re.compile(r"[\[\]'`]")}
+_SPLIT_RX = re.compile(r"[(),'`]")
+_OPEN_RX = re.compile(r"[('`]")
+_PARTNER = {"(": ")", "[": "]", ")": "(", "]": "["}
+
+
+def _find_partner(text: str, i: int) -> int:
+    """Index of the partner of ``text[i]``: the closing quote of a
+    ``'…'`` literal (``''`` doubling stays inside) or a backtick-quoted
+    identifier, the matching ``)``/``]`` of an opening bracket
+    (scanning forward), or the matching ``(``/``[`` of a closing one
+    (scanning backward).  Only brackets of ``text[i]``'s own kind
+    count, and quoted spans are skipped whole.  -1 when there is no
+    partner (unbalanced brackets, unterminated quote)."""
+    c = text[i]
+    if c in "'`":
+        j = text.find(c, i + 1)
+        while c == "'" and j >= 0 and text.startswith("''", j):
+            j = text.find(c, j + 2)
+        return j
     depth = 0
-    i = open_idx
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == "(":
+    if c in "([":
+        rx = _FORWARD_RX[c]
+        m = rx.search(text, i)
+        while m is not None:
+            j = m.start()
+            if text[j] in "'`":
+                j = _find_partner(text, j)
+                if j < 0:
+                    return -1
+            elif text[j] == c:
+                depth += 1
+            else:
+                depth -= 1
+                if depth == 0:
+                    return j
+            m = rx.search(text, j + 1)
+        return -1
+    j = i
+    while j >= 0:
+        d = text[j]
+        if d in "'`":  # a closing quote: back to its opening one
+            j = text.rfind(d, 0, j)
+            while d == "'" and j > 0 and text[j - 1] == "'":
+                j = text.rfind(d, 0, j - 1)
+            if j < 0:
+                return -1
+        elif d == c:
             depth += 1
-        elif c == ")":
+        elif d == _PARTNER[c]:
             depth -= 1
             if depth == 0:
-                return i
-        i += 1
-    raise UnsupportedChSql("unbalanced parentheses in SQL text")
+                return j
+        j -= 1
+    return -1
+
+
+def _find_close(sql: str, open_idx: int) -> int:
+    """:func:`_find_partner` of the ``(`` at ``open_idx``, raising
+    when it is unbalanced."""
+    close = _find_partner(sql, open_idx)
+    if close < 0:
+        raise UnsupportedChSql("unbalanced parentheses in SQL text")
+    return close
 
 
 def _split_args(args: str) -> list[str]:
-    """Split a call's argument text on TOP-LEVEL commas."""
-    out, depth, cur, i, n = [], 0, [], 0, len(args)
-    while i < n:
-        c = args[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if args[j] == "'":
-                    if j + 1 < n and args[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(args[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if c == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
+    """Split a call's argument text on TOP-LEVEL commas (outside
+    parentheses and quoted spans); each part is stripped.  A stray
+    ``)`` or an unbalanced span ends the splitting."""
+    out, last = [], 0
+    m = _SPLIT_RX.search(args)
+    while m is not None:
+        i = m.start()
+        if args[i] == ",":
+            out.append(args[last:i].strip())
+            last = i + 1
+        elif args[i] == ")":
+            break
         else:
-            cur.append(c)
-        i += 1
-    out.append("".join(cur).strip())
+            i = _find_partner(args, i)
+            if i < 0:
+                break
+        m = _SPLIT_RX.search(args, i + 1)
+    out.append(args[last:].strip())
     return out
+
+
+def _blank_spans(text: str, quote: str) -> str:
+    """``text`` with the CONTENT of every ``quote``-delimited span
+    blanked (same length; an unterminated span blanks to the end)."""
+    out, last = [], 0
+    m = _QUOTE_RX.search(text)
+    while m is not None:
+        i = m.start()
+        j = _find_partner(text, i)
+        end = len(text) if j < 0 else j
+        if text[i] == quote:
+            out += [text[last: i + 1], " " * (end - i - 1)]
+            last = end
+        if j < 0:
+            break
+        m = _QUOTE_RX.search(text, j + 1)
+    out.append(text[last:])
+    return "".join(out)
+
+
+def _mask_literals(sql: str) -> str:
+    """Same-length shadow of ``sql`` with single-quoted literal CONTENT
+    blanked, so regex scans see quotes but never literal text."""
+    return _blank_spans(sql, "'")
+
+
+def _mask_idents(sh: str) -> str:
+    """Blank backtick-quoted identifier CONTENT as well, on an
+    already-literal-masked shadow, for scanners whose trigger chars
+    (``?``, ``:``, ``.N``, brackets, keywords) may legally appear
+    inside quoted names."""
+    return _blank_spans(sh, "`")
+
+
+def _sub_masked(rx: "str | re.Pattern[str]",
+                repl: "str | Callable[[re.Match], str]", sql: str) -> str:
+    """``rx.sub(repl, sql)`` applied only at match positions OUTSIDE
+    single-quoted literals: matches are found on the
+    :func:`_mask_literals` shadow and spliced into the original.
+    ``repl`` is a plain string (no group backreferences — group text
+    would come from the mask) or a function of the shadow's match
+    returning the replacement; it reads original text through the
+    match's spans (``sql[m.start(1): m.end(1)]``), and the shadow as
+    ``m.string``."""
+    sh = _mask_literals(sql)
+    out, last = [], 0
+    for m in re.finditer(rx, sh):
+        out.append(sql[last: m.start()])
+        out.append(repl if isinstance(repl, str) else repl(m))
+        last = m.end()
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def translate_ch_sql(
@@ -1706,8 +1814,6 @@ def translate_ch_sql(
       explode`` (bare form emulates CH's column shadowing for a
       simple-table FROM); ``GLOBAL IN/JOIN`` hints strip; ``ASOF
       JOIN`` raises with a pointer to ``operators/asof``."""
-    import re
-
     sql = _normalize_escapes(sql)
     sql = _apply_table_map(sql, dict(table_map or {}))
     sql = _brackets_to_parens(sql)
@@ -1742,17 +1848,10 @@ def translate_ch_sql(
     sql = _recurse_select_blocks(sql, _select_top)
     # `* EXCEPT col` single-column parenless form → `* EXCEPT (col)`
     # (keyword guard keeps the EXCEPT set operator out of the match)
-    sh_x = _mask_literals(sql)
-    out_x, last_x = [], 0
-    for m in re.finditer(
-            r"(?i)(\*\s+EXCEPT)\s+(?!SELECT\b|ALL\b|DISTINCT\b|"
-            r"STRICT\b|\()(`[^`]*`|[A-Za-z_][\w$]*)", sh_x):
-        out_x.append(sql[last_x: m.start()])
-        out_x.append(f"{sql[m.start(1): m.end(1)]} "
-                     f"({sql[m.start(2): m.end(2)]})")
-        last_x = m.end()
-    out_x.append(sql[last_x:])
-    sql = "".join(out_x)
+    sql = _sub_masked(
+        r"(?i)(\*\s+EXCEPT)\s+(?!SELECT\b|ALL\b|DISTINCT\b|"
+        r"STRICT\b|\()(`[^`]*`|[A-Za-z_][\w$]*)",
+        lambda m: f"{m.group(1)} ({m.group(2)})", sql)
     sh_so = _mask_literals(sql)
     for m in re.finditer(r"(?i)\b(INTERSECT|EXCEPT)\b(\s+ALL\b)?"
                          r"(?!\s+DISTINCT\b)\s*(\(\s*)*(SELECT|WITH)\b",
@@ -1769,30 +1868,20 @@ def translate_ch_sql(
     # is named `number` in CH, `id` in Spark.  Matched in every
     # relation position — FROM, any JOIN spelling, and comma joins —
     # not just the first FROM (probe r10: `a CROSS JOIN numbers(3)`)
-    sh_n = _mask_literals(sql)
-    parts_n, last_n = [], 0
-    for m in re.finditer(
-        r"(?i)(\bFROM\b|\bJOIN\b|,)\s*numbers\s*"
-        r"\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)", sh_n
-    ):
+    def numbers_to_range(m: "re.Match") -> str:
         kw, a, b = m.group(1), m.group(2), m.group(3)
         rng = f"range({a}, {int(a) + int(b)})" if b else f"range({a})"
-        parts_n.append(sql[last_n : m.start()])
-        parts_n.append(f"{kw} (SELECT id AS number FROM {rng})")
-        last_n = m.end()
-    parts_n.append(sql[last_n:])
-    sql = "".join(parts_n)
+        return f"{kw} (SELECT id AS number FROM {rng})"
+
+    sql = _sub_masked(
+        r"(?i)(\bFROM\b|\bJOIN\b|,)\s*numbers\s*"
+        r"\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)", numbers_to_range, sql)
     # `FROM t FINAL` → `FROM t`: dedup-on-read views already implement
     # ReplacingMergeTree FINAL (operators/dedup.py).  Anchored on the
     # FROM clause so a column/alias named "final" is untouched; masked
     # scan so literal text containing "FROM x FINAL" is left alone.
-    sh_f = _mask_literals(sql)
-    parts, last = [], 0
-    for m in re.finditer(r"(?i)(\bFROM\s+[A-Za-z_`][\w.`]*)\s+FINAL\b", sh_f):
-        parts.append(sql[last : m.end(1)])
-        last = m.end()
-    parts.append(sql[last:])
-    sql = "".join(parts)
+    sql = _sub_masked(r"(?i)(\bFROM\s+[A-Za-z_`][\w.`]*)\s+FINAL\b",
+                      lambda m: m.group(1), sql)
     sql = _with_totals(sql)  # before _scalar_with: TOTALS is not a CTE
     # scalar WITH items appear inside subqueries too (review r10)
     sql = _recurse_select_blocks(sql, _scalar_with)
@@ -1885,21 +1974,6 @@ def translate_ch_sql(
         _limit_with_ties)
 
 
-def _sub_masked(rx: "re.Pattern[str]", repl: str, sql: str) -> str:
-    """``rx.sub(repl, sql)`` applied only at match positions OUTSIDE
-    single-quoted literals (matches found on the masked shadow, text
-    spliced on the original).  ``repl`` must be a plain string without
-    group backreferences (group text would come from the mask)."""
-    sh = _mask_literals(sql)
-    out, last = [], 0
-    for m in rx.finditer(sh):
-        out.append(sql[last : m.start()])
-        out.append(repl)
-        last = m.end()
-    out.append(sql[last:])
-    return "".join(out)
-
-
 def _normalize_escapes(sql: str) -> str:
     """Convert ClickHouse backslash escapes inside string literals to
     the ``''`` doubling convention every scanner in this module (and
@@ -1934,28 +2008,6 @@ def _normalize_escapes(sql: str) -> str:
     return "".join(out)
 
 
-def _mask_literals(sql: str) -> str:
-    """Same-length shadow of ``sql`` with single-quoted literal CONTENT
-    blanked, so regex scans see quotes but never literal text."""
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append("'" + " " * max(0, j - i - 1) + ("'" if j < n else ""))
-            i = j + 1
-        else:
-            out.append(sql[i])
-            i += 1
-    return "".join(out)
-
-
 #: Tokens after which a word spelled ``global`` is an OPERAND (a
 #: column/alias), not CH's distributed-subquery hint — the hint only
 #: ever follows a completed expression (identifier, ``)``, literal).
@@ -1973,21 +2025,15 @@ def _strip_global_hints(sql: str) -> str:
     identifier literally named ``global`` used as an operand
     (``WHERE global IN (1,2)``) is preceded by a clause boundary or
     operator and is left untouched (ADVICE r6)."""
-    import re
-
-    sh = _mask_literals(sql)
-    out, last = [], 0
-    for m in re.finditer(
-        r"(?i)\bGLOBAL\s+(?=IN\b|NOT\s+IN\b|JOIN\b|ANY\b|ALL\b)", sh
-    ):
-        pm = re.search(r"([A-Za-z_0-9`$.]+|\S)\s*$", sh[: m.start()])
+    def drop_hint(m: "re.Match") -> str:
+        pm = re.search(r"([A-Za-z_0-9`$.]+|\S)\s*$", m.string[: m.start()])
         prev = pm.group(1).upper() if pm else ""
-        if prev in _GLOBAL_KEEP_PREV:
-            continue  # operand named 'global', not a hint
-        out.append(sql[last : m.start()])
-        last = m.end()
-    out.append(sql[last:])
-    return "".join(out)
+        # operand named 'global', not a hint: keep it
+        return m.group(0) if prev in _GLOBAL_KEEP_PREV else ""
+
+    return _sub_masked(
+        r"(?i)\bGLOBAL\s+(?=IN\b|NOT\s+IN\b|JOIN\b|ANY\b|ALL\b)",
+        drop_hint, sql)
 
 
 def _any_join_guard(sh: str, start: int, g1: str | None,
@@ -1995,8 +2041,6 @@ def _any_join_guard(sh: str, start: int, g1: str | None,
     """A bare ``ANY JOIN`` match preceded by RIGHT/FULL [OUTER] is
     really a ``RIGHT ANY JOIN`` — unsupported direction; rewriting
     just the tail would splice INNER after RIGHT."""
-    import re
-
     pre = re.search(r"(?i)\b(RIGHT|FULL)\s+(?:OUTER\s+)?$", sh[:start])
     if pre is not None and g1 is None and g2 is None:
         raise UnsupportedChSql(
@@ -2059,8 +2103,6 @@ def _defer_any_left_join(sql: str) -> str:
     list, every non-key item aliased, every GROUP BY key a plain
     selected column, tail referencing only output names.  Anything
     else keeps the original shape."""
-    import re
-
     sh = _mask_literals(sql)
     if not re.match(r"(?is)^\s*SELECT\b", sh):
         return sql
@@ -2196,8 +2238,6 @@ def _defer_any_left_join(sql: str) -> str:
 def _mentions_any(sh: str, names: set[str]) -> bool:
     """True if any of ``names`` occurs as a bare identifier token in
     the masked fragment (``AS <name>`` aliases excluded)."""
-    import re
-
     if not names:
         return False
     sh = re.sub(r"(?i)\bAS\s+[A-Za-z_]\w*", " ", sh)
@@ -2225,8 +2265,6 @@ def _rewrite_any_join(sql: str) -> str:
     raise naming the USING workaround.
     Quantified-comparison ``ANY (SELECT …)`` is never followed by
     JOIN and stays untouched."""
-    import re
-
     # ALL noise word: only immediately before a join spelling —
     # covers `ALL LEFT [OUTER] JOIN` and the postfix `LEFT ALL JOIN`
     # order; UNION ALL / `> ALL (` don't match
@@ -2266,16 +2304,8 @@ def _rewrite_any_join(sql: str) -> str:
             break
         _any_join_guard(sh, m.start(), m.group(1), m.group(2))
         jtype = (m.group(1) or m.group(2) or "INNER").upper()
-        open_p, depth = m.end() - 1, 0
-        close_p = -1
-        for i in range(open_p, len(sh)):
-            if sh[i] == "(":
-                depth += 1
-            elif sh[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close_p = i
-                    break
+        open_p = m.end() - 1
+        close_p = _find_partner(sh, open_p)
         if close_p < 0:
             raise UnsupportedChSql("unbalanced parens in ANY JOIN")
         tm = re.match(
@@ -2316,8 +2346,6 @@ def _select_star_modifiers(sql: str) -> str:
     and ``COLUMNS('re')`` need the column list, which SQL text does
     not carry — they raise naming the workaround.
     """
-    import re
-
     if re.search(r"(?i)\*\s*(?:EXCEPT\s*\([^()]*\)\s*)?APPLY\s*\(",
                  _mask_literals(sql)):
         raise UnsupportedChSql(
@@ -2346,15 +2374,8 @@ def _select_star_modifiers(sql: str) -> str:
                     "SELECT", "DISTINCT"):
                 pos = m.end()
                 continue
-        open_p, depth, close_p = m.end() - 1, 0, -1
-        for i in range(open_p, len(sh)):
-            if sh[i] == "(":
-                depth += 1
-            elif sh[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close_p = i
-                    break
+        open_p = m.end() - 1
+        close_p = _find_partner(sh, open_p)
         if close_p < 0:
             raise UnsupportedChSql("unbalanced parens in * REPLACE")
         items = []
@@ -2389,8 +2410,6 @@ def _tuple_in_literals(sql: str) -> str:
     scalar parenthesized left expressions stay untouched (Spark
     handles both).
     """
-    import re
-
     while True:
         sh = _mask_literals(sql)
         done = True
@@ -2401,15 +2420,7 @@ def _tuple_in_literals(sql: str) -> str:
             if j < 0 or sh[j] != ")":
                 continue
             # left tuple: balanced backward scan to its '('
-            depth, lo = 0, -1
-            for i in range(j, -1, -1):
-                if sh[i] == ")":
-                    depth += 1
-                elif sh[i] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        lo = i
-                        break
+            lo = _find_partner(sh, j)
             if lo < 0:
                 continue
             # a preceding identifier makes this a FUNCTION CALL's
@@ -2442,15 +2453,7 @@ def _tuple_in_literals(sql: str) -> str:
             inner_start = m.end()
             if re.match(r"(?is)\s*SELECT\b", sh[inner_start:]):
                 continue
-            depth, hi = 1, -1
-            for i in range(inner_start, len(sh)):
-                if sh[i] == "(":
-                    depth += 1
-                elif sh[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        hi = i
-                        break
+            hi = _find_partner(sh, inner_start - 1)
             if hi < 0:
                 continue
             parts = _split_args(sql[inner_start: hi])
@@ -2493,8 +2496,6 @@ def _array_join_clause(sql: str) -> str:
     form; the multi-array zip form raises rather than guessing).
     Without ``AS``, a bare column ref ``ARRAY JOIN arr`` re-uses the
     column's own name, matching CH's shadowing behavior."""
-    import re
-
     while True:
         m = _scan_toplevel(sql, r"\b(LEFT\s+)?ARRAY\s+JOIN\b")
         if m is None:
@@ -2581,10 +2582,9 @@ def _array_join_clause(sql: str) -> str:
             lo, hi = (0, len(sql)) if bs < 0 else \
                 (bs, _block_end(sh, depths, bs))
             for col, alias in items:
-                pat = re.compile(rf"(?<![\w.`]){re.escape(alias)}\b")
-                out, last = [], 0
                 depths = _depth_map(sh)
-                for am2 in pat.finditer(sh, lo, hi):
+
+                def to_field(am2: "re.Match") -> str:
                     # only references belonging to THIS select block:
                     # a NESTED subquery may define the same identifier
                     # (its own ARRAY JOIN alias, a column alias) and
@@ -2594,15 +2594,14 @@ def _array_join_clause(sql: str) -> str:
                     # rewrite clobbered the inner AS u into invalid
                     # `AS __zr.x`
                     if bs >= 0 and _enclosing_select(
-                            sh, depths, am2.start()) != bs:
-                        continue
-                    out.append(sql[last : am2.start()])
-                    out.append(f"{zrow}.{col}")
-                    last = am2.end()
-                out.append(sql[last:])
-                before = len(sql)
-                sql = "".join(out)
-                hi += len(sql) - before  # block end shifts with each pass
+                            sh, depths, lo + am2.start()) != bs:
+                        return am2.group(0)
+                    return f"{zrow}.{col}"
+
+                block = _sub_masked(rf"(?<![\w.`]){re.escape(alias)}\b",
+                                    to_field, sql[lo:hi])
+                # the block end shifts with each pass
+                sql, hi = sql[:lo] + block + sql[hi:], lo + len(block)
                 sh = _mask_literals(sql)
             continue
         am = re.match(r"(?is)^(.*?)\s+AS\s+([A-Za-z_]\w*|`[^`]*`)\s*$", clause)
@@ -2658,8 +2657,6 @@ def _with_totals(sql: str) -> str:
     the clause BEFORE translation and applying
     :func:`_with_fill_apply` to the result DataFrame; richer forms
     live in ``functions/fill.fill_gaps`` (the ``an08`` operator)."""
-    import re
-
     if re.search(r"(?i)\bWITH\s+FILL\b", _mask_literals(sql)):
         raise UnsupportedChSql(
             "ORDER BY … WITH FILL: gap materialization needs a "
@@ -2805,8 +2802,6 @@ def _select_top(sql: str) -> str:
     it) → plain SELECT with ``LIMIT n [WITH TIES]`` appended to the
     block.  CH rejects TOP combined with LIMIT, so a pre-existing
     LIMIT passes through and fails loudly in Spark."""
-    import re
-
     m = _scan_toplevel(sql, r"\bSELECT\s+TOP\s+(\d+)"
                             r"(\s+WITH\s+TIES)?\b")
     if m is None:
@@ -2854,8 +2849,6 @@ def _cast_colons(sql: str) -> str:
     immediately preceding primary: a quoted literal, an identifier /
     qualified name / number, or a paren or bracket group.  Chained
     casts resolve over the loop (the rewritten CAST ends in ``)``)."""
-    import re
-
     while True:
         sh = _mask_idents(_mask_literals(sql))
         m = re.search(r"::\s*([A-Za-z_]\w*)", sh)
@@ -2867,17 +2860,7 @@ def _cast_colons(sql: str) -> str:
         rest = sh[tend:]
         pm = re.match(r"\s*\(", rest)
         if pm:
-            j = tend + pm.end() - 1
-            depth = 0
-            while j < len(sh):
-                if sh[j] == "(":
-                    depth += 1
-                elif sh[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            tend = j + 1
+            tend = _find_close(sh, tend + pm.end() - 1) + 1
         type_txt = sql[m.start() + 2: tend].strip()
         # operand: scan back over whitespace, then classify
         i = m.start() - 1
@@ -2886,16 +2869,7 @@ def _cast_colons(sql: str) -> str:
         if i < 0:
             raise UnsupportedChSql("'::' cast with no operand")
         if sql[i] in ")]":
-            close, opener = sql[i], "(" if sql[i] == ")" else "["
-            depth, k = 0, i
-            while k >= 0:
-                if sh[k] == close:
-                    depth += 1
-                elif sh[k] == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = _find_partner(sh, i)
             # include a callee identifier / array base before the
             # group (`CAST(…)::String`, `arr[1]::Int64`); dotted
             # qualified callees (`db.fn(…)::T`) scan across the dot —
@@ -2905,16 +2879,10 @@ def _cast_colons(sql: str) -> str:
             start = k
         elif sh[i] == "'":
             # masked literal: find its opening quote on the shadow
-            k = i - 1
-            while k >= 0 and sh[k] != "'":
-                k -= 1
-            start = k
+            start = sh.rfind("'", 0, i)
         elif sh[i] == "`":
             # backtick-quoted identifier (content may hold spaces)
-            k = i - 1
-            while k >= 0 and sh[k] != "`":
-                k -= 1
-            k -= 1
+            k = sh.rfind("`", 0, i) - 1
             while k >= 0 and (sql[k].isalnum() or sql[k] in "_.$"):
                 k -= 1
             start = k + 1
@@ -2932,15 +2900,7 @@ def _cast_colons(sql: str) -> str:
                 # `(expr).N::Type` — the operand is the whole tuple
                 # element access, not the bare `.N` (advice r13):
                 # extend back over the paren group + any callee name
-                depth, k = 0, start - 1
-                while k >= 0:
-                    if sh[k] == ")":
-                        depth += 1
-                    elif sh[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k -= 1
+                k = _find_partner(sh, start - 1)
                 if k < 0:
                     raise UnsupportedChSql(
                         "'::' cast on an unbalanced (expr).N operand")
@@ -2957,22 +2917,12 @@ def _tuple_index_access(sql: str) -> str:
     form rewrites — ``t.1`` on a bare column name is left for Spark
     to reject loudly rather than guessing between a tuple column and
     a numeric-named table alias."""
-    import re
-
     while True:
         sh = _mask_idents(_mask_literals(sql))
         m = re.search(r"\)\s*\.(\d+)", sh)
         if m is None:
             return sql
-        depth, k = 0, m.start()
-        while k >= 0:
-            if sh[k] == ")":
-                depth += 1
-            elif sh[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
+        k = _find_partner(sh, m.start())
         if k < 0:
             return sql  # unbalanced; let the main pass raise
         # a callee identifier before the parens belongs to the
@@ -3007,8 +2957,6 @@ def _ternary_operator(sql: str) -> str:
     ``?``.  Runs AFTER the ``::`` cast rewrite so cast colons are
     gone.  Bare (AS-less) aliases directly after a ternary stay out
     of the subset — the swallowed text fails loudly in Spark."""
-    import re
-
     while True:
         sh = _mask_idents(_mask_literals(sql))
         qpos = sh.find("?")
@@ -3082,50 +3030,24 @@ def _ternary_operator(sql: str) -> str:
 def _scan_toplevel(sql: str, pattern: str) -> "re.Match | None":
     """First regex match at paren depth 0, outside string literals
     AND outside backtick-quoted identifiers (a column named
-    ``` `limit 5` ``` must not look like a clause keyword — r12o)."""
-    import re
-
-    depth, i, n = 0, 0, len(sql)
+    ``` `limit 5` ``` must not look like a clause keyword — r12o).
+    None past a stray ``)`` or an unbalanced span."""
     rx = re.compile(pattern, re.IGNORECASE)
+    i, n = 0, len(sql)
     while i < n:
         c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif c == "`":
-            i += 1
-            while i < n and sql[i] != "`":
-                i += 1
-        elif c == "(":
-            depth += 1
+        if c in "('`":
+            i = _find_partner(sql, i)
+            if i < 0:
+                return None
         elif c == ")":
-            depth -= 1
-        elif depth == 0:
+            return None
+        else:
             m = rx.match(sql, i)
             if m:
                 return m
         i += 1
     return None
-
-
-def _mask_idents(sh: str) -> str:
-    """Blank backtick-quoted identifier CONTENT on an
-    already-literal-masked shadow, for scanners whose trigger chars
-    (``?``, ``:``, ``.N``) may legally appear inside quoted names."""
-    out, i, n = [], 0, len(sh)
-    while i < n:
-        if sh[i] == "`":
-            j = i + 1
-            while j < n and sh[j] != "`":
-                j += 1
-            out.append("`" + " " * max(0, j - i - 1)
-                       + ("`" if j < n else ""))
-            i = j + 1
-        else:
-            out.append(sh[i])
-            i += 1
-    return "".join(out)
 
 
 def _recurse_select_blocks(sql: str, fn, _apply: bool = True) -> str:
@@ -3140,33 +3062,27 @@ def _recurse_select_blocks(sql: str, fn, _apply: bool = True) -> str:
     subqueries — ``fn`` just isn't applied to their own level (r12b:
     a `LIMIT BY` inside `CASE WHEN (SELECT …)` was invisible to every
     per-block bridge because the old guard refused to descend)."""
-    import re
-
     sh = _mask_literals(sql)
     out: list[str] = []
-    i = 0
-    while i < len(sql):
+    last = 0
+    m = _OPEN_RX.search(sh)
+    while m is not None:
+        i = m.start()
+        j = _find_partner(sh, i)
+        if j < 0:
+            break
         if sh[i] == "(":
-            depth, j = 0, i
-            for j in range(i, len(sh)):
-                if sh[j] == "(":
-                    depth += 1
-                elif sh[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            inner = sql[i + 1: j]
             # paren-wrapped blocks (`((SELECT …))`) recurse too —
             # review r10g: the guard previously stopped at the outer
             # parens and left the inner SELECT untouched
             is_block = re.match(r"(?is)\s*(SELECT\b|WITH\b|\()",
-                                _mask_literals(inner)) is not None
-            inner = _recurse_select_blocks(inner, fn, _apply=is_block)
-            out.append("(" + inner + ")")
-            i = j + 1
-        else:
-            out.append(sql[i])
-            i += 1
+                                sh[i + 1: j]) is not None
+            out += [sql[last: i], "(",
+                    _recurse_select_blocks(sql[i + 1: j], fn,
+                                           _apply=is_block), ")"]
+            last = j + 1
+        m = _OPEN_RX.search(sh, j + 1)
+    out.append(sql[last:])
     joined = "".join(out)
     return fn(joined) if _apply else joined
 
@@ -3497,10 +3413,11 @@ class _TopkFallback(_PreaggDecline):
 
 def _depth_map(sh: str) -> list[int]:
     """Paren depth of each character of a literal-masked string.  An
-    opening ``(`` carries its OUTER depth; everything up to and
-    including the matching ``)`` carries the inner depth."""
+    opening ``(`` and its matching ``)`` carry their OUTER depth,
+    everything between them the inner depth.  Parens inside
+    backtick-quoted identifiers do not count."""
     d, out = 0, []
-    for c in sh:
+    for c in _mask_idents(sh):
         if c == "(":
             out.append(d)
             d += 1
@@ -3516,8 +3433,6 @@ def _enclosing_select(sh: str, depths: list[int], pos: int) -> int:
     """Start offset of the SELECT keyword of the query block containing
     ``pos`` (the innermost SELECT reachable without entering a nested
     paren scope), or -1."""
-    import re
-
     mind = depths[pos]
     i = pos
     while i >= 0:
@@ -3538,8 +3453,6 @@ def _block_end(sh: str, depths: list[int], start: int) -> int:
     """End offset (exclusive) of the query block whose SELECT starts at
     ``start``: the matching close paren, a same-depth set operator
     (UNION/EXCEPT/INTERSECT), or end of string."""
-    import re
-
     d0 = depths[start]
     setop = re.compile(r"(?i)\b(UNION|EXCEPT|INTERSECT)\b")
     i, n = start, len(sh)
@@ -3561,8 +3474,6 @@ def _block_clauses(
 ) -> dict[str, tuple[int, int]]:
     """Map of clause keyword → (kw_start, kw_end) at the block's own
     depth, for the first occurrence of each clause in [start, end)."""
-    import re
-
     d0 = depths[start]
     rx = re.compile(
         r"(?i)\b(FROM|WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|WINDOW)\b"
@@ -3579,8 +3490,6 @@ def _block_clauses(
 def _split_item_alias(item: str) -> tuple[str, str | None]:
     """Split a SELECT item into (expression, alias) on a trailing
     depth-0 ``AS alias`` (or None)."""
-    import re
-
     sh = _mask_literals(item)
     depths = _depth_map(sh)
     for m in list(re.finditer(r"(?i)\bAS\s+(`[^`]*`|[A-Za-z_]\w*)\s*$", sh))[::-1]:
@@ -3645,9 +3554,7 @@ def _scan_agg_calls(text: str) -> list[tuple[str, int, int, str | None, str]]:
     subexpressions are skipped (their aggregates belong to the inner
     block); unknown function names are scanned INTO (so aggregates
     nested in scalar wrappers are found), known aggregates are not."""
-    import re
-
-    sh = _mask_literals(text)
+    sh = _mask_idents(_mask_literals(text))
     ident = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
     res: list[tuple[str, int, int, str | None, str]] = []
     i, n = 0, len(text)
@@ -3714,49 +3621,33 @@ def _norm_expr(text: str) -> str:
     """Whitespace-collapsed, case-folded expression key — but string
     LITERALS keep their exact content (case and spacing), so two
     aggregates differing only inside a literal never dedupe to one
-    partial (review r8)."""
-    sh = _mask_literals(text)
-    out, i, n = [], 0, len(text)
-    while i < n:
-        if sh[i] == "'":  # literal (incl. quotes): copy verbatim
-            j = i + 1
-            while j < n and sh[j] != "'":
-                j += 1
-            out.append(text[i : min(j + 1, n)])
-            i = j + 1
-        elif text[i].isspace():
-            while i < n and sh[i] != "'" and text[i].isspace():
-                i += 1
-            out.append(" ")
-        else:
-            out.append(text[i].lower())
-            i += 1
+    partial (review r8).  Backtick-quoted identifiers keep their
+    exact content too."""
+    out, last = [], 0
+    m = _QUOTE_RX.search(text)
+    while m is not None:
+        j = _find_partner(text, m.start())
+        end = len(text) if j < 0 else j + 1
+        out += [re.sub(r"\s+", " ", text[last: m.start()].lower()),
+                text[m.start(): end]]
+        last = end
+        m = _QUOTE_RX.search(text, end)
+    out.append(re.sub(r"\s+", " ", text[last:].lower()))
     return "".join(out).strip()
 
 
 def _in_literal_flags(text: str) -> list[bool]:
-    """Per-character flag: is this position inside (or a quote of) a
-    single-quoted literal's interior/closing?  The OPENING quote and
-    everything before it are False, so a match may START at any
-    non-literal position."""
-    flags: list[bool] = []
-    in_lit, i, n = False, 0, len(text)
-    while i < n:
-        c = text[i]
-        if not in_lit:
-            flags.append(False)
-            if c == "'":
-                in_lit = True
-            i += 1
-        else:
-            if c == "'" and i + 1 < n and text[i + 1] == "'":
-                flags.extend((True, True))
-                i += 2
-                continue
-            flags.append(True)
-            if c == "'":
-                in_lit = False
-            i += 1
+    """Per-character flag: is this position inside (or the closing
+    quote of) a quoted span — a string literal or a backtick-quoted
+    identifier?  The OPENING quote and everything before it are
+    False, so a match may START at any position outside a span."""
+    flags = [False] * len(text)
+    m = _QUOTE_RX.search(text)
+    while m is not None:
+        j = _find_partner(text, m.start())
+        end = len(text) if j < 0 else j + 1
+        flags[m.start() + 1: end] = [True] * (end - m.start() - 1)
+        m = _QUOTE_RX.search(text, end)
     return flags
 
 
@@ -3767,8 +3658,6 @@ def _key_sub(text: str, keys: list[tuple[str, str]]) -> str:
     inside a string literal, but an expression key may itself CONTAIN
     literals (``concat(g, '-')``) — hence exact-text matching on the
     original, literal-anchored by position (review r8, second pass)."""
-    import re
-
     for raw, alias in sorted(keys, key=lambda kv: -len(kv[0])):
         if re.match(r"^[A-Za-z_][\w.]*$", raw):
             rx = re.compile(rf"(?<![\w.`$]){re.escape(raw)}(?![\w.`(])")
@@ -3797,8 +3686,6 @@ def _rewrite_topk_block(sql: str, sh: str, depths: list[int],
     """Rewrite the query block sql[bs:be] into the pre-aggregated
     two-level form; raises :class:`_TopkFallback` when the block shape
     is unsupported."""
-    import re
-
     d0 = depths[bs]
     cl = _block_clauses(sh, depths, bs, be)
     if "WINDOW" in cl or "FROM" not in cl:
@@ -4007,7 +3894,6 @@ def _topk_fallback_notice(
     construct.  The ungrouped form is the measured 100×-scale hazard
     (SCALE.md round 8: 332 s vs 3.5 s at 10M rows), so it gets the
     louder message."""
-    import re
     import warnings
 
     d0 = depths[bs] if 0 <= bs < len(depths) else 0
@@ -4057,11 +3943,9 @@ def _order_by_nulls_last(sql: str) -> str:
     docstring): CH presents values → NaN → NULL in BOTH directions;
     Spark treats NaN as the greatest value, so this pass aligns ASC
     exactly but a DESC float key presents NaN FIRST here."""
-    import re
-
     out: list[str] = []
     pos = 0
-    sh = _mask_literals(sql)
+    sh = _mask_idents(_mask_literals(sql))
     depths = _depth_map(sh)
     end_rx = re.compile(_ORDER_END_RX)
     for m in re.finditer(r"(?i)\bORDER\s+BY\b", sh):
@@ -4073,10 +3957,6 @@ def _order_by_nulls_last(sql: str) -> str:
         j = m.end()
         end = len(sql)
         while j < len(sh):
-            if sh[j] == "`":  # backtick identifiers are not masked —
-                nx = sh.find("`", j + 1)  # a quoted name may contain
-                j = (nx if nx >= 0 else len(sh) - 1) + 1  # keywords
-                continue
             if sh[j] == ")" and depths[j] < d0:
                 end = j
                 break
@@ -4128,15 +4008,7 @@ def _quantified_lhs_span(sh: str, end: int) -> tuple[int, int] | None:
     if i < 0:
         return None
     if sh[i] == ")":
-        depth, j = 0, i
-        while j >= 0:
-            if sh[j] == ")":
-                depth += 1
-            elif sh[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
+        j = _find_partner(sh, i)
         if j < 0:
             return None
         k = j - 1
@@ -4180,8 +4052,6 @@ def _quantified_subqueries(sql: str) -> str:
     that is not a simple column/literal/call/paren expression raises
     by name (parenthesize it) rather than risking a precedence
     misparse."""
-    import re
-
     for _ in range(64):
         sh = _mask_literals(sql)
         matches = list(re.finditer(
@@ -4238,22 +4108,12 @@ def _quantified_subqueries(sql: str) -> str:
         # unpinned here, so raise by name (r13, VERDICT r12 item 6).
         # A function call (`greatest(a, b)`) starts with its callee
         # identifier, not "(", and stays in the subset.
-        if sh[ls] == "(":
-            depth_t, tup = 0, False
-            for ch in sh[ls:le]:
-                if ch == "(":
-                    depth_t += 1
-                elif ch == ")":
-                    depth_t -= 1
-                elif ch == "," and depth_t == 1:
-                    tup = True
-                    break
-            if tup:
-                raise UnsupportedChSql(
-                    f"tuple left operand in {op} {quant} (SELECT …) — "
-                    "multi-column quantified comparisons are not "
-                    "bridged; for membership use the tuple-IN form "
-                    "((a, b) IN (SELECT x, y …)), which is supported")
+        if sh[ls] == "(" and len(_split_args(sh[ls + 1: le - 1])) > 1:
+            raise UnsupportedChSql(
+                f"tuple left operand in {op} {quant} (SELECT …) — "
+                "multi-column quantified comparisons are not "
+                "bridged; for membership use the tuple-IN form "
+                "((a, b) IN (SELECT x, y …)), which is supported")
         L = f"({sql[ls:le]})"
         if re.search(r"(?i)\b(rand\w*|generateUUIDv4)\s*\(",
                      sql[ls:le]):
@@ -4321,8 +4181,6 @@ def _preagg_driver(sql: str, call_rx: str, rewrite_block,
     whose shape is unsupported (the rewriter raised
     :class:`_PreaggDecline`) keep the expression expansion — loudly,
     via ``notice(sh, depths, span_start, span_end, reason)``."""
-    import re
-
     fallbacks: list[list[int]] = []  # mutable [start, end) spans
     for _ in range(64):  # backstop; each round consumes ≥1 call site
         sh = _mask_literals(sql)
@@ -4397,8 +4255,6 @@ def _rewrite_ils_block(sql: str, sh: str, depths: list[int],
     ``intervalLengthSum(s, e)`` call becomes ``sum(__ilsN)`` over a
     per-row window contribution computed in a wrapped source subquery;
     raises :class:`_IlsFallback` when the block shape is unsupported."""
-    import re
-
     d0 = depths[bs]
     cl = _block_clauses(sh, depths, bs, be)
     if "WINDOW" in cl or "FROM" not in cl:
@@ -4642,8 +4498,6 @@ def _rewrite_maxint_block(sql: str, sh: str, depths: list[int],
     NO sibling aggregates — every select item is a group key or one
     of the calls; declined shapes keep the fold (values identical,
     state O(events per group))."""
-    import re
-
     d0 = depths[bs]
     cl = _block_clauses(sh, depths, bs, be)
     if "WINDOW" in cl or "FROM" not in cl:
@@ -4954,8 +4808,6 @@ def _scalar_with(sql: str) -> str:
     output column keeps the WITH-item name, matching CH.  One
     statement level; :func:`_recurse_select_blocks` drives subquery
     bodies (r10)."""
-    import re
-
     sh = _mask_literals(sql)
     m = re.match(r"(?is)\s*WITH\b", sh)
     if not m:
@@ -5083,8 +4935,6 @@ def _apply_table_map(sql: str, table_map: Mapping[str, str]) -> str:
     bare-name pass excludes dot-preceded occurrences, so an
     already-substituted qualified destination (``cat.trades``) is
     never re-rewritten into ``cat.cat.trades`` (review r8)."""
-    import re
-
     for src, dst in table_map.items():
         if "." in src:
             db, tbl = src.split(".", 1)
@@ -5110,31 +4960,15 @@ def _apply_table_map(sql: str, table_map: Mapping[str, str]) -> str:
 
 def _brackets_to_parens(sql: str) -> str:
     """CH ``IN [a, b]`` / ``NOT IN [a, b]`` → parenthesized lists."""
-    import re
-
-    out = sql
     while True:
-        m = re.search(r"(?i)\bIN\s*\[", _mask_literals(out))
+        m = re.search(r"(?i)\bIN\s*\[", _mask_idents(_mask_literals(sql)))
         if not m:
-            return out
-        open_idx = m.end() - 1
-        depth, i, n = 0, open_idx, len(out)
-        while i < n:
-            c = out[i]
-            if c == "'":
-                i += 1
-                while i < n and out[i] != "'":
-                    i += 1
-            elif c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if depth != 0:
+            return sql
+        o = m.end() - 1
+        close = _find_partner(sql, o)
+        if close < 0:
             raise UnsupportedChSql("unbalanced brackets in IN [...]")
-        out = out[:open_idx] + "(" + out[open_idx + 1 : i] + ")" + out[i + 1 :]
+        sql = sql[:o] + "(" + sql[o + 1: close] + ")" + sql[close + 1:]
 
 
 #: words whose trailing position marks an EXPRESSION context — a `[`
@@ -5172,26 +5006,14 @@ def _bracket_expressions(sql: str) -> str:
     directly on ``CASE … END`` raises (wrap the CASE in parentheses) —
     treating ``END`` as a base would splice the statement corruptly.
     One bracket rewrites per pass, innermost-last; fixpoint-bounded."""
-    import re
-
     for _ in range(256):  # each pass consumes exactly one bracket
-        sh = _mask_literals(sql)
+        sh = _mask_idents(_mask_literals(sql))
         b = sh.find("[")
         if b < 0:
             return sql
-        # matching close at bracket depth 0 relative to this open
-        depth, i, n = 0, b, len(sh)
-        while i < n:
-            if sh[i] == "[":
-                depth += 1
-            elif sh[i] == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if depth != 0:
+        close = _find_partner(sh, b)
+        if close < 0:
             raise UnsupportedChSql("unbalanced [ ] in expression")
-        close = i
         p = b - 1
         while p >= 0 and sh[p] in " \t\n":
             p -= 1
@@ -5224,17 +5046,8 @@ def _bracket_expressions(sql: str) -> str:
         elif p >= 0 and sh[p] in ")]":
             # walk back over the balanced ()/[] group, then a possible
             # function-name identifier chain in front of it
-            depth2, s = 0, p
-            openc = {"]": "[", ")": "("}[sh[p]]
-            while s >= 0:
-                if sh[s] == sh[p]:
-                    depth2 += 1
-                elif sh[s] == openc:
-                    depth2 -= 1
-                    if depth2 == 0:
-                        break
-                s -= 1
-            if depth2 != 0:
+            s = _find_partner(sh, p)
+            if s < 0:
                 raise UnsupportedChSql("unbalanced parens before [ ]")
             s -= 1
             while s >= 0 and (sh[s].isalnum() or sh[s] in "_.`$"):
@@ -5253,32 +5066,28 @@ def _bracket_expressions(sql: str) -> str:
     raise UnsupportedChSql("too many bracket expressions (>256)")
 
 
+_DQUOTE_RX = re.compile("['`\"]")
+
+
 def _dquotes_to_backticks(sql: str) -> str:
-    """CH double-quoted identifiers → Spark backticks (single-quoted
-    string literals pass through untouched)."""
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-        elif c == '"':
+    """CH double-quoted identifiers → Spark backticks (string literals
+    and backtick-quoted identifiers pass through untouched)."""
+    out, last = [], 0
+    m = _DQUOTE_RX.search(sql)
+    while m is not None:
+        i = m.start()
+        if sql[i] == '"':
             j = sql.find('"', i + 1)
             if j < 0:
                 raise UnsupportedChSql("unterminated double-quoted identifier")
-            out.append("`" + sql[i + 1 : j] + "`")
-            i = j + 1
+            out += [sql[last:i], "`" + sql[i + 1: j] + "`"]
+            last = j + 1
         else:
-            out.append(c)
-            i += 1
+            j = _find_partner(sql, i)
+            if j < 0:
+                break
+        m = _DQUOTE_RX.search(sql, j + 1)
+    out.append(sql[last:])
     return "".join(out)
 
 
@@ -6000,8 +5809,6 @@ def _format_datetime_expr(args: list[str]) -> str:
     raise (session-timezone discipline) rather than mistranslate.
     Literal text between tokens is single-quoted for Spark's pattern
     syntax."""
-    import re
-
     if len(args) == 3:
         raise UnsupportedChSql(
             "formatDateTime timezone argument not supported — the session "
@@ -6324,12 +6131,9 @@ def _split_top_as(inner: str) -> tuple[str, str] | None:
     """Split ``expr AS type`` on the RIGHTMOST top-level ``AS``
     (paren-depth 0, outside string literals); None when absent."""
     masked = _mask_literals(inner)
-    depth, best = 0, -1
-    for m in re.finditer(r"(?i)\bAS\b", masked):
-        depth = masked.count("(", 0, m.start()) - masked.count(
-            ")", 0, m.start())
-        if depth == 0:
-            best = m.start()
+    depths = _depth_map(masked)
+    best = max((m.start() for m in re.finditer(r"(?i)\bAS\b", masked)
+                if depths[m.start()] == 0), default=-1)
     if best < 0:
         return None
     return inner[:best].strip(), inner[best + 2:].strip()
@@ -6391,24 +6195,16 @@ def _age_expr(args: list[str]) -> str:
 
 
 def _rewrite_calls(sql: str) -> str:
-    import re
-
     out = []
     i, n = 0, len(sql)
     ident = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
     while i < n:
         c = sql[i]
-        if c == "'":  # copy string literals verbatim
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
+        if c in "'`":  # copy quoted spans verbatim
+            j = _find_partner(sql, i)
+            j = n if j < 0 else j + 1
+            out.append(sql[i:j])
+            i = j
             continue
         m = ident.match(sql, i)
         if not m:
@@ -6519,13 +6315,7 @@ def _rewrite_calls(sql: str) -> str:
                 # documents the alias as equivalent to
                 # position(haystack, needle), i.e. byte-based — swap
                 # to haystack-first and fall through.
-                masked = _mask_literals(parts[0])
-                hit = next(
-                    (m for m in re.finditer(r"(?i)\bIN\b", masked)
-                     if masked.count("(", 0, m.start())
-                     == masked.count(")", 0, m.start())),
-                    None,
-                )
+                hit = _scan_toplevel(parts[0], r"\bIN\b")
                 if hit is not None:
                     parts = [parts[0][hit.end():].strip(),
                              parts[0][:hit.start()].strip()]
@@ -8270,8 +8060,6 @@ def substitute(sql: str, params: Mapping[str, object]) -> str:
     """Fill Grafana-style ``$var`` / ``${var}`` template variables.
     Strings are quoted via the :mod:`.sql` literal escaper; ints/floats
     render bare; sequences become quoted IN-lists."""
-    import re
-
     def render(v: object) -> str:
         if isinstance(v, (int, float)):
             return str(v)
@@ -8302,8 +8090,6 @@ def _statement_ctes(
     matches the entry shape and yields ``({}, 0)``.  Entries may
     reference earlier entries: entry k's text is ``WITH e1, …, e(k-1)
     SELECT * FROM (body_k)`` so the chain resolves on re-entry."""
-    import re
-
     sh = _mask_literals(sql)
     m = re.match(r"\s*WITH\b", sh, re.IGNORECASE)
     if not m:
@@ -8319,10 +8105,8 @@ def _statement_ctes(
         if em:
             # parenthesized CTE body: find its matching close paren
             open_at = i + em.end() - 1
-            j = open_at + 1
-            while j < len(sh) and depths[j] > depths[open_at]:
-                j += 1
-            if j >= len(sh):
+            j = _find_partner(sh, open_at)
+            if j < 0:
                 return {}, 0, {}  # unbalanced; let the main pass raise
             name = em.group(1)
             body = sql[open_at + 1: j]
@@ -8389,8 +8173,6 @@ def _asof_right_sans_distinct(body: str) -> str | None:
     (function calls, subqueries, tuple IN) declines, as does any
     qualified or aliased select item; the dedup then runs as written.
     """
-    import re
-
     m = re.match(
         r"(?is)^\s*SELECT\s+(?P<cols>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s+"
         r"FROM\s+(?P<tbl>[A-Za-z_]\w*)\s*"
@@ -8425,20 +8207,14 @@ def _asof_block_span(sh: str, pos: int) -> tuple[int, int]:
     second ASOF leg sharing a CTE side keeps its own qualified ON
     terms for the next bridge pass (r13 fuzz, asof_shared_cte
     kind)."""
-    import re
-
-    a, b = 0, len(sh)
-    stack: list[int] = []
-    for i, c in enumerate(sh):
-        if c == "(":
-            stack.append(i)
-        elif c == ")" and stack:
-            o = stack.pop()
-            if o < pos <= i:
-                a, b = o + 1, i
-                break
     depths = _depth_map(sh)
     d0 = depths[pos]
+    a, b = 0, len(sh)
+    if d0 > 0:  # the enclosing group: the nearest opener to the left
+        o = next(o for o in range(pos - 1, -1, -1) if depths[o] < d0)
+        close = _find_partner(sh, o)
+        if close >= 0:
+            a, b = o + 1, close
     left, right = a, b
     for m in re.finditer(
             r"(?i)\b(?:UNION|INTERSECT)\b(?:\s+(?:ALL|DISTINCT))?"
@@ -8635,7 +8411,6 @@ def _bridge_asof_chain_multi(
     forms, CTE-named sides, mixed comparators, per-link key changes,
     ON terms referencing an earlier link's right side, payload
     collisions)."""
-    import re
     import uuid
 
     from pyspark.sql import functions as F
@@ -8934,8 +8709,6 @@ def _bridge_asof_join(
     timestamp there, not the left one) resolves to the operator's
     matched-timestamp output.  Plan shape is the operator's: union +
     one keyed window, single shuffle, no nested-loop join."""
-    import re
-
     from ..operators.asof import asof_join
 
     sh = _mask_literals(sql)
@@ -9671,8 +9444,6 @@ def _star_apply_columns(
     ``g(f(col))``); COLUMNS matches by re2 SEARCH (not fullmatch)
     against the source column names.
     """
-    import re
-
     fn_rx = re.compile(r"^[A-Za-z_]\w*$")
 
     def _from_columns(sh: str, depths: list[int], pos: int) -> list[str] | None:
@@ -9860,8 +9631,6 @@ def run_ch_sql(
         # the final statement (literals masked so string contents
         # cannot fake a call site); over-matching a non-shim name is
         # harmless — the needed-set is intersected with the shim dict
-        import re
-
         register_ch_functions(spark, needed={
             m.group(1)
             for m in re.finditer(r"\b([A-Za-z_]\w*)\s*\(",
@@ -9907,46 +9676,28 @@ def run_ch_sql(
 # GROUP BY / ORDER BY / HAVING but not WHERE, so the translator inlines
 # the defining expression at the reference site.
 
-import re as _re
-
-_ALIAS_RE = _re.compile(r"(?is)^(.*\S)\s+AS\s+(`[^`]*`|[A-Za-z_]\w*)\s*$")
+_ALIAS_RE = re.compile(r"(?is)^(.*\S)\s+AS\s+(`[^`]*`|[A-Za-z_]\w*)\s*$")
 _STOP_AFTER_WHERE = {"group", "having", "order", "limit", "union", "window"}
+_WORD_RX = re.compile(r"[()'`]|([^\W\d]\w*)")
 
 
 def _scan_words(s: str) -> list[tuple[str, int, int]]:
     """(lowercased word, start, end) for every bare word at paren depth
     0, outside quotes/backticks."""
     res: list[tuple[str, int, int]] = []
-    i, n, depth = 0, len(s), 0
-    while i < n:
-        c = s[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-        elif c == "`":
-            j = s.find("`", i + 1)
-            i = n if j < 0 else j + 1
-        elif c == "(":
-            depth += 1
-            i += 1
-        elif c == ")":
-            depth -= 1
-            i += 1
-        elif depth == 0 and (c.isalpha() or c == "_"):
-            j = i
-            while j < n and (s[j].isalnum() or s[j] == "_"):
-                j += 1
-            res.append((s[i:j].lower(), i, j))
-            i = j
+    m = _WORD_RX.search(s)
+    while m is not None:
+        if m.group(1):
+            res.append((m.group(1).lower(), m.start(), m.end()))
+            i = m.end()
+        elif m.group(0) == ")":
+            break
         else:
+            i = _find_partner(s, m.start())
+            if i < 0:
+                break
             i += 1
+        m = _WORD_RX.search(s, i)
     return res
 
 
@@ -9955,13 +9706,13 @@ def _replace_alias_refs(segment: str, alias: str, expr: str) -> str:
     in ``segment`` with the parenthesized expression."""
     rep = f"({expr.strip()})"
     if alias.startswith("`"):
-        segment = _sub_masked(_re.compile(_re.escape(alias)), rep, segment)
+        segment = _sub_masked(re.compile(re.escape(alias)), rep, segment)
         inner = alias[1:-1]
-        if not _re.fullmatch(r"[A-Za-z_]\w*", inner):
+        if not re.fullmatch(r"[A-Za-z_]\w*", inner):
             return segment  # not addressable unquoted
         alias = inner  # a quoted alias may still be referenced bare
-    pat = _re.compile(
-        rf"(?<![\w.`]){_re.escape(alias)}(?![\w.`(])"
+    pat = re.compile(
+        rf"(?<![\w.`]){re.escape(alias)}(?![\w.`(])"
     )
     return _sub_masked(pat, rep, segment)
 
@@ -9978,10 +9729,10 @@ def _inline_block(s: str) -> str:
     for w, a, _ in words:
         if w in ("union", "intersect", "except"):
             right = s[a:]
-            if w == "except" and not _re.match(
+            if w == "except" and not re.match(
                     rf"(?is)^except\s*(?:{_SETOP_EXCEPT_RX})", right):
                 continue
-            m = _re.match(
+            m = re.match(
                 r"(?is)^(?:union|intersect|except)"
                 r"(\s+all|\s+distinct)?", right)
             head = m.group(0)
@@ -10054,7 +9805,7 @@ def _replace_alias_refs_outside_subqueries(
             j = i + 1
             while j < n and sh[j] in " \t\n":
                 j += 1
-            if _re.match(r"(?i)(SELECT|WITH)\b", sh[j:]):
+            if re.match(r"(?i)(SELECT|WITH)\b", sh[j:]):
                 close = _find_close(sh, i)
                 if close > 0:
                     parts.append((False, seg[last:i]))
@@ -10069,9 +9820,9 @@ def _replace_alias_refs_outside_subqueries(
         for alias, expr in aliases:
             if is_sub:
                 bare = alias[1:-1] if alias.startswith("`") else alias
-                if _re.search(
-                        rf"(?is)\bAS\s+(?:`{_re.escape(bare)}`"
-                        rf"|{_re.escape(bare)}\b)",
+                if re.search(
+                        rf"(?is)\bAS\s+(?:`{re.escape(bare)}`"
+                        rf"|{re.escape(bare)}\b)",
                         _mask_literals(txt)):
                     continue  # span rebinds the name — its scope wins
             txt = _replace_alias_refs(txt, alias, expr)
@@ -10082,30 +9833,18 @@ def _replace_alias_refs_outside_subqueries(
 def _inline_where_aliases(s: str) -> str:
     """Recursively inline same-block SELECT aliases referenced from
     WHERE/HAVING — subqueries first, then this block."""
-    out, i, n = [], 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(s[i : j + 1])
-            i = j + 1
-        elif c == "`":
-            j = s.find("`", i + 1)
-            j = n - 1 if j < 0 else j
-            out.append(s[i : j + 1])
-            i = j + 1
-        elif c == "(":
-            close = _find_close(s, i)
-            out.append("(" + _inline_where_aliases(s[i + 1 : close]) + ")")
-            i = close + 1
+    out, last = [], 0
+    m = _OPEN_RX.search(s)
+    while m is not None:
+        i = m.start()
+        if s[i] == "(":
+            j = _find_close(s, i)
+            out += [s[last:i], "(", _inline_where_aliases(s[i + 1: j]), ")"]
+            last = j + 1
         else:
-            out.append(c)
-            i += 1
+            j = _find_partner(s, i)
+            if j < 0:
+                break
+        m = _OPEN_RX.search(s, j + 1)
+    out.append(s[last:])
     return _inline_block("".join(out))
