@@ -178,3 +178,118 @@ def test_run_with_restarts_transient_and_permanent():
     with pytest.raises(RuntimeError, match="transient"):
         ing.run_with_restarts(lambda: FakeQuery(True), max_restarts=2,
                               backoff_seconds=0.01)
+
+
+def _batch_rows(q) -> list[int]:
+    """``numInputRows`` per micro-batch, in batch order."""
+    by_batch = {p.batchId: int(p.numInputRows) for p in q.recentProgress}
+    return [by_batch[b] for b in sorted(by_batch)]
+
+
+def test_each_batch_reads_its_input_once_and_empty_batches_skip_the_sink(spark, tmp_path):
+    """The non-empty guard (O-14) and the sink share one evaluation of
+    the batch, so progress counts every input row once; the empty file's
+    batch never reaches the sink."""
+    rows = [dict(RAW_TRADES[0], trade_no=200 + i) for i in range(15)]
+    write_jsonl_fixture(str(tmp_path / "in" / "a.json"), rows[:10], mtime=1000)
+    write_jsonl_fixture(str(tmp_path / "in" / "b.json"), [], mtime=2000)
+    write_jsonl_fixture(str(tmp_path / "in" / "c.json"), rows[10:], mtime=3000)
+    stream = read_replay_stream(spark, str(tmp_path / "in"), schemas.RAW_TRADE,
+                                max_files_per_trigger=1)
+    calls = []
+
+    def sink(df, batch_id):
+        calls.append((batch_id, sorted(r.trade_no for r in df.collect())))
+
+    q = ing.start_pipeline(stream, ing.shape_trades, sink, checkpoint=str(tmp_path / "ck"))
+    q.awaitTermination(120)
+    assert _batch_rows(q) == [10, 0, 5]
+    assert calls == [(0, list(range(200, 210))), (2, list(range(210, 215)))]
+
+
+def test_stateful_fold_runs_once_per_batch_and_key(spark, tmp_path):
+    """An ``applyInPandasWithState`` fold upstream of the sink runs once
+    per (batch, key).  The count is a side effect outside Spark: each
+    call appends one line to a file."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    log = str(tmp_path / "fold_calls.log")
+
+    def fold(key, pdfs, state):
+        total = state.get[0] if state.exists else 0
+        for pdf in pdfs:
+            total += int(pdf["v"].sum())
+        state.update((total,))
+        with open(log, "a") as f:
+            f.write(f"{key[0]}\n")
+        yield pd.DataFrame({"k": [key[0]], "total": [total]})
+
+    write_jsonl_fixture(str(tmp_path / "in" / "a.json"),
+                        [{"k": k, "v": 1} for k in ("a", "b", "c", "a")], mtime=1000)
+    write_jsonl_fixture(str(tmp_path / "in" / "b.json"),
+                        [{"k": k, "v": 10} for k in ("a", "b", "d")], mtime=2000)
+    stream = read_replay_stream(spark, str(tmp_path / "in"), "k string, v long",
+                                max_files_per_trigger=1)
+    folded = stream.groupBy("k").applyInPandasWithState(
+        fold, outputStructType="k string, total long", stateStructType="total long",
+        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
+    out = []
+
+    def sink(df, batch_id):
+        out.extend((batch_id, r.k, r.total) for r in df.collect())
+
+    q = ing.start_pipeline(folded, lambda df: df, sink, checkpoint=str(tmp_path / "ck"))
+    q.awaitTermination(120)
+    with open(log) as f:
+        assert sorted(f.read().split()) == ["a", "a", "b", "b", "c", "d"]
+    assert sorted(out) == [(0, "a", 2), (0, "b", 1), (0, "c", 1),
+                           (1, "a", 12), (1, "b", 11), (1, "d", 10)]
+
+
+def test_candle_batch_without_boundary_tick_reaches_no_sink(spark, tmp_path, monkeypatch):
+    """A tick batch with no boundary tick builds no candle: the builder
+    job calls no sink for it and adds no file to the candles table."""
+    import os
+
+    from transaq_clickhouse_exporter_spark import jobs
+    from transaq_clickhouse_exporter_spark.ingest.candles import fold_ticks
+
+    cfg = jobs.EngineConfig(data_dir=str(tmp_path / "data"))
+    table = cfg.table_path("transaq_candles")
+    calls = []
+    storage_sink = jobs._storage_sink
+
+    def recording_sink(cfg, name):
+        write = storage_sink(cfg, name)
+
+        def sink(df, batch_id):
+            files = [f for _, _, fs in os.walk(table) for f in fs if f.endswith(".parquet")]
+            calls.append((batch_id, len(files)))
+            write(df, batch_id)
+
+        return sink
+
+    monkeypatch.setattr(jobs, "_storage_sink", recording_sink)
+
+    ticks = [("10:00:30", 0.0, 100.0, 5), ("10:00:45", 250.0, 101.0, 3),
+             ("10:01:00", 0.0, 102.0, 7)]
+    rows = [{"sec_id": 1, "sec_code": "SBER", "time": t, "open": o, "last": l,
+             "quantity": n, "seq": i} for i, (t, o, l, n) in enumerate(ticks)]
+    write_jsonl_fixture(str(tmp_path / "ticks" / "a.json"), rows[:2], mtime=1000)
+    write_jsonl_fixture(str(tmp_path / "ticks" / "b.json"), rows[2:], mtime=2000)
+    monkeypatch.setattr(jobs, "read_replay_stream",
+                        lambda spark, d, schema: read_replay_stream(
+                            spark, d, schema, max_files_per_trigger=1))
+    raw_fields = list(schemas.RAW_QUOTATION.fields)
+    q = jobs.candle_builder_job(spark, str(tmp_path / "ticks"), str(tmp_path / "ck"), cfg,
+                                "2024-12-20")
+    q.awaitTermination(120)
+    assert schemas.RAW_QUOTATION.fields == raw_fields  # a second job start must work too
+    assert _batch_rows(q) == [2, 1]
+    assert calls == [(1, 0)]  # batch 0 folded two ticks and emitted nothing
+    got = [r.asDict() for r in spark.read.parquet(table).collect()]
+    want, _ = fold_ticks(rows, "2024-12-20")
+    assert [(utc_str(r["date"]), r["open"], r["close"], r["high"], r["low"], r["volume"])
+            for r in got] == [(w["date"], w["open"], w["close"], w["high"], w["low"],
+                               w["volume"]) for w in want]

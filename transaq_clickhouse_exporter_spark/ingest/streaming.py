@@ -10,6 +10,15 @@ batched insert — same latency/throughput trade, but with checkpointed
 at-least-once delivery instead of fire-and-forget.  Combined with
 ReplacingMergeTree keys (or the dedup-on-read operator) retries are
 idempotent.
+
+Each micro-batch's plan runs once.  ``shape`` is applied to the
+streaming DataFrame when the query is built, so the shaped plan is
+analyzed once and Catalyst re-plans it per batch in the JVM.  Inside
+``foreachBatch`` the batch is persisted; the non-empty guard and the
+sink both read that one materialization, and it is unpersisted once
+the batch is done.  A stateful operator upstream (the candle builder's
+``applyInPandasWithState``) therefore folds each key once per batch,
+and the progress ``numInputRows`` counts each input row once.
 """
 
 from __future__ import annotations
@@ -97,16 +106,25 @@ def start_pipeline(
 ):
     """Wire ``readStream → shape → foreachBatch(sink)``.
 
+    ``shape`` maps the streaming DataFrame to its table rows; it is
+    applied once, here, so the shaped plan is built once per query.
     ``sink(df, batch_id)`` receives the shaped, version-stamped batch —
-    see :mod:`..sources.clickhouse` for the JDBC writer.  The trigger
-    interval is the reference's async-insert buffering knob (S4)."""
+    see :mod:`..sources.clickhouse` for the JDBC writer.  Each batch is
+    evaluated once: it is persisted, checked for rows, handed to the
+    sink, and unpersisted.  A batch with no rows never reaches the sink.
+    The trigger interval is the reference's async-insert buffering knob
+    (S4)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # non-empty guard, main.go:224-228 (O-14)
-            return
-        sink(stamp_ingest_seq(shape(batch_df), batch_id), batch_id)
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():  # non-empty guard, main.go:224-228 (O-14)
+                return
+            sink(stamp_ingest_seq(batch_df, batch_id), batch_id)
+        finally:
+            batch_df.unpersist()
 
-    w = stream.writeStream.foreachBatch(_process).option("checkpointLocation", checkpoint)
+    w = shape(stream).writeStream.foreachBatch(_process).option("checkpointLocation", checkpoint)
     if query_name:
         w = w.queryName(query_name)
     if trigger_seconds:

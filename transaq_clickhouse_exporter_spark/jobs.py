@@ -17,6 +17,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import schemas, storage
 from .ingest import streaming as ing
@@ -162,22 +163,9 @@ def enriched_trades_job(
     enriched = asof_join_stream_multi(
         tr, [(quotes, "time", "quote_time")],
         by=["sec_code", "board"], left_ts="time")
-    make_sink = sink_factory or _storage_sink
-    sink = make_sink(cfg, "transaq_trades_enriched")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # non-empty guard (O-14)
-            return
-        sink(ing.stamp_ingest_seq(batch_df, batch_id), batch_id)
-
-    w = (enriched.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", checkpoint)
-         .queryName("tce_trades_enriched"))
-    if cfg.trigger_seconds:
-        w = w.trigger(processingTime=f"{cfg.trigger_seconds} seconds")
-    else:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    sink = (sink_factory or _storage_sink)(cfg, "transaq_trades_enriched")
+    return ing.start_pipeline(enriched, lambda df: df, sink, checkpoint,
+                              cfg.trigger_seconds, "tce_trades_enriched")
 
 
 def candle_builder_job(
@@ -185,7 +173,8 @@ def candle_builder_job(
 ):
     """The stateful O-10 pipeline: quotation ticks → 1-minute candles →
     candles table (period=1, process.go:135)."""
-    stream = read_replay_stream(spark, ticks_dir, schemas.RAW_QUOTATION.add("seq", "long"))
+    tick_schema = T.StructType([*schemas.RAW_QUOTATION.fields, T.StructField("seq", T.LongType())])
+    stream = read_replay_stream(spark, ticks_dir, tick_schema)
     candles = quotation_candles_stream(stream, emit_date)
     shaped = lambda df: ing.shape_builder_candles(df.select(
         "date", "sec_code", "period", "open", "close", "high", "low", "volume"
