@@ -1,7 +1,7 @@
 """Round-15: uniform shared-key ASOF chains fold into ONE keyed
-window via the `_bridge_asof_chain_multi` fast path (asof_join_multi
-under the SQL bridge).  Any shape doubt falls back to the proven
-per-link passes — these tests pin BOTH routes and their agreement.
+window — the bridge's k decision takes every link into one
+asof_join_multi call.  Any shape doubt leaves k = 1, one link per
+bridge pass — these tests pin BOTH routes and their agreement.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import random
 import duckdb
 import pytest
 
-from transaq_clickhouse_exporter_spark.queries import ch_compat
+from transaq_clickhouse_exporter_spark.operators import asof
 from transaq_clickhouse_exporter_spark.queries.ch_compat import run_ch_sql
 
 CHAIN = (
@@ -48,10 +48,21 @@ def test_fast_path_agrees_with_per_link_path(spark, monkeypatch):
              f" ({rows('ix', 2)})) AS c"
              f" ON a.g = c.g AND a.v >= c.ix")
         fast = sorted(tuple(r) for r in run_ch_sql(spark, q).collect())
-        monkeypatch.setattr(ch_compat, "_bridge_asof_chain_multi",
-                            lambda *a, **k: None)
+        # a failing k-link build drops the bridge to k = 1: each link
+        # then takes its own pass and one-right asof_join_multi call
+        calls = []
+        real = asof.asof_join_multi
+
+        def one_right_only(left, rights, *a, **k):
+            calls.append(len(rights))
+            if len(rights) > 1:
+                raise ValueError("k-link build refused")
+            return real(left, rights, *a, **k)
+
+        monkeypatch.setattr(asof, "asof_join_multi", one_right_only)
         slow = sorted(tuple(r) for r in run_ch_sql(spark, q).collect())
         monkeypatch.undo()
+        assert calls == [2, 1, 1]
         want = sorted(tuple(r) for r in
                       duckdb.connect().execute(q).fetchall())
         assert fast == slow == want

@@ -293,3 +293,53 @@ def test_candle_batch_without_boundary_tick_reaches_no_sink(spark, tmp_path, mon
     assert [(utc_str(r["date"]), r["open"], r["close"], r["high"], r["low"], r["volume"])
             for r in got] == [(w["date"], w["open"], w["close"], w["high"], w["low"],
                                w["volume"]) for w in want]
+
+
+def _drain(spark, src, schema, sink, ckpt):
+    """Replay ``src`` one file per micro-batch through ``sink``."""
+    stream = (spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+              .json(src))
+    q = (stream.writeStream.foreachBatch(sink).option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    return q
+
+
+def test_states_sink_reads_each_batch_once(spark, tmp_path):
+    """The aggregating-states sink guards and writes one evaluation of
+    the batch: a 10-row file counts 10 input rows, and the empty file's
+    batch writes no state directory."""
+    import os
+
+    from transaq_clickhouse_exporter_spark.operators.aggregating import (
+        states_stream_sink)
+
+    src, state = str(tmp_path / "in"), str(tmp_path / "state")
+    write_jsonl_fixture(os.path.join(src, "a.json"),
+                        [{"key": f"K{i % 3}", "qty": i} for i in range(10)], mtime=1000)
+    write_jsonl_fixture(os.path.join(src, "b.json"), [], mtime=2000)
+    q = _drain(spark, src, "key string, qty long",
+               states_stream_sink(state, ("key",), sum_cols=("qty",)),
+               str(tmp_path / "ck"))
+    assert _batch_rows(q) == [10, 0]
+    assert sorted(os.listdir(state)) == ["b0"]
+
+
+def test_index_sink_reads_each_batch_once(spark, tmp_path):
+    """The chunk-index sink guards and writes one evaluation of the
+    batch: a 10-row file counts 10 input rows, and the empty file's
+    batch writes no index increment."""
+    import os
+
+    from transaq_clickhouse_exporter_spark.datapipe.retrieval import (
+        index_stream_sink)
+
+    src, root = str(tmp_path / "in"), str(tmp_path / "idx")
+    write_jsonl_fixture(os.path.join(src, "a.json"),
+                        [{"doc_id": i, "text": f"document {i} about quotes and trades"}
+                         for i in range(10)], mtime=1000)
+    write_jsonl_fixture(os.path.join(src, "b.json"), [], mtime=2000)
+    q = _drain(spark, src, "doc_id long, text string", index_stream_sink(root),
+               str(tmp_path / "ck"))
+    assert _batch_rows(q) == [10, 0]
+    assert sorted(os.listdir(root)) == ["b0"]

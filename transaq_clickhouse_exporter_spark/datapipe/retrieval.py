@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ingest.streaming import guarded_batch
 from .chunking import chunk_documents
 from .dedup import dot_product, l2_normalize
 
@@ -356,18 +357,18 @@ def index_stream_sink(index_root: str, size: int = 64, stride: int = 48,
     crash replay).  ``bucket_planes`` persists the LSH bucket column
     with each increment — REQUIRED for a maintained index to stay on
     :func:`doc_search_lsh`'s fast path (SCALE.md measured per-search
-    bucket assignment to cost more than the cosine work it saves)."""
+    bucket assignment to cost more than the cosine work it saves).
+    Each batch is evaluated once and an empty batch writes nothing
+    (:func:`..ingest.streaming.guarded_batch`)."""
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         build_chunk_index(
             batch, size=size, stride=stride, dim=dim,
             text_col=text_col, id_col=id_col, batch_embedder=batch_embedder,
             bucket_planes=bucket_planes,
         ).write.mode("overwrite").parquet(f"{index_root}/b{int(batch_id)}")
 
-    return _sink
+    return guarded_batch(_sink)
 
 
 def read_chunk_index(spark, index_root: str) -> DataFrame:

@@ -96,6 +96,28 @@ def stamp_ingest_seq(df: DataFrame, batch_id: int) -> DataFrame:
     return df.withColumn("_ingest_seq", F.lit(int(batch_id)).cast("long"))
 
 
+def guarded_batch(sink):
+    """Wrap ``sink(df, batch_id)`` as a ``foreachBatch`` function that
+    evaluates each micro-batch once: the batch is persisted, checked
+    for rows, handed to the sink, and unpersisted.  A batch with no
+    rows never reaches the sink — the reference's non-empty guard
+    before ``Send()`` (main.go:224-228, O-14).  Without the persist the
+    guard and the sink would each run the batch's plan: stateful
+    upstream folds would run twice and progress would over-count
+    ``numInputRows``."""
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            sink(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return _process
+
+
 def start_pipeline(
     stream: DataFrame,
     shape,
@@ -110,21 +132,12 @@ def start_pipeline(
     applied once, here, so the shaped plan is built once per query.
     ``sink(df, batch_id)`` receives the shaped, version-stamped batch —
     see :mod:`..sources.clickhouse` for the JDBC writer.  Each batch is
-    evaluated once: it is persisted, checked for rows, handed to the
-    sink, and unpersisted.  A batch with no rows never reaches the sink.
-    The trigger interval is the reference's async-insert buffering knob
-    (S4)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            if batch_df.isEmpty():  # non-empty guard, main.go:224-228 (O-14)
-                return
-            sink(stamp_ingest_seq(batch_df, batch_id), batch_id)
-        finally:
-            batch_df.unpersist()
-
-    w = shape(stream).writeStream.foreachBatch(_process).option("checkpointLocation", checkpoint)
+    evaluated once and a batch with no rows never reaches the sink
+    (:func:`guarded_batch`).  The trigger interval is the reference's
+    async-insert buffering knob (S4)."""
+    process = guarded_batch(
+        lambda batch_df, batch_id: sink(stamp_ingest_seq(batch_df, batch_id), batch_id))
+    w = shape(stream).writeStream.foreachBatch(process).option("checkpointLocation", checkpoint)
     if query_name:
         w = w.queryName(query_name)
     if trigger_seconds:

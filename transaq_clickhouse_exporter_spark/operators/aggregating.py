@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hll import _bucket_rho, hll_estimate_from_registers
+from ..ingest.streaming import guarded_batch
 
 
 def partial_states(
@@ -193,16 +194,16 @@ def states_stream_sink(
     own directory; streaming_curation.py's exactly-once discipline).
 
     State volume per batch is |keys in batch| rows, not |rows|; the
-    raw batch is never persisted."""
+    raw batch is held only while its own micro-batch runs, so the
+    non-empty guard and the write read it once
+    (:func:`..ingest.streaming.guarded_batch`)."""
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         partial_states(batch, keys, **spec).write.mode("overwrite").parquet(
             f"{state_root}/b{int(batch_id)}"
         )
 
-    return _sink
+    return guarded_batch(_sink)
 
 
 def read_final(

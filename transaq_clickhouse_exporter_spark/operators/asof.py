@@ -20,7 +20,11 @@ per-group ``pd.merge_asof`` UDF:
 Scale shape: ONE shuffle (the window partition on the key), no
 row-pairing blowup, no Python.  Skewed keys behave like any windowed
 aggregation (AQE/salting apply).  ``tolerance`` optionally voids
-matches older than the given seconds, like ``pd.merge_asof``."""
+matches older than the given seconds, like ``pd.merge_asof``.
+
+One implementation: :func:`asof_join_multi` builds the plan for k
+right sides sharing the key, and :func:`asof_join` is its one-right
+form (its own input checks, plus the tolerance projection)."""
 
 from __future__ import annotations
 
@@ -92,6 +96,13 @@ def asof_join_multi(
         taken |= set(pay) | {out_col}
         payloads.append(pay)
 
+    # Each side's payload rides ONE struct (plus its matched timestamp)
+    # so a single last(ignorenulls) pulls the matched right row WHOLE —
+    # per-column windows would silently mix columns from different
+    # right rows whenever the matched row holds a NULL in one payload
+    # column (CH ASOF JOIN returns the row incl. its NULLs).  The
+    # struct itself is non-null on right rows even when every payload
+    # field is NULL, so it is an exact row marker.
     pay_types = [
         T.StructType(
             [T.StructField(c, rdf.schema[c].dataType) for c in pay]
@@ -139,7 +150,11 @@ def asof_join_multi(
         u = u.unionByName(t)
     # one window PER SIDE: all share the key partitioning (one
     # exchange); sides with the same (direction, strict) share the
-    # sort too, a differing comparator adds only a Sort node
+    # sort too, a differing comparator adds only a Sort node.  Time
+    # order: ascending for backward (last seen = closest BELOW),
+    # descending for forward.  Tie order: right rows (side 0) before
+    # left rows for inclusive matches; left first under strict, so
+    # same-timestamp right rows are not yet visible to the left row.
     def _w(d: str, s: bool):
         ts_ord = F.col("__ts").asc() if d == "backward" \
             else F.col("__ts").desc()
@@ -181,109 +196,46 @@ def asof_join(
     direction: str = "backward",
     strict: bool = False,
 ) -> DataFrame:
-    """Left as-of join.  Right payload columns (everything except
-    ``by`` + ``right_ts``) appear on the output with their own names;
-    left rows with no prior right row get NULLs.  ``right_ts_out``
-    additionally emits the MATCHED right row's timestamp under that
-    name (NULL = no match) — the match indicator ClickHouse's inner
-    ``ASOF JOIN`` semantics need.
+    """Left as-of join: the one-right form of :func:`asof_join_multi`
+    (same plan — union + one keyed running window, single shuffle).
+    Right payload columns (everything except ``by`` + ``right_ts``)
+    appear on the output with their own names; left rows with no prior
+    right row get NULLs.  ``right_ts_out`` additionally emits the
+    MATCHED right row's timestamp under that name (NULL = no match) —
+    the match indicator ClickHouse's inner ``ASOF JOIN`` semantics
+    need.
 
     ``direction``/``strict`` span ClickHouse's four ASOF comparators
     (r11e): ``backward`` picks the closest right row at-or-before the
     left timestamp (CH ``l.ts >= r.ts``; ``strict`` excludes the
     equal timestamp — CH ``>``), ``forward`` the closest at-or-after
-    (CH ``<=``; ``strict`` → ``<``).  All four ride the SAME plan —
-    union + one keyed running window, single shuffle: direction flips
-    the window's time order, strictness flips which side wins the
-    equal-timestamp tie (left-before-right hides same-ts right rows).
+    (CH ``<=``; ``strict`` → ``<``).  All four ride the SAME plan:
+    direction flips the window's time order, strictness flips which
+    side wins the equal-timestamp tie (left-before-right hides
+    same-ts right rows).  ``tolerance_seconds`` voids matches further
+    away than that, as a projection over the joined rows (no extra
+    shuffle).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
     by = list(by)
-    if left_ts in by or right_ts in by:
+    if right_ts in by:
         raise ValueError("timestamp column must not be a key column")
-    l_cols = [c for c in left.columns if c not in by + [left_ts]]
     payload = [c for c in right.columns if c not in by + [right_ts]]
     overlap = set(payload) & set(left.columns)
     if overlap:
         raise ValueError(f"right payload columns collide with left: {sorted(overlap)}")
-
-    # The whole right payload rides ONE struct (plus the matched
-    # timestamp) so a single last(ignorenulls) window pulls the matched
-    # right row WHOLE — per-column windows would silently mix columns
-    # from different right rows whenever the matched row holds a NULL
-    # in one payload column (CH ASOF JOIN returns the row incl. its
-    # NULLs).  The struct itself is non-null on right rows even when
-    # every payload field is NULL, so it is an exact row marker.
-    pay_type = T.StructType(
-        [T.StructField(c, right.schema[c].dataType) for c in payload]
-        + [T.StructField("__rts", right.schema[right_ts].dataType)]
-    )
-    # keys re-aliased per leg — see asof_join_multi: keeps UnionExec's
-    # qualifier-strict partitioning comparison from dropping the
-    # co-partitioning of cached legs (one full-union Exchange saved)
-    l_tag = left.select(
-        *[F.col(k).alias(k) for k in by],
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.col(left_ts),
-        *[F.col(c) for c in l_cols],
-        F.lit(None).cast(pay_type).alias("__pay"),
-    )
-    r_tag = right.select(
-        *[F.col(k).alias(k) for k in by],
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(left.schema[left_ts].dataType).alias(left_ts),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in l_cols],
-        F.struct(
-            *[F.col(c).alias(c) for c in payload],
-            F.col(right_ts).alias("__rts"),
-        ).alias("__pay"),
-    )
-    u = l_tag.unionByName(r_tag)
-    # time order: ascending for backward (last seen = closest BELOW),
-    # descending for forward (last seen = closest ABOVE).  Tie order:
-    # right rows (side 0) before left rows for inclusive matches;
-    # left first under strict, so same-timestamp right rows are not
-    # yet visible when the left row is evaluated.
-    ts_ord = F.col("__ts").asc() if direction == "backward" \
-        else F.col("__ts").desc()
-    side_ord = F.col("__side").desc() if strict else F.col("__side").asc()
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(ts_ord, side_ord)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select(
-        *by,
-        "__ts",
-        "__side",
-        left_ts,
-        *l_cols,
-        F.last("__pay", ignorenulls=True).over(w).alias("__pay"),
-    )
-    out = filled.filter(F.col("__side") == 1)
-    rts = F.col("__pay.__rts")
+    out_col = right_ts_out or "__asof_rts"
+    out = asof_join_multi(
+        left, [(right, right_ts, out_col, direction, strict)], by,
+        left_ts=left_ts)
     if tolerance_seconds is not None:
         is_ts = right.schema[right_ts].dataType.typeName().startswith("timestamp")
-        as_s = (lambda c: F.unix_timestamp(c)) if is_ts else (lambda c: c)
-        gap = (as_s(F.col("__ts")) - as_s(rts) if direction == "backward"
-               else as_s(rts) - as_s(F.col("__ts")))
-        stale = F.col("__pay").isNull() | (gap > tolerance_seconds)
-        out = out.select(
-            *by, left_ts, *l_cols,
-            *[F.when(stale, F.lit(None)).otherwise(F.col(f"__pay.{c}")).alias(c) for c in payload],
-            *(
-                [F.when(stale, F.lit(None)).otherwise(rts).alias(right_ts_out)]
-                if right_ts_out
-                else []
-            ),
-        )
-    else:
-        out = out.select(
-            *by, left_ts, *l_cols,
-            *[F.col(f"__pay.{c}").alias(c) for c in payload],
-            *([rts.alias(right_ts_out)] if right_ts_out else []),
-        )
-    return out
+        as_s = F.unix_timestamp if is_ts else (lambda c: c)
+        lts, rts = as_s(F.col(left_ts)), as_s(F.col(out_col))
+        # a NULL gap (no match, or a NULL timestamp) keeps the row as is
+        stale = (lts - rts if direction == "backward" else rts - lts) \
+            > tolerance_seconds
+        out = out.select(*[
+            F.when(stale, F.lit(None)).otherwise(F.col(c)).alias(c)
+            if c in payload or c == out_col else F.col(c)
+            for c in out.columns])
+    return out if right_ts_out else out.drop(out_col)

@@ -278,8 +278,10 @@ from __future__ import annotations
 
 import itertools
 import re
+import threading
 
 from collections.abc import Callable, Mapping
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1113,20 +1115,45 @@ _SCALAR_SHIMS.update({
 _SHIMS_MARKER = "spark.tce.ch_shims"
 
 
-#: shim → shims its BODY calls (computed once): lazy registration must
-#: pull in a needed shim's whole dependency closure.
+#: shim → shims its BODY calls, and every shim in dependency-first
+#: order (both computed once): lazy registration must pull in a needed
+#: shim's whole dependency closure AND create each dependency before
+#: its callers — Spark resolves a SQL function body at CREATE time, so
+#: `JSONExtractInt` created before `ch_json_v_int` fails.
 _SHIM_DEPS: dict[str, frozenset] = {}
+_SHIM_ORDER: list[str] = []
+#: serializes the shim marker's read → register → write: two threads
+#: registering on one session would otherwise each write back their
+#: own view of the registered set and lose the other's names
+_SHIMS_LOCK = threading.Lock()
+
+
+def _shim_graph() -> None:
+    """Fill :data:`_SHIM_DEPS` and :data:`_SHIM_ORDER` (caller holds
+    :data:`_SHIMS_LOCK`)."""
+    if _SHIM_ORDER:
+        return
+    low = {n.lower(): n for n in _SCALAR_SHIMS}
+    for n, b in _SCALAR_SHIMS.items():
+        _SHIM_DEPS[n] = frozenset(
+            low[m.group(1).lower()]
+            for m in re.finditer(r"\b([A-Za-z_]\w*)\s*\(", b)
+            if m.group(1).lower() in low and low[m.group(1).lower()] != n
+        )
+    done: set = set()
+
+    def visit(n: str) -> None:
+        if n not in done:
+            done.add(n)
+            for d in sorted(_SHIM_DEPS[n]):
+                visit(d)
+            _SHIM_ORDER.append(n)
+
+    for n in _SCALAR_SHIMS:
+        visit(n)
 
 
 def _shim_closure(names) -> set:
-    if not _SHIM_DEPS:
-        low = {n.lower(): n for n in _SCALAR_SHIMS}
-        for n, b in _SCALAR_SHIMS.items():
-            _SHIM_DEPS[n] = frozenset(
-                low[m.group(1).lower()]
-                for m in re.finditer(r"\b([A-Za-z_]\w*)\s*\(", b)
-                if m.group(1).lower() in low and low[m.group(1).lower()] != n
-            )
     out: set = set()
     stack = list(names)
     while stack:
@@ -1189,6 +1216,12 @@ def register_ch_functions(spark: SparkSession, needed=None) -> None:
         ),
         "x",
     )
+    with _SHIMS_LOCK:
+        _shim_graph()
+        _register_shims_locked(spark, needed, token)
+
+
+def _register_shims_locked(spark: SparkSession, needed, token: str) -> None:
     try:
         cur = spark.conf.get(_SHIMS_MARKER)
     except Exception:
@@ -1201,7 +1234,7 @@ def register_ch_functions(spark: SparkSession, needed=None) -> None:
         else set()
     )
     if needed is None:
-        todo = [n for n in _SCALAR_SHIMS if n not in have]
+        todo = [n for n in _SHIM_ORDER if n not in have]
         have = set(_SCALAR_SHIMS)
     else:
         # Spark resolves function names case-insensitively; match the
@@ -1210,7 +1243,7 @@ def register_ch_functions(spark: SparkSession, needed=None) -> None:
         want = _shim_closure(
             low[str(n).lower()] for n in needed if str(n).lower() in low
         )
-        todo = [n for n in want if n not in have]
+        todo = [n for n in _SHIM_ORDER if n in want and n not in have]
         have |= want
     if not todo:
         if cur is None:
@@ -8394,313 +8427,50 @@ def _spark_inline_cte_bug(spark: SparkSession) -> bool:
     return buggy
 
 
-def _bridge_asof_chain_multi(
-    spark: SparkSession, sql: str, table_map: Mapping[str, str] | None
-) -> tuple[str, str] | None:
-    """Fast path for a CHAINED ``ASOF JOIN`` whose links all share the
-    equality key, compare against the ORIGINAL left's own timestamp
-    column, and use the same comparator: the whole chain folds into
-    ONE :func:`operators.asof.asof_join_multi` call — a single keyed
-    window (one shuffle) instead of one bridge pass + one shuffle per
-    link (r15; measured 1.35 s vs 1.74 s standalone at sf0.1 on the
-    two-link op13 shape, and the win grows with link count).
-
-    Returns ``(new_sql, view_name)``, or ``None`` on ANY shape doubt —
-    the per-link :func:`_bridge_asof_join` path is the semantics
-    authority and handles everything this fast path declines (USING
-    forms, CTE-named sides, mixed comparators, per-link key changes,
-    ON terms referencing an earlier link's right side, payload
-    collisions)."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.asof import asof_join_multi
-
-    sh = _mask_literals(sql)
-    asof_rx = re.compile(r"(?is)\bASOF\s+(LEFT\s+|INNER\s+)?JOIN\b")
-    if len(asof_rx.findall(sh)) < 2:
-        return None
-    depths0 = _depth_map(sh)
-    am = next(iter(asof_rx.finditer(sh)))
-
-    def _parse_side(pos: int):
-        i = pos + re.match(r"\s*", sh[pos:]).end()
-        if i < len(sh) and sh[i] == "(":
-            j = i + 1
-            while j < len(sh) and depths0[j] > depths0[i]:
-                j += 1
-            if j >= len(sh):
-                return None
-            src, i2 = sql[i: j + 1], j + 1
-        else:
-            nm = re.match(r"[A-Za-z_]\w*", sh[i:])
-            if not nm:
-                return None
-            src, i2 = nm.group(0), i + nm.end()
-        al = re.match(
-            r"(?is)\s+(?:AS\s+)?"
-            r"(?!ASOF\b|ON\b|USING\b|LEFT\b|INNER\b|JOIN\b)"
-            r"([A-Za-z_]\w*)", sh[i2:])
-        alias = None
-        if al:
-            alias, i2 = al.group(1), i2 + al.end()
-        return src, alias, i2
-
-    parsed = None
-    for fm in re.finditer(r"(?i)\bFROM\b", sh):
-        if fm.start() > am.start():
-            break
-        side = _parse_side(fm.end())
-        if side is None:
-            continue
-        src1, a1, p = side
-        if re.match(r"(?is)\s*ASOF\s+(LEFT\s+|INNER\s+)?JOIN\b", sh[p:]):
-            parsed = (fm.start(), src1, a1, p)
-            break
-    if parsed is None:
-        return None
-    from_start, t1, a1, p = parsed
-    left_names = ({a1} if t1.startswith("(") else {t1, a1}) - {None}
-    if not left_names:
-        return None
-
-    stop_rx = re.compile(
-        r"(?is)\b(?:WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|SETTINGS|"
-        r"UNION|INTERSECT|EXCEPT|WINDOW)\b"
-        r"|\bASOF\s+(?:LEFT\s+|INNER\s+)?JOIN\b|\)")
-    part_re = re.compile(
-        r"^\s*(\w+)\.(\w+)\s*(>=|<=|=|>|<)\s*(\w+)\.(\w+)\s*$")
-
-    links = []  # (left_kw, src, alias, right_names, keys, lts, rts, dir, strict)
-    pos = p
-    while True:
-        jm = re.match(r"(?is)\s*ASOF\s+(LEFT\s+|INNER\s+)?JOIN\b", sh[pos:])
-        if jm is None:
-            break
-        left_kw = (jm.group(1) or "").strip().upper() == "LEFT"
-        side = _parse_side(pos + jm.end())
-        if side is None:
-            return None
-        src, alias, p3 = side
-        om = re.match(r"(?i)\s*ON\b", sh[p3:])
-        if om is None:
-            return None  # USING or malformed — per-link path decides
-        cond_start = p3 + om.end()
-        stop = stop_rx.search(sh, cond_start)
-        cond_end = stop.start() if stop else len(sh)
-        right_names = ({alias} if src.startswith("(")
-                       else {src, alias}) - {None}
-        if not right_names or (right_names & left_names):
-            return None
-        keys, lts, rts = [], None, None
-        direction, strict = "backward", False
-        for part in re.split(r"(?i)\bAND\b", sql[cond_start:cond_end]):
-            pm = part_re.match(part)
-            if not pm:
-                return None
-            q1, c1, op, q2, c2 = pm.groups()
-            if op == "=":
-                if q1 in left_names and q2 in right_names:
-                    keys.append((c1, c2))
-                elif q1 in right_names and q2 in left_names:
-                    keys.append((c2, c1))
-                else:
-                    return None  # references an earlier link's side
-            else:
-                if lts is not None:
-                    return None
-                mirror = {">=": "<=", "<=": ">=", ">": "<", "<": ">"}
-                if q1 in left_names and q2 in right_names:
-                    lts, rts = c1, c2
-                elif q1 in right_names and q2 in left_names:
-                    lts, rts, op = c2, c1, mirror[op]
-                else:
-                    return None
-                direction = "backward" if op in (">=", ">") else "forward"
-                strict = op in (">", "<")
-        if not keys or lts is None:
-            return None
-        links.append((left_kw, src, alias, right_names, keys, lts, rts,
-                      direction, strict))
-        pos = cond_end
-    if len(links) < 2:
-        return None
-    # uniform chain: same left key columns, same left ts column — the
-    # comparator may VARY per link (r15 second phase: a differing
-    # (direction, strict) ordering adds only a Sort under the shared
-    # key partitioning, never a shuffle)
-    lk0 = sorted(lk for lk, _ in links[0][4])
-    if any(sorted(lk for lk, _ in ln[4]) != lk0
-           or ln[5] != links[0][5] for ln in links[1:]):
-        return None
-    # right alias sets pairwise disjoint (qualifier strip is per-name)
-    seen_names: set = set(left_names)
-    for ln in links:
-        if ln[3] & seen_names:
-            return None
-        seen_names |= ln[3]
-    lts = links[0][5]
-
-    # sides named by an ENCLOSING CTE stay on the per-link path (its
-    # CTE excision machinery owns that case); compute with_end to keep
-    # any WITH prefix's bodies out of the rewrites below
-    ctes: dict[str, str] = {}
-    with_end = 0
-    for wm in re.finditer(r"(?i)(?:\A|\()\s*WITH\b", sh):
-        wtok = wm.end() - 4
-        if wtok >= from_start:
-            continue
-        if wm.group(0)[0] == "(":
-            j = wm.start() + 1
-            while j < len(sh) and depths0[j] > depths0[wm.start()]:
-                j += 1
-            if not (wm.start() < from_start < j):
-                continue
-        inner, rel_end, _ = _statement_ctes(sql[wtok:])
-        if inner:
-            ctes.update(inner)
-            if wtok + rel_end <= from_start:
-                with_end = max(with_end, wtok + rel_end)
-    plain_sides = [t1] + [ln[1] for ln in links]
-    if any(not s.startswith("(") and s in ctes for s in plain_sides):
-        return None
-
-    def _no_cte_defs(df: DataFrame) -> DataFrame:
-        if ("CTERelationDef"
-                in df._jdf.queryExecution().analyzed().toString()
-                and _spark_inline_cte_bug(spark)):
-            return df.localCheckpoint(eager=False)
-        return df
-
-    tmap = dict(table_map or {})
-
-    def _side(spec: str) -> DataFrame:
-        if spec.startswith("("):
-            return _no_cte_defs(
-                run_ch_sql(spark, spec[1:-1], table_map=table_map))
-        return spark.table(tmap.get(spec, spec))
-
-    def _right_side(spec: str) -> DataFrame:
-        # pure-distinct right subqueries feed the keyed window with
-        # duplicates intact (identical rows — last() is insensitive),
-        # shedding the dedup's own Exchange (r16, guide §2.4)
-        if spec.startswith("("):
-            slim = _asof_right_sans_distinct(spec[1:-1])
-            if slim is not None:
-                return _no_cte_defs(
-                    run_ch_sql(spark, slim, table_map=table_map))
-        return _side(spec)
-
-    try:
-        ldf = _side(t1)
-        uid = uuid.uuid4().hex[:12]
-        rights, out_cols, naturals, rts_written = [], [], [], []
-        taken = set(ldf.columns)
-        for i, (left_kw, src, alias, rnames, keys, _, rts, _, _) in (
-                enumerate(links)):
-            rdf = _right_side(src)
-            rts_i = rts
-            for lk, rk in keys:
-                if rk != lk:
-                    if rts_i == rk:
-                        rts_i = lk
-                    rdf = rdf.withColumnRenamed(rk, lk)
-            pay = [c for c in rdf.columns
-                   if c not in [lk for lk, _ in keys] + [rts_i]]
-            natural = (rts_i == rts and rts not in taken
-                       and all(rts != lk for lk, _ in keys)
-                       and all(rts != o[6] for j, o in enumerate(links)
-                               if j != i))
-            out_col = rts if natural else f"__asof_rts_{uid}_{i}"
-            taken |= set(pay) | {out_col}
-            rights.append((rdf, rts_i, out_col,
-                           links[i][7], links[i][8]))
-            out_cols.append(out_col)
-            naturals.append(natural)
-            rts_written.append(rts)
-        joined = asof_join_multi(
-            ldf, rights, by=lk0, left_ts=lts,
-        )
-    except Exception as e:
-        # resolution/shape failures (payload collisions, missing
-        # tables, nested unsupported constructs) fall back to the
-        # per-link path, which raises its own better-worded errors on
-        # genuinely unsupported input; anything else propagates
-        if isinstance(e, (ValueError, UnsupportedChSql)) or \
-                type(e).__name__ == "AnalysisException":
-            return None
-        raise
-    for (left_kw, *_), out_col in zip(links, out_cols):
-        if not left_kw:  # bare ASOF JOIN is INNER per link
-            joined = joined.filter(F.col(out_col).isNotNull())
-
-    name = f"__ch_asof_{uid}"
-    new_sql = sql[: from_start] + f"FROM {name} " + sql[pos:]
-    sh2 = _mask_literals(new_sql)
-    frompos = new_sql.find(f"FROM {name}")
-    blk_a, blk_b = _asof_block_span(sh2, frompos)
-    # matched-timestamp references: `<right_i>.<rts_i>` → out_col_i
-    used = [False] * len(links)
-    for i, ((_, _, _, rnames, *_), out_col, natural, rw) in enumerate(
-            zip(links, out_cols, naturals, rts_written)):
-        if natural:
-            used[i] = True
-            continue
-        rw_esc = re.escape(rw)
-        rref = re.compile(
-            r"\b(?:" + "|".join(map(re.escape, sorted(rnames))) + r")\."
-            + rf"(?:{rw_esc}(?![\w`(])|`{rw_esc}`|\"{rw_esc}\")")
-        out, last = [], 0
-        for qm in rref.finditer(sh2):
-            if qm.start() < with_end or not blk_a <= qm.start() < blk_b:
-                continue
-            out.append(new_sql[last: qm.start()])
-            out.append(out_col)
-            last = qm.end()
-            used[i] = True
-        out.append(new_sql[last:])
-        new_sql = "".join(out)
-        sh2 = _mask_literals(new_sql)
-        frompos = new_sql.find(f"FROM {name}")
-        blk_a, blk_b = _asof_block_span(sh2, frompos)
-    for u, out_col in zip(used, out_cols):
-        if not u:
-            joined = joined.drop(out_col)
-    # strip now-dangling side qualifiers within the block
-    quals = sorted(seen_names, key=len, reverse=True)
-    qre = re.compile(
-        r"\b(?:" + "|".join(map(re.escape, quals)) + r")\.(?=[A-Za-z_`\"])")
-    out, last = [], 0
-    for qm in qre.finditer(sh2):
-        if qm.start() < with_end or not blk_a <= qm.start() < blk_b:
-            continue
-        out.append(new_sql[last: qm.start()])
-        last = qm.end()
-    out.append(new_sql[last:])
-    new_sql = "".join(out)
-    joined.createOrReplaceTempView(name)
-    return new_sql, name
+class _AsofLink(NamedTuple):
+    """One parsed ``ASOF [LEFT|INNER] JOIN side [alias] ON|USING …``."""
+    left_kw: bool  # ASOF LEFT JOIN keeps unmatched left rows
+    src: str  # bare name, or the parenthesized subquery WITH parens
+    names: set  # qualifiers the side answers to
+    keys: list  # (left column, right column) equality pairs
+    lts: str
+    rts: str  # the right timestamp as written
+    direction: str
+    strict: bool
+    using: bool
+    end: int  # offset just past the ON condition / USING list
 
 
 def _bridge_asof_join(
     spark: SparkSession, sql: str, table_map: Mapping[str, str] | None
 ) -> tuple[str, str | None]:
     """Rewrite CH's ``FROM t1 [a] ASOF [LEFT] JOIN t2 [b] ON equi…
-    AND l.ts >= r.ts`` through :func:`operators.asof.asof_join`: the
-    joined result registers as a temp view and the statement's FROM
-    clause (plus both sides' alias qualifiers) rewrite against it.
-    Returns ``(rewritten_sql, view_name_or_None)`` — the caller drops
-    the view once the statement is analyzed (the view name is
-    uuid-unique per call, so concurrent ``run_ch_sql`` callers never
-    collide).
+    AND l.ts >= r.ts`` through :func:`operators.asof.asof_join_multi`:
+    the joined result registers as a temp view and the statement's FROM
+    clause (plus the sides' alias qualifiers) rewrite against it.
+    Returns ``(rewritten_sql, view_name_or_None)`` — the caller loops
+    until no ASOF JOIN is left, and drops the views once the statement
+    is analyzed (view names are uuid-unique per call, so concurrent
+    ``run_ch_sql`` callers never collide).
+
+    One parser: the FROM side and EVERY chained link behind it (CH
+    chains left-associatively) are parsed once, then k links fold into
+    ONE ``asof_join_multi`` call — one keyed window, one shuffle:
+
+    - k = the whole chain when it is uniform: every link ``ON``, the
+      same left key columns, the same LEFT timestamp, pairwise-disjoint
+      qualifier names and no CTE-named side (r15; a differing
+      comparator per link adds only a Sort, never a shuffle);
+    - k = 1 otherwise, and when the k-link build fails on a shape
+      error (payload collision, analysis error).  The following links
+      then see this pass's view as their left side: their qualifiers
+      rewrite to ``<view>.<col>`` so the next pass parses them (r13).
 
     Supported subset (raise-don't-mistranslate elsewhere): ASOF JOINs
     of named tables/views/CTEs/subqueries — parallel branches AND
-    left-associative CHAINS (one bridge pass per link, r13) — each
-    link a join of two sides, conjunctive ON with ≥1 equality
-    and exactly one inclusive inequality (``l.ts >= r.ts`` or
-    ``r.ts <= l.ts``), qualified columns in ON, and no payload column
+    chains — each link a conjunctive ON with ≥1 equality and exactly
+    one inequality (``>=``, ``>``, ``<=``, ``<``, either side first)
+    over qualified columns, or ``USING (k…, ts)``; no payload column
     collisions between the sides.  CH semantics preserved: bare ASOF
     JOIN is INNER (unmatched left rows drop — gated on the matched
     right timestamp), ASOF LEFT JOIN keeps them with NULLs; a
@@ -8709,27 +8479,18 @@ def _bridge_asof_join(
     timestamp there, not the left one) resolves to the operator's
     matched-timestamp output.  Plan shape is the operator's: union +
     one keyed window, single shuffle, no nested-loop join."""
-    from ..operators.asof import asof_join
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from ..operators.asof import asof_join_multi
 
     sh = _mask_literals(sql)
-    if not re.search(r"(?i)\bASOF\s+(?:LEFT\s+|INNER\s+)?JOIN\b", sh):
+    asof_at = re.compile(r"(?is)\s*ASOF\s+(LEFT\s+|INNER\s+)?JOIN\b")
+    am = re.search(r"(?i)\bASOF\s+(?:LEFT\s+|INNER\s+)?JOIN\b", sh)
+    if am is None:
         return sql, None
-    # uniform shared-key chains fold into ONE keyed window via
-    # asof_join_multi (r15) — any shape doubt falls through to the
-    # per-link passes below, the semantics authority
-    fast = _bridge_asof_chain_multi(spark, sql, table_map)
-    if fast is not None:
-        return fast
     depths0 = _depth_map(sh)
-    # several ASOF JOINs may coexist in PARALLEL branches (UNION arms,
-    # independent subqueries) or in a CHAIN (left-associative, like
-    # CH): this pass bridges the FIRST one and the caller loops until
-    # none remain.  For a chain, the consumed sides' qualifiers AFTER
-    # the next ASOF keyword rewrite to `<view>.` (not bare), so the
-    # next pass sees fully qualified ON terms whose left side is this
-    # pass's view (r13).
-    am = next(iter(
-        re.finditer(r"(?i)\bASOF\s+(LEFT\s+|INNER\s+)?JOIN\b", sh)))
 
     def _parse_side(pos: int):
         """``name | (subquery)`` followed by an optional ``[AS] alias``
@@ -8757,121 +8518,132 @@ def _bridge_asof_join(
             alias, i2 = al.group(1), i2 + al.end()
         return src, alias, i2
 
-    parsed = None
+    def _link_head(pos: int):
+        """``ASOF … JOIN side [alias] ON|USING`` at ``pos``:
+        (left_kw, src, alias, cond_start, keyword), or None."""
+        jm = asof_at.match(sh, pos)
+        side = _parse_side(jm.end()) if jm else None
+        if side is None:
+            return None
+        src, alias, p3 = side
+        om = re.match(r"(?i)\s*(ON|USING)\b", sh[p3:])
+        if om is None:
+            return None
+        return ((jm.group(1) or "").strip().upper() == "LEFT", src, alias,
+                p3 + om.end(), om.group(1).upper())
+
+    # the ON condition ends at the block's next clause, at a FOLLOWING
+    # ASOF JOIN (the next chained link) or at the enclosing paren
+    stop_rx = re.compile(
+        r"(?is)\b(?:WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|SETTINGS|"
+        r"UNION|INTERSECT|EXCEPT|WINDOW)\b"
+        r"|\bASOF\s+(?:LEFT\s+|INNER\s+)?JOIN\b|\)")
+    part_re = re.compile(
+        r"^\s*(\w+)\.(\w+)\s*(>=|<=|=|>|<)\s*(\w+)\.(\w+)\s*$")
+
+    def _link(head, left_names: set) -> _AsofLink:
+        """Parse one link's ON condition or USING list; raises
+        UnsupportedChSql on a form outside the subset."""
+        left_kw, src, alias, cond_start, kw = head
+        stop = stop_rx.search(sh, cond_start)
+        cond_end = stop.start() if stop else len(sh)
+        # a parenthesized side contributes only its alias as a qualifier
+        right_names = ({alias} if src.startswith("(")
+                       else {src, alias}) - {None}
+        keys: list[tuple[str, str]] = []
+        lts = rts = None
+        direction, strict = "backward", False
+        if kw == "USING":
+            # CH: USING (k1, …, kn, asof_col) — the LAST column is the
+            # inequality (comparator fixed at >=, CH's only USING form);
+            # both sides must carry the same names, so keys/ts mirror
+            i = cond_start + re.match(r"\s*", sh[cond_start:]).end()
+            if i < len(sh) and sh[i] == "(":
+                j = i + 1
+                while j < len(sh) and depths0[j] > depths0[i]:
+                    j += 1
+                ulist, cond_end = sql[i + 1: j], j + 1
+            else:
+                ulist = sql[i:cond_end]
+            cols = [c.strip().strip("`") for c in ulist.split(",")]
+            if len(cols) < 2 or not all(
+                    re.fullmatch(r"[A-Za-z_]\w*", c) for c in cols):
+                raise UnsupportedChSql(
+                    "ASOF JOIN USING needs plain columns (k…, ts) — the "
+                    "last is the >= inequality")
+            keys = [(c, c) for c in cols[:-1]]
+            lts = rts = cols[-1]
+        elif not left_names or not right_names:
+            raise UnsupportedChSql(
+                "ASOF JOIN with subquery sides needs aliases to qualify "
+                "the ON columns — FROM (…) a ASOF JOIN (…) b ON a.k = b.k "
+                "AND a.ts >= b.ts (or spell USING (k…, ts))")
+        for part in ([] if kw == "USING" else
+                     re.split(r"(?i)\bAND\b", sql[cond_start:cond_end])):
+            pm = part_re.match(part)
+            if not pm:
+                raise UnsupportedChSql(
+                    f"unsupported ASOF ON term {part.strip()!r} (qualified "
+                    "`x.col OP y.col` conjunction only)"
+                )
+            q1, c1, op, q2, c2 = pm.groups()
+            if op == "=":
+                if q1 in left_names and q2 in right_names:
+                    keys.append((c1, c2))
+                elif q1 in right_names and q2 in left_names:
+                    keys.append((c2, c1))
+                else:
+                    raise UnsupportedChSql(
+                        f"ASOF ON equality {part.strip()!r} "
+                        "must relate the two join sides")
+            else:
+                if lts is not None:
+                    raise UnsupportedChSql(
+                        "ASOF JOIN needs exactly one inequality")
+                # normalize to left-side-first: r.ts OP l.ts mirrors to
+                # l.ts OP' r.ts.  CH's four comparators (r11e): >= / >
+                # pick the closest right row at-or-before / strictly
+                # before; <= / < at-or-after / strictly after.
+                mirror = {">=": "<=", "<=": ">=", ">": "<", "<": ">"}
+                if q1 in left_names and q2 in right_names:
+                    lts, rts = c1, c2
+                elif q1 in right_names and q2 in left_names:
+                    lts, rts, op = c2, c1, mirror[op]
+                else:
+                    raise UnsupportedChSql(
+                        f"ASOF inequality {part.strip()!r} must relate "
+                        "the two join sides")
+                direction = "backward" if op in (">=", ">") else "forward"
+                strict = op in (">", "<")
+        if not keys or lts is None:
+            raise UnsupportedChSql(
+                "ASOF JOIN needs at least one equality and exactly one "
+                "inequality in ON"
+            )
+        return _AsofLink(left_kw, src, right_names, keys, lts, rts,
+                         direction, strict, kw == "USING", cond_end)
+
+    head = None
     for fm in re.finditer(r"(?i)\bFROM\b", sh):
         if fm.start() > am.start():
             break
         side = _parse_side(fm.end())
         if side is None:
             continue
-        src1, a1, p = side
-        jm = re.match(r"(?is)\s*ASOF\s+(LEFT\s+|INNER\s+)?JOIN\b", sh[p:])
-        if jm is None:
-            continue
-        left_kw = (jm.group(1) or "").strip().upper() == "LEFT" or None
-        side2 = _parse_side(p + jm.end())
-        if side2 is None:
-            continue
-        src2, a2, p3 = side2
-        om = re.match(r"(?i)\s*(ON|USING)\b", sh[p3:])
-        if om is None:
-            continue
-        parsed = (fm.start(), src1, a1, left_kw, src2, a2,
-                  p3 + om.end(), om.group(1).upper())
-        break
-    if parsed is None:
+        t1, a1, p = side
+        head = _link_head(p)
+        if head is not None:
+            from_start = fm.start()
+            break
+    if head is None:
         raise UnsupportedChSql(
             "ASOF JOIN form not recognized — supported: FROM t1|(subq) "
             "[a] ASOF [LEFT|INNER] JOIN t2|(subq) [b] ON equi… AND "
             "l.ts >= r.ts, or … USING (k…, ts)"
         )
-    (from_start, t1, a1, left_kw, t2, a2, cond_start, on_kw) = parsed
-    rest = sh[cond_start:]
-    # the ON condition also ends at a FOLLOWING ASOF JOIN: CH chains
-    # left-associatively, and pass N+1 bridges the next link against
-    # this pass's view (r13 — chained ASOF joined the subset)
-    stop = re.search(
-        r"(?is)\b(?:WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|SETTINGS|"
-        r"UNION|INTERSECT|EXCEPT|WINDOW)\b"
-        r"|\bASOF\s+(?:LEFT\s+|INNER\s+)?JOIN\b|\)",
-        rest,
-    )
-    cond_end = cond_start + (stop.start() if stop else len(rest))
-    # a parenthesized side contributes only its alias as a qualifier
     left_names = ({a1} if t1.startswith("(") else {t1, a1}) - {None}
-    right_names = ({a2} if t2.startswith("(") else {t2, a2}) - {None}
-    if on_kw == "ON" and (not left_names or not right_names):
-        raise UnsupportedChSql(
-            "ASOF JOIN with subquery sides needs aliases to qualify "
-            "the ON columns — FROM (…) a ASOF JOIN (…) b ON a.k = b.k "
-            "AND a.ts >= b.ts (or spell USING (k…, ts))")
-    keys: list[tuple[str, str]] = []
-    lts = rts = None
-    direction, strict = "backward", False
-    part_re = re.compile(
-        r"^\s*(\w+)\.(\w+)\s*(>=|<=|=|>|<)\s*(\w+)\.(\w+)\s*$")
-    if on_kw == "USING":
-        # CH: USING (k1, …, kn, asof_col) — the LAST column is the
-        # inequality (comparator fixed at >=, CH's only USING form);
-        # both sides must carry the same names, so keys/ts mirror
-        i = cond_start + re.match(r"\s*", sh[cond_start:]).end()
-        if i < len(sh) and sh[i] == "(":
-            j = i + 1
-            while j < len(sh) and depths0[j] > depths0[i]:
-                j += 1
-            ulist, cond_end = sql[i + 1: j], j + 1
-        else:
-            ulist = sql[i:cond_end]
-        cols = [c.strip().strip("`") for c in ulist.split(",")]
-        if len(cols) < 2 or not all(
-                re.fullmatch(r"[A-Za-z_]\w*", c) for c in cols):
-            raise UnsupportedChSql(
-                "ASOF JOIN USING needs plain columns (k…, ts) — the "
-                "last is the >= inequality")
-        keys = [(c, c) for c in cols[:-1]]
-        lts = rts = cols[-1]
-    for part in ([] if on_kw == "USING" else
-                 re.split(r"(?i)\bAND\b", sql[cond_start:cond_end])):
-        pm = part_re.match(part)
-        if not pm:
-            raise UnsupportedChSql(
-                f"unsupported ASOF ON term {part.strip()!r} (qualified "
-                "`x.col OP y.col` conjunction only)"
-            )
-        q1, c1, op, q2, c2 = pm.groups()
-        if op == "=":
-            if q1 in left_names and q2 in right_names:
-                keys.append((c1, c2))
-            elif q1 in right_names and q2 in left_names:
-                keys.append((c2, c1))
-            else:
-                raise UnsupportedChSql(f"ASOF ON equality {part.strip()!r} "
-                                       "must relate the two join sides")
-        else:
-            if lts is not None:
-                raise UnsupportedChSql("ASOF JOIN needs exactly one inequality")
-            # normalize to left-side-first: r.ts OP l.ts mirrors to
-            # l.ts OP' r.ts.  CH's four comparators (r11e): >= / >
-            # pick the closest right row at-or-before / strictly
-            # before; <= / < at-or-after / strictly after.
-            mirror = {">=": "<=", "<=": ">=", ">": "<", "<": ">"}
-            if q1 in left_names and q2 in right_names:
-                lts, rts = c1, c2
-            elif q1 in right_names and q2 in left_names:
-                lts, rts, op = c2, c1, mirror[op]
-            else:
-                raise UnsupportedChSql(
-                    f"ASOF inequality {part.strip()!r} must relate "
-                    "the two join sides")
-            direction = "backward" if op in (">=", ">") else "forward"
-            strict = op in (">", "<")
-    if not keys or lts is None:
-        raise UnsupportedChSql(
-            "ASOF JOIN needs at least one equality and exactly one "
-            "inequality in ON"
-        )
-    rts_as_written = rts  # name used for `q.<rts>` references in the body
-    tmap = dict(table_map or {})
+    links = [_link(head, left_names)]
+
     # a side named by an ENCLOSING CTE resolves through the dialect
     # recursively (CH scoping: the CTE shadows any table of the same
     # name).  Candidate clauses: the statement-leading WITH plus any
@@ -8907,6 +8679,31 @@ def _bridge_asof_join(
             if wtok + rel_end <= from_start:
                 with_end = max(with_end, wtok + rel_end)
 
+    # k: the chained links behind the first, while the chain stays
+    # uniform; any doubt about a later link leaves k = 1 and that link
+    # to a later pass, which raises on it by name if it must
+    seen = set(left_names)
+    uniform = not links[0].using and links[0].names.isdisjoint(seen)
+    seen |= links[0].names
+    lkeys = sorted(lk for lk, _ in links[0].keys)
+    while uniform and asof_at.match(sh, links[-1].end):
+        head = _link_head(links[-1].end)
+        try:
+            ln = (_link(head, left_names)
+                  if head is not None and head[4] == "ON" else None)
+        except UnsupportedChSql:
+            ln = None
+        uniform = (ln is not None and ln.lts == links[0].lts
+                   and sorted(lk for lk, _ in ln.keys) == lkeys
+                   and ln.names.isdisjoint(seen))
+        if uniform:
+            links.append(ln)
+            seen |= ln.names
+    # CTE-named sides stay per link (the excision below owns them)
+    if not uniform or any(not s.startswith("(") and s in ctes
+                          for s in [t1] + [ln.src for ln in links]):
+        links = links[:1]
+
     def _no_cte_defs(df: DataFrame) -> DataFrame:
         # Spark's InlineCTE can lose a def ("key not found: N" at
         # optimize time) when an analyzed view plan embedding WithCTE
@@ -8925,6 +8722,8 @@ def _bridge_asof_join(
                 and _spark_inline_cte_bug(spark)):
             return df.localCheckpoint(eager=False)
         return df
+
+    tmap = dict(table_map or {})
 
     def _side(spec: str) -> DataFrame:
         if spec.startswith("("):
@@ -8951,125 +8750,128 @@ def _bridge_asof_join(
                     run_ch_sql(spark, slim, table_map=table_map))
         return _side(spec)
 
-    ldf = _side(t1)
-    rdf = _right_side(t2)
-    for lk, rk in keys:
-        if rk != lk:
-            if rts == rk:
-                rts = lk
-            rdf = rdf.withColumnRenamed(rk, lk)
-    # when the right-ts name is unique to the right side (no left
-    # column or join-key collision, no key-driven rename), keep CH's
-    # OWN column name on the matched-timestamp output: bare references
-    # (`SELECT rv`) then resolve naturally and qualified ones reduce
-    # to it via the qualifier strip below — exactly CH's resolution
-    # of the matched right row's timestamp
-    natural = (rts == rts_as_written
-               and rts_as_written not in ldf.columns
-               and all(rts_as_written != lk for lk, _ in keys))
-    import uuid
+    def _build(chain: list[_AsofLink]):
+        ldf = _side(t1)
+        rights, taken = [], set(ldf.columns)
+        uid = uuid.uuid4().hex[:12]
+        for i, ln in enumerate(chain):
+            rdf = _right_side(ln.src)
+            rts = ln.rts
+            for lk, rk in ln.keys:
+                if rk != lk:
+                    if rts == rk:
+                        rts = lk
+                    rdf = rdf.withColumnRenamed(rk, lk)
+            pay = [c for c in rdf.columns
+                   if c not in [lk for lk, _ in ln.keys] + [rts]]
+            # when the right-ts name is unique to its side (no left or
+            # earlier-payload column, join key, key-driven rename or
+            # other link's ts of that name), keep CH's OWN column name
+            # on the matched-timestamp output: bare references (`SELECT
+            # rv`) then resolve naturally and qualified ones reduce to
+            # it via the qualifier strip — exactly CH's resolution of
+            # the matched right row's timestamp.  Otherwise a PER-PASS-
+            # UNIQUE synthetic name: in a chain, pass 2's left side is
+            # pass 1's view (r13 review).
+            natural = (rts == ln.rts and ln.rts not in taken
+                       and all(ln.rts != lk for lk, _ in ln.keys)
+                       and all(ln.rts != o.rts
+                               for j, o in enumerate(chain) if j != i))
+            out_col = (ln.rts if natural else f"__asof_rts_{uid}"
+                       + (f"_{i}" if len(chain) > 1 else ""))
+            taken |= set(pay) | {out_col}
+            rights.append((rdf, rts, out_col, ln.direction, ln.strict))
+        # one link keys in its ON order; a fold on the sorted keys, as
+        # its links may list the shared keys in any order
+        by = [lk for lk, _ in chain[0].keys]
+        try:
+            joined = asof_join_multi(
+                ldf, rights, by=sorted(by) if len(chain) > 1 else by,
+                left_ts=chain[0].lts)
+        except ValueError as e:
+            raise UnsupportedChSql(
+                f"ASOF JOIN bridge: {e} — alias colliding columns away in "
+                "a subquery, or call operators/asof.asof_join directly"
+            ) from e
+        return joined, uid, [r[2] for r in rights]
 
-    uid = uuid.uuid4().hex[:12]
-    # PER-PASS-UNIQUE synthetic name (r13 review): in a CHAIN, pass
-    # 2's left side is pass 1's view — a shared '__asof_rts' would
-    # collide with the column the view already carries (internal
-    # AMBIGUOUS_REFERENCE on the all-sides-named-`ts` chain)
-    out_col = rts_as_written if natural else f"__asof_rts_{uid}"
     try:
-        joined = asof_join(
-            ldf, rdf, by=[lk for lk, _ in keys],
-            left_ts=lts, right_ts=rts, right_ts_out=out_col,
-            direction=direction, strict=strict,
-        )
-    except ValueError as e:
-        raise UnsupportedChSql(
-            f"ASOF JOIN bridge: {e} — alias colliding columns away in a "
-            "subquery, or call operators/asof.asof_join directly"
-        ) from e
-    from pyspark.sql import functions as F
-
-    if not left_kw:  # CH bare ASOF JOIN is INNER
-        joined = joined.filter(F.col(out_col).isNotNull())
+        joined, uid, out_cols = _build(links)
+    except Exception as e:
+        # a folded chain that fails on shape (payload collisions,
+        # missing tables, nested unsupported constructs) retries link
+        # by link, which raises its own better-worded errors on
+        # genuinely unsupported input; anything else propagates
+        if len(links) == 1 or not (
+                isinstance(e, (ValueError, UnsupportedChSql))
+                or type(e).__name__ == "AnalysisException"):
+            raise
+        links = links[:1]
+        joined, uid, out_cols = _build(links)
+    for ln, out_col in zip(links, out_cols):
+        if not ln.left_kw:  # CH bare ASOF JOIN is INNER
+            joined = joined.filter(F.col(out_col).isNotNull())
     name = f"__ch_asof_{uid}"
-    new_sql = sql[: from_start] + f"FROM {name} " + sql[cond_end:]
+    new_sql = sql[: from_start] + f"FROM {name} " + sql[links[-1].end:]
+
+    def _rewrite(text: str, rx: "re.Pattern[str]", repl) -> tuple[str, int]:
+        """Replace ``rx`` matches with ``repl(after_chain)`` inside the
+        bridged ASOF's own query block.  Side aliases are invisible
+        outside it, and a SIBLING branch may hold another ASOF leg over
+        the same CTE side whose qualifiers belong to the next pass
+        (r13); CTE bodies in the leading WITH prefix keep their own
+        scope (``with_end`` is 0 without a prefix).  ``after_chain``
+        marks a match past a remaining chained ASOF JOIN of the block:
+        the next pass's ON-term contract needs ``x.col OP y.col``
+        there, so those references get qualified with the view."""
+        sh_c = _mask_literals(text)
+        fpos = text.find(f"FROM {name}")
+        blk_a, blk_b = _asof_block_span(sh_c, fpos)
+        depths_c = _depth_map(sh_c)
+        chain_at = next(
+            (blk_a + cm.start() for cm in re.finditer(
+                r"(?is)\bASOF\s+(?:LEFT\s+|INNER\s+)?JOIN\b",
+                sh_c[blk_a:blk_b])
+             if blk_a + cm.start() > fpos
+             and depths_c[blk_a + cm.start()] == depths_c[fpos]), blk_b)
+        out, last, n = [], 0, 0
+        for qm in rx.finditer(sh_c):
+            if qm.start() < with_end or not blk_a <= qm.start() < blk_b:
+                continue
+            out.append(text[last: qm.start()])
+            out.append(repl(qm.start() >= chain_at))
+            last = qm.end()
+            n += 1
+        out.append(text[last:])
+        return "".join(out), n
+
     # CH resolves `<right>.<rts>` in the statement body to the MATCHED
     # right-row timestamp (the left ts would be a silently wrong value
     # when the sides share the name) — point those references at the
     # operator's matched-timestamp output before the qualifiers strip
-    rts_esc = re.escape(rts_as_written)
-    rref = re.compile(
-        r"\b(?:" + "|".join(map(re.escape, sorted(right_names))) + r")\."
-        # bare, backticked, or CH double-quoted spelling (the bridge
-        # runs BEFORE the double-quote → backtick conversion)
-        + rf"(?:{rts_esc}(?![\w`(])|`{rts_esc}`|\"{rts_esc}\")"
-    )
-    sh2 = _mask_literals(new_sql)
-    # both rewrites below are scoped to the bridged ASOF's own query
-    # block: side aliases are invisible outside it, and a SIBLING
-    # branch may hold another ASOF leg over the same CTE side whose
-    # qualifiers belong to the NEXT bridge pass (r13).  Within the
-    # block, references AFTER a remaining (chained) ASOF JOIN are
-    # QUALIFIED with the view name instead of stripped bare — the
-    # next pass's ON-term contract needs `x.col OP y.col` (r13
-    # chained-ASOF support); everything else resolves bare against
-    # the view.
-    def _chain_pos(sh_c: str, fpos: int, a: int, b: int) -> int:
-        depths_c = _depth_map(sh_c)
-        for cm in re.finditer(
-                r"(?is)\bASOF\s+(?:LEFT\s+|INNER\s+)?JOIN\b",
-                sh_c[a:b]):
-            p0 = a + cm.start()
-            if p0 > fpos and depths_c[p0] == depths_c[fpos]:
-                return p0
-        return b
-
-    frompos = new_sql.find(f"FROM {name}")
-    blk_a, blk_b = _asof_block_span(sh2, frompos)
-    chain_at = _chain_pos(sh2, frompos, blk_a, blk_b)
-    out, last, n_rref = [], 0, 0
-    if not natural:
-        for qm in rref.finditer(sh2):
-            # CTE bodies in the leading WITH prefix keep their own
-            # scope — a qualified right-ts reference there is the
-            # CTE's business, not this statement body's (with_end is
-            # 0 without a prefix)
-            if qm.start() < with_end:
-                continue
-            if not blk_a <= qm.start() < blk_b:
-                continue
-            out.append(new_sql[last : qm.start()])
-            out.append(f"{name}.{out_col}" if qm.start() >= chain_at
-                       else out_col)
-            last = qm.end()
-            n_rref += 1
-    out.append(new_sql[last:])
-    new_sql = "".join(out)
-    if not natural and n_rref == 0:
-        joined = joined.drop(out_col)
+    for ln, out_col in zip(links, out_cols):
+        if out_col == ln.rts:
+            continue  # natural name: the strip below resolves it
+        rts_esc = re.escape(ln.rts)
+        rref = re.compile(
+            r"\b(?:" + "|".join(map(re.escape, sorted(ln.names))) + r")\."
+            # bare, backticked, or CH double-quoted spelling (the
+            # bridge runs BEFORE the double-quote → backtick conversion)
+            + rf"(?:{rts_esc}(?![\w`(])|`{rts_esc}`|\"{rts_esc}\")")
+        new_sql, n_rref = _rewrite(
+            new_sql, rref,
+            lambda after, c=out_col: f"{name}.{c}" if after else c)
+        if n_rref == 0:
+            joined = joined.drop(out_col)
     joined.createOrReplaceTempView(name)
     # strip now-dangling side qualifiers (a.x / t1.x → x), literals safe
-    quals = sorted(left_names | right_names, key=len, reverse=True)
+    quals = sorted(left_names.union(*(ln.names for ln in links)),
+                   key=len, reverse=True)
     qre = re.compile(
         r"\b(?:" + "|".join(map(re.escape, quals)) + r")\.(?=[A-Za-z_`\"])"
     )
-    sh2 = _mask_literals(new_sql)
-    # recompute the block span: the rref rewrite above may have
-    # shifted offsets inside the block
-    frompos = new_sql.find(f"FROM {name}")
-    blk_a, blk_b = _asof_block_span(sh2, frompos)
-    chain_at = _chain_pos(sh2, frompos, blk_a, blk_b)
-    out, last = [], 0
-    for qm in qre.finditer(sh2):
-        if qm.start() < with_end:
-            continue  # CTE bodies keep their own qualifiers
-        if not blk_a <= qm.start() < blk_b:
-            continue  # sibling branches keep theirs too (r13)
-        out.append(new_sql[last : qm.start()])
-        if qm.start() >= chain_at:
-            out.append(f"{name}.")  # chained-link ON terms (r13)
-        last = qm.end()
-    out.append(new_sql[last:])
-    new_sql = "".join(out)
+    new_sql, _ = _rewrite(
+        new_sql, qre, lambda after: f"{name}." if after else "")
     # Excise CONSUMED CTE entries (the sides the view replaced) when
     # nothing else references them: leftover unreferenced defs are not
     # just clutter — composed with the view reference they trip a
@@ -9080,7 +8882,7 @@ def _bridge_asof_join(
     # Entry spans precede the ASOF FROM, so the body rewrites above
     # never move them.  A name still referenced anywhere outside the
     # candidate spans keeps its entry.
-    cand = [(nm, *cte_spans[nm]) for nm in {t1, t2}
+    cand = [(nm, *cte_spans[nm]) for nm in {t1, *(ln.src for ln in links)}
             if nm in ctes and nm in cte_spans]
     sh_n = _mask_literals(new_sql)
     cand_spans = [(a, b) for _, a, b in cand]

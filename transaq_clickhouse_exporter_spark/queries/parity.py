@@ -5271,6 +5271,15 @@ _TAIL_NAMES = (
     # oracle-paired and locally gated by the full-catalog sweep in
     # tests/test_parity_catalog.py; if the driver checks all entries
     # the order is irrelevant.
+    #
+    # ONE-AS-OF-JOIN ROTATION (rotation rule: an entry whose operator
+    # code changes sits in the window): operators/asof.asof_join now
+    # runs through asof_join_multi and the ASOF bridge folds k links
+    # in one parser, so op09 (bridge LEFT path) and op14 (the multi
+    # operator) move INTO the window.  Displaced, both pure DataFrame
+    # operators this change does not touch: dp11_rolling_fingerprint
+    # (near-dup class keeps dp05/dp06/dp16/dp23 in-window) and
+    # dp27_weighted_sample (sampling class keeps dp07 in-window).
     "an01_vwap",
     "an05_rolling_channel",
     "an06_ema",
@@ -5316,8 +5325,8 @@ _TAIL_NAMES = (
     "op05_range_join",
     "op06_scd2_history",
     "op07_aggregating_states",
-    "op09_asof_left_bridge",
-    "op14_asof_multi_single_shuffle",
+    "dp11_rolling_fingerprint",
+    "dp27_weighted_sample",
     "tp01_pricing_summary",
     "tp05_rollup_grouping",
     "tp07_hll_distinct",
