@@ -1633,3 +1633,106 @@ def test_scanner_helpers():
         "a", "'b,''c'", "`d,e`", "f(g, h)"]
     assert _sub_masked(r"\bx\b", lambda m: m.group(0).upper(),
                        "x + 'x' + x") == "X + 'x' + X"
+
+
+@pytest.mark.parametrize("ch, spark_sql", [
+    ("SELECT a FROM t WHERE a IN []", "SELECT a FROM t WHERE false"),
+    ("SELECT a FROM t WHERE b > 1 AND a NOT IN [] AND c IN [1]",
+     "SELECT a FROM t WHERE b > 1 AND true AND c IN (1)"),
+    ("SELECT lower(a) IN [ ] AS f, (a, b) NOT IN [] AS g FROM t",
+     "SELECT false AS f, true AS g FROM t"),
+    ("SELECT a FROM t WHERE NOT a IN [] OR a GLOBAL NOT IN []",
+     "SELECT a FROM t WHERE NOT false OR true"),
+    ("SELECT if(a IN [], 1, 2) FROM t WHERE a IN ['[]']",
+     "SELECT if(false, 1, 2) FROM t WHERE a IN ('[]')"),
+    # the operand ends at the clause keyword or lambda arrow before it
+    ("SELECT a FROM t WHERE a > 1 ORDER BY code IN []",
+     "SELECT a FROM t WHERE a > 1 ORDER BY false NULLS LAST"),
+    ("SELECT a FROM t ORDER BY code IN []", "SELECT a FROM t ORDER BY false NULLS LAST"),
+    ("SELECT count() FROM t GROUP BY code NOT IN []",
+     "SELECT count(*) FROM t GROUP BY true"),
+    ("SELECT DISTINCT code IN [] FROM t", "SELECT DISTINCT false FROM t"),
+    ("SELECT arrayFilter(v -> v IN [], arr) FROM t", "SELECT filter(arr, v -> false) FROM t"),
+    ("SELECT arrayExists((v) -> v NOT IN [], arr) FROM t",
+     "SELECT exists(arr, (v) -> true) FROM t"),
+])
+def test_translate_empty_in_list(ch, spark_sql):
+    """An empty multi-value variable substitutes to ``IN []``: ClickHouse
+    reads it as the empty set (``IN`` false, ``NOT IN`` true), and
+    Spark has no ``IN ()``."""
+    assert translate_ch_sql(ch) == spark_sql
+
+
+def test_substitute_empty_variable_translates():
+    sql = substitute("SELECT count() FROM t WHERE code NOT IN [$etf]", {"etf": []})
+    assert translate_ch_sql(sql) == "SELECT count(*) FROM t WHERE true"
+
+
+def test_topk_group_by_select_alias_preaggregates():
+    sql = ("SELECT toStartOfInterval(time, INTERVAL 5 MINUTE) AS t, topK(10)(sec_code) AS top"
+           " FROM trades GROUP BY t ORDER BY t")
+    out = translate_ch_sql(sql, strict_scale=True)
+    assert "__tkpre" in out
+    assert "GROUP BY toStartOfInterval(time, INTERVAL 5 MINUTE), __tk_v" in out
+    # an alias shadowing a column its own expression reads stays on the
+    # expansion: GROUP BY would otherwise switch meaning
+    with pytest.raises(UnsupportedChSql):
+        translate_ch_sql("SELECT lower(code) AS code, topK(3)(b) AS top FROM t GROUP BY code",
+                         strict_scale=True)
+
+
+class _Columns:
+    """Stand-in session: ``table(v).columns`` for three joinable views."""
+
+    views = {"a": ["k", "board", "x"], "b": ["k", "board", "y"], "c": ["k", "z"]}
+
+    def table(self, name):
+        return type("T", (), {"columns": self.views[name]})
+
+
+@pytest.mark.parametrize("text, want", [
+    # a column on both sides resolves to the LEFT relation, everywhere in the block
+    ("SELECT board FROM a JOIN b s ON (k = s.k AND board = s.board) WHERE board = 'X'",
+     "SELECT a.board FROM a JOIN b s ON (a.k = s.k AND a.board = s.board) WHERE a.board = 'X'"),
+    # leftmost of a chain; an alias is the qualifier; USING keys stay bare
+    ("SELECT k FROM a LEFT JOIN b ON a.k = b.k JOIN c ON c.k = a.k",
+     "SELECT a.k FROM a LEFT JOIN b ON a.k = b.k JOIN c ON c.k = a.k"),
+    ("SELECT board, k FROM a t JOIN b USING (k)", "SELECT t.board, k FROM a t JOIN b USING (k)"),
+    # each block on its own: the nested subquery and the UNION branch
+    ("SELECT board FROM a JOIN b ON a.k = b.k WHERE k IN (SELECT k FROM c) UNION ALL SELECT board FROM a",
+     "SELECT a.board FROM a JOIN b ON a.k = b.k WHERE a.k IN (SELECT k FROM c) UNION ALL SELECT board FROM a"),
+    # left to the analysis-time retry: a subquery side, a CTE name
+    ("SELECT board FROM a JOIN (SELECT * FROM b) s ON a.k = s.k", None),
+    ("WITH a AS (SELECT 1 AS board, 1 AS k) SELECT board FROM a JOIN b ON a.k = b.k", None),
+    # names the block defines: an alias with or without AS, lambda parameters
+    ("SELECT s.board AS board FROM a JOIN b s ON a.k = s.k ORDER BY board", None),
+    ("SELECT s.board board FROM a JOIN b s ON a.k = s.k ORDER BY board", None),
+    ("SELECT count(*) k FROM a JOIN b s ON a.k = s.k GROUP BY s.board", None),
+    ("SELECT arrayMap(board -> board, [a.x]) FROM a JOIN b s ON a.k = s.k", None),
+    ("SELECT arrayMap((k, y) -> k, [a.x], [s.y]) FROM a JOIN b s ON a.k = s.k", None),
+])
+def test_qualify_join_columns(text, want):
+    from transaq_clickhouse_exporter_spark.queries.ch_compat import _qualify_join_columns
+
+    assert _qualify_join_columns(_Columns(), text) == (want or text)
+
+
+@pytest.mark.parametrize("text, error, want", [
+    # the leftmost relation among the ones Spark lists as holding the column
+    ("SELECT y FROM a JOIN (SELECT k, y FROM b) s ON a.k = s.k JOIN (SELECT k, y FROM c) u ON s.k = u.k",
+     "[AMBIGUOUS_REFERENCE] Reference `y` is ambiguous, could be: [`s`.`y`, `u`.`y`].",
+     "SELECT s.y FROM a JOIN (SELECT k, y FROM b) s ON a.k = s.k JOIN (SELECT k, y FROM c) u ON s.k = u.k"),
+    ("SELECT board FROM t JOIN (SELECT board, k FROM b) s ON t.k = s.k",
+     "Reference `board` is ambiguous, could be: [`s`.`board`, `spark_catalog`.`default`.`t`.`board`].",
+     "SELECT t.board FROM t JOIN (SELECT board, k FROM b) s ON t.k = s.k"),
+    # another error, or no joining block names a holder: not retried
+    ("SELECT y FROM a JOIN b ON a.k = b.k", "[TABLE_OR_VIEW_NOT_FOUND] ...", None),
+    ("SELECT y FROM a JOIN b ON a.k = b.k",
+     "Reference `y` is ambiguous, could be: [`x`.`y`, `z`.`y`].", None),
+    ("SELECT y y FROM a JOIN b ON a.k = b.k",
+     "Reference `y` is ambiguous, could be: [`a`.`y`, `b`.`y`].", None),
+])
+def test_qualify_reported(text, error, want):
+    from transaq_clickhouse_exporter_spark.queries.ch_compat import _qualify_reported
+
+    assert _qualify_reported(text, error) == want

@@ -4,6 +4,7 @@ without total sort, and the approx-top-k sketch."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from transaq_clickhouse_exporter_spark import storage
@@ -394,8 +395,54 @@ def test_final_snapshot_size_guard_falls_back(spark, tmp_path, monkeypatch):
     nodes = _plan_nodes(df)
     assert "InMemoryTableScan" not in nodes  # nor the old snapshot's cache
     assert any(n.startswith("Window") for n in nodes)
+    assert not any(n.startswith("Coalesce") for n in nodes)  # sized only when persisted
     new = {r.trade_no: r.price for r in df.collect()}
     assert all(new[k] == old[k] + (1 if k % 10 == 0 else 0) for k in old)
+
+
+def test_final_snapshot_small_is_one_partition(spark, tmp_path):
+    """A snapshot far below AQE's advisory partition size is one
+    partition, so a GROUP BY … ORDER BY panel over it plans no Exchange."""
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 900), path, "transaq_trades")
+    storage.write_table(_with_reversions(spark, 900), path, "transaq_trades")
+    snap = storage.read_table_range(spark, path, "transaq_trades", *DAY)
+    assert snap.is_cached
+    assert snap.rdd.getNumPartitions() == 1
+    snap.createOrReplaceTempView("snap_trades")
+    panel = spark.sql(
+        "SELECT sec_code, count(*) AS n FROM snap_trades GROUP BY sec_code ORDER BY sec_code")
+    rows = panel.collect()
+    nodes = _plan_nodes(panel)
+    assert "InMemoryTableScan" in nodes
+    assert not [n for n in nodes if "Exchange" in n]
+    assert [r.sec_code for r in rows] == sorted(r.sec_code for r in rows)
+    assert sum(r.n for r in rows) == snap.count()
+
+
+@pytest.mark.parametrize("limit", ["advisory", "cap"])
+def test_final_snapshot_above_one_partition_limit(spark, tmp_path, monkeypatch, limit):
+    """A snapshot larger than ``advisoryPartitionSizeInBytes`` (lowered
+    at runtime) or than the one-partition cap keeps the dedup shuffle's
+    partitions, with the same rows."""
+    path = str(tmp_path / "trades")
+    storage.write_table(_trades_df(spark, 900), path, "transaq_trades")
+    storage.write_table(_with_reversions(spark, 900), path, "transaq_trades")
+    expected = _rows(storage.read_table_range(spark, path, "transaq_trades"))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    if limit == "advisory":
+        spark.conf.set(key, "1k")
+    else:
+        monkeypatch.setattr(storage, "_ONE_PARTITION_MAX_BYTES", 1024)
+    try:
+        snap = storage.read_table_range(spark, path, "transaq_trades")
+        assert snap.is_cached
+        assert snap.rdd.getNumPartitions() > 1
+        assert _rows(snap) == expected
+    finally:
+        spark.conf.set(key, old)
+    assert len(expected) == 900
 
 
 def test_final_snapshot_concurrent_readers(spark, tmp_path):

@@ -3758,7 +3758,17 @@ def _rewrite_topk_block(sql: str, sh: str, depths: list[int],
     if re.search(r"(?i)\bOVER\s*\(", _mask_literals(select_text)):
         raise _TopkFallback("window function in the SELECT list")
 
-    # group keys
+    items = [_split_item_alias(it)
+             for it in _split_args(select_text)]
+
+    # group keys; a key naming a SELECT alias groups by the aliased
+    # expression (ClickHouse resolves aliases before columns), unless
+    # the alias shadows a column its own expression reads
+    item_exprs = {
+        alias.strip("`"): expr for expr, alias in items
+        if alias is not None and not _scan_agg_calls(expr)
+        and not re.search(rf"(?<![\w.`]){re.escape(alias.strip('`'))}(?!\w)", expr)
+    }
     keys: list[tuple[str, str]] = []  # (raw text, __gk alias)
     if group_text:
         if re.search(r"(?i)\b(ROLLUP|CUBE|GROUPING\s+SETS)\b", group_text):
@@ -3766,11 +3776,8 @@ def _rewrite_topk_block(sql: str, sh: str, depths: list[int],
         for g in _split_args(group_text):
             if re.match(r"^\d+$", g):
                 raise _TopkFallback("positional GROUP BY")
-            keys.append((g, f"__gk{len(keys)}"))
+            keys.append((item_exprs.get(g.strip("`"), g), f"__gk{len(keys)}"))
     norm_keys = {_norm_expr(r): a for r, a in keys}
-
-    items = [_split_item_alias(it)
-             for it in _split_args(select_text)]
 
     # collect topK signature + partials over SELECT + HAVING + ORDER BY
     topk_x: str | None = None
@@ -4991,17 +4998,47 @@ def _apply_table_map(sql: str, table_map: Mapping[str, str]) -> str:
     return sql
 
 
+def _operand_start(sh: str, depths: list[int], pos: int) -> int:
+    """Start of the left operand of the predicate whose operator begins
+    at ``pos``: the first word after a same-depth clause keyword or
+    boolean connective (:data:`_OPERAND_STOP`), comma, lambda arrow or
+    enclosing ``(``."""
+    d0, i = depths[pos], pos - 1
+    while i >= 0:
+        if depths[i] < d0 or (depths[i] == d0 and (
+                sh[i] == "," or sh[i - 1: i + 1] == "->")):
+            break
+        if (depths[i] == d0 and (sh[i].isalnum() or sh[i] == "_")
+                and (i == 0 or not (sh[i - 1].isalnum() or sh[i - 1] in "_`"))):
+            m = re.match(r"\w+", sh[i:])
+            if m.group(0).lower() in _OPERAND_STOP:
+                i += m.end() - 1
+                break
+        i -= 1
+    return len(sh) - len(sh[i + 1:].lstrip())
+
+
 def _brackets_to_parens(sql: str) -> str:
-    """CH ``IN [a, b]`` / ``NOT IN [a, b]`` → parenthesized lists."""
+    """CH ``IN [a, b]`` / ``NOT IN [a, b]`` → parenthesized lists.  An
+    empty list (a multi-value template variable with no values) is
+    ClickHouse's empty-set membership: ``x IN []`` is ``false`` and
+    ``x NOT IN []`` is ``true``, whatever ``x`` holds."""
     while True:
-        m = re.search(r"(?i)\bIN\s*\[", _mask_idents(_mask_literals(sql)))
+        sh = _mask_idents(_mask_literals(sql))
+        m = re.search(r"(?i)\bIN\s*\[", sh)
         if not m:
             return sql
         o = m.end() - 1
         close = _find_partner(sql, o)
         if close < 0:
             raise UnsupportedChSql("unbalanced brackets in IN [...]")
-        sql = sql[:o] + "(" + sql[o + 1: close] + ")" + sql[close + 1:]
+        if sql[o + 1: close].strip():
+            sql = sql[:o] + "(" + sql[o + 1: close] + ")" + sql[close + 1:]
+            continue
+        neg = re.search(r"(?i)\bNOT\s+$", sh[: m.start()])
+        op = neg.start() if neg else m.start()
+        start = _operand_start(sh, _depth_map(sh), op)
+        sql = sql[:start] + ("true" if neg else "false") + sql[close + 1:]
 
 
 #: words whose trailing position marks an EXPRESSION context — a `[`
@@ -5011,6 +5048,14 @@ _BRACKET_KEYWORDS = frozenset(
     "ilike rlike regexp between is union all distinct case from values "
     "limit offset group order join using interval return".split()
 )
+
+#: words a predicate's left operand cannot extend past, scanning back
+#: from its ``IN``: the clause keywords and connectives above, without
+#: the operators that can sit inside the operand, plus the clauses only
+#: a condition opens
+_OPERAND_STOP = (_BRACKET_KEYWORDS - frozenset(
+    "in is like ilike rlike regexp between interval case".split())
+) | frozenset(["prewhere", "qualify"])
 
 
 def _bracket_expressions(sql: str) -> str:
@@ -9390,6 +9435,164 @@ def _star_apply_columns(
     return sql
 
 
+_JOIN_KW_RX = re.compile(
+    r"(?i)\b(?:(?:NATURAL|LEFT|RIGHT|FULL|INNER|CROSS|OUTER|SEMI|ANTI)\s+)*JOIN\b")
+_JOIN_REL_RX = re.compile(
+    r"(?is)\s*([A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?\s*"
+    r"(?:USING\s*\(([^()]*)\)\s*$|ON\b|$)")
+_JOIN_SUB_RX = re.compile(
+    r"(?is)\s*(?:AS\s+)?([A-Za-z_]\w*)\s*(?:USING\s*\(([^()]*)\)\s*$|ON\b|$)")
+_SUBQUERY_RX = re.compile(r"(?i)\((?=\s*(?:SELECT|WITH)\b)")
+#: ``AS name``, ``x ->`` and ``(x, y) ->``
+_DEFINED_NAME_RX = re.compile(
+    r"(?i)\bAS\s+(\w+)|(?<![\w.`])(\w+)\s*->|\(([\w\s,]*)\)\s*->")
+#: a SELECT item ending in an alias without AS: ``expr name``, where
+#: ``expr`` ends in a word, a closing bracket or a literal
+_IMPLICIT_ALIAS_RX = re.compile(r"(\w+|[)\]'`])\s+([A-Za-z_]\w*)\s*$")
+
+
+class _JoinBlock(NamedTuple):
+    start: int
+    end: int
+    #: the FROM clause's relations, left to right: (qualifier, table or
+    #: view name as written, None for a subquery); None when the clause
+    #: is not a plain chain of JOINs
+    rels: list[tuple[str, str | None]] | None
+    #: names the block itself defines: relation names and aliases,
+    #: USING columns, column aliases with or without AS, lambda
+    #: parameters (lowercased)
+    defined: set[str]
+
+
+def _join_blocks(sh: str, depths: list[int], text: str) -> list[_JoinBlock]:
+    """Every query block of the masked statement ``sh`` whose FROM
+    clause joins (``text`` is the unmasked statement)."""
+    out: list[_JoinBlock] = []
+    for sel in re.finditer(r"(?i)(?<![\w`])SELECT\b", sh):
+        bs = sel.start()
+        be = _block_end(sh, depths, bs)
+        cl = _block_clauses(sh, depths, bs, be)
+        if "FROM" not in cl or not _JOIN_KW_RX.search(sh, cl["FROM"][1], be):
+            continue
+        d0 = depths[bs]
+        f_end = min([cl[k][0] for k in cl if cl[k][0] > cl["FROM"][0]] + [be])
+        cuts = [cl["FROM"][1]]
+        for m in _JOIN_KW_RX.finditer(sh, cl["FROM"][1], f_end):
+            if depths[m.start()] == d0:
+                cuts += [m.start(), m.end()]
+        cuts.append(f_end)
+        rels: list[tuple[str, str | None]] | None = []
+        defined: set[str] = set()
+        for a, b in zip(cuts[::2], cuts[1::2]):
+            lead = a + len(sh[a:b]) - len(sh[a:b].lstrip())
+            if sh.startswith("(", lead):
+                close = _find_partner(sh, lead)
+                m = _JOIN_SUB_RX.match(sh, close + 1, b) if lead < close < b else None
+                rel, qual = None, m and m.group(1)
+            else:
+                m = _JOIN_REL_RX.match(sh, a, b)
+                rel = m and text[m.start(1): m.end(1)]
+                qual = m and (m.group(2) or rel)
+            if m is None or qual.lower() in _BRACKET_KEYWORDS:
+                rels = None
+                break
+            defined |= {qual.lower(), (rel or qual).lower()}
+            using = m.group(3 if rel is not None else 2)
+            defined |= {c.strip().lower() for c in (using or "").split(",")}
+            rels.append((qual, rel))
+        defined |= {w.lower() for m in _DEFINED_NAME_RX.finditer(sh, bs, be)
+                    for w in re.findall(r"\w+", m.group(1) or m.group(2) or m.group(3))}
+        for item in _split_args(sh[sel.end():cl["FROM"][0]]):
+            m = _IMPLICIT_ALIAS_RX.search(item)
+            if m and m.group(1).lower() not in ("select", "distinct", "all"):
+                defined.add(m.group(2).lower())
+        out.append(_JoinBlock(bs, be, rels, defined))
+    return out
+
+
+def _qualify_refs(sh: str, block: _JoinBlock, col: str, qual: str) -> list[tuple[int, int, str]]:
+    """Edits turning the block's bare references to ``col`` into
+    ``qual.col``; none when the block defines the name itself.  Nested
+    subqueries scope their own columns and are left alone."""
+    if col.lower() in block.defined:
+        return []
+    skip = [(o.start(), _find_partner(sh, o.start()))
+            for o in _SUBQUERY_RX.finditer(sh, block.start, block.end)]
+    ref = re.compile(rf"(?<![\w.`]){re.escape(col)}(?![\w.`(])")
+    return [(m.start(), m.end(), f"{qual}.{col}")
+            for m in ref.finditer(sh, block.start, block.end)
+            if not any(a < m.start() < b for a, b in skip)]
+
+
+def _apply_edits(text: str, edits: list[tuple[int, int, str]]) -> str:
+    for a, b, rep in sorted(edits, reverse=True):
+        text = text[:a] + rep + text[b:]
+    return text
+
+
+def _qualify_join_columns(spark: SparkSession, text: str) -> str:
+    """ClickHouse resolves an unqualified column that exists on several
+    sides of a join to the LEFTMOST relation holding it; Spark raises
+    ``AMBIGUOUS_REFERENCE``.  Qualify such references up front, per
+    query block, from the joined views' own columns.
+
+    A block is resolved only when every relation of its FROM clause is
+    a plain view or table (no subquery, comma join, CTE name or
+    unparsed clause); a name the block defines itself is left alone.
+    Spark then still raises for what is left, and :func:`run_ch_sql`
+    qualifies it by :func:`_qualify_reported`."""
+    sh = _mask_idents(_mask_literals(text))
+    ctes = {m.group(1).lower() for m in re.finditer(
+        r"(?i)(?:\bWITH|,)\s*([A-Za-z_]\w*)\s+AS\s*\(", sh)}
+    columns: dict[str, list[str] | None] = {}
+    edits: list[tuple[int, int, str]] = []
+    for block in _join_blocks(sh, _depth_map(sh), text):
+        if block.rels is None or any(
+                rel is None or rel.lower() in ctes for _, rel in block.rels):
+            continue
+        for _, rel in block.rels:
+            if rel not in columns:
+                try:
+                    columns[rel] = list(spark.table(rel).columns)
+                except Exception:
+                    columns[rel] = None
+        if any(columns[rel] is None for _, rel in block.rels):
+            continue
+        seen: dict[str, str] = {}  # column → leftmost qualifier
+        shared: dict[str, str] = {}
+        for qual, rel in block.rels:
+            for c in columns[rel]:
+                if c in seen:
+                    shared[c] = seen[c]
+                seen.setdefault(c, qual)
+        for col, qual in shared.items():
+            edits += _qualify_refs(sh, block, col, qual)
+    return _apply_edits(text, edits)
+
+
+def _qualify_reported(text: str, error: str) -> str | None:
+    """The statement with the column of Spark's ``AMBIGUOUS_REFERENCE``
+    ``error`` qualified, in each joining block, by the leftmost of its
+    relations that Spark lists as holding it: the rule of
+    :func:`_qualify_join_columns`, for relations whose columns are only
+    known once Spark analyzes them (subqueries, CTEs).  None when the
+    error is another one or nothing could be qualified."""
+    m = re.search(r"Reference `([^`]+)` is ambiguous, could be: \[(.*?)\]", error)
+    if not m:
+        return None
+    col = m.group(1)
+    # each candidate is `qualifier`...`.`col`; its last qualifier part
+    # is how the statement names the relation
+    holders = {c.lower() for c in re.findall(r"`([^`]+)`\.`[^`]+`(?:,|$)", m.group(2))}
+    sh = _mask_idents(_mask_literals(text))
+    edits: list[tuple[int, int, str]] = []
+    for block in _join_blocks(sh, _depth_map(sh), text):
+        qual = next((q for q, _ in block.rels or () if q.lower() in holders), None)
+        if qual is not None:
+            edits += _qualify_refs(sh, block, col, qual)
+    return _apply_edits(text, edits) if edits else None
+
+
 def run_ch_sql(
     spark: SparkSession,
     sql: str,
@@ -9438,27 +9641,21 @@ def run_ch_sql(
             for m in re.finditer(r"\b([A-Za-z_]\w*)\s*\(",
                                  _mask_literals(text))
         })
-        # CH resolves an unqualified column that exists on both join
-        # sides to the LEFT table; Spark raises AMBIGUOUS_REFERENCE.
-        # Emulate the CH rule by qualifying the reported column with
-        # the first FROM relation and retrying (the reference's panels
-        # rely on this for `board` in trades⋈securities WHERE clauses).
-
+        # CH resolves an unqualified column that exists on several join
+        # sides to the LEFTMOST relation holding it; Spark raises
+        # AMBIGUOUS_REFERENCE.  Plain-view joins are qualified before
+        # the first analysis (the reference's panels rely on this for
+        # `board` in trades⋈securities WHERE clauses); a column of a
+        # subquery or CTE side is qualified from the error, by the same
+        # rule, and the statement retried.
+        text = _qualify_join_columns(spark, text)
         for _ in range(5):
             try:
                 out = spark.sql(text)
                 return _with_fill_apply(out, fill_spec) if fill_spec else out
             except Exception as e:
-                m = re.search(r"Reference `([^`]+)` is ambiguous", str(e))
-                lm = re.search(r"(?is)\bFROM\s+([a-z_]\w*)\b", text)
-                if not m or not lm:
-                    raise
-                col, left = m.group(1), lm.group(1)
-                fixed = _sub_masked(
-                    re.compile(rf"(?<![\w.`]){re.escape(col)}(?![\w.`(])"),
-                    f"{left}.{col}", text,
-                )
-                if fixed == text:
+                fixed = _qualify_reported(text, str(e))
+                if fixed is None or fixed == text:
                     raise
                 text = fixed
         out = spark.sql(text)
