@@ -31,6 +31,7 @@ import hashlib
 import itertools
 import json
 import os
+import re
 import sys
 import uuid
 import warnings
@@ -161,6 +162,32 @@ def test_probe_corpus_translations_unchanged():
         print(f"--- translation changed:\n{sql}\n  want {want[k]}"
               f"\n  got  {got[k]}")
     assert not bad, f"{len(bad)} of {len(want)} translations changed"
+
+
+def test_every_registry_name_is_a_golden_call():
+    """Each call-registry entry is pinned: its name is called in some
+    golden input (in any casing for a case-insensitive entry)."""
+    called = {m.group(1) for sql in golden_inputs()
+              for m in re.finditer(r"([A-Za-z_]\w*)\s*\(", sql)}
+    lowered = {name.lower() for name in called}
+    missing = ([n for n in ch_compat._CALLS if n not in called]
+               + [n for n in ch_compat._CALLS_CI if n not in lowered])
+    assert not missing, f"no golden input calls {sorted(missing)}"
+
+
+def test_registry_refuses_a_second_claim():
+    """A name is claimed once: again exactly, in a casing that a
+    case-insensitive entry matches, or as a -State/-Merge spelling."""
+    before = (dict(ch_compat._CALLS), dict(ch_compat._CALLS_CI))
+    for name, ci in (("sumIf", False), ("sumIF", True), ("ROUND", False),
+                     ("Round", True), ("sumState", False),
+                     ("uniqmerge", True)):
+        try:
+            ch_compat._register(name, lambda call: None, ci=ci)
+        except ValueError:
+            continue
+        raise AssertionError(f"{name!r} (ci={ci}) registered twice")
+    assert (ch_compat._CALLS, ch_compat._CALLS_CI) == before
 
 
 if __name__ == "__main__":

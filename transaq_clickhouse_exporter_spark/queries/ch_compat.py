@@ -116,6 +116,26 @@ Regex scans read a same-length shadow: ``_mask_literals`` blanks
 literal content, ``_mask_idents`` blanks identifier content as well;
 ``_depth_map`` gives a per-character paren depth that ignores both.
 
+Call registry (``_rewrite_calls``): one scan finds every ``name(…)``
+call, innermost first, and hands it to the one handler registered for
+``name``.  Mapping a ClickHouse function is one registration:
+
+    @_calls("fooBar")
+    def _foo_bar(call: _Call) -> str | None: ...
+
+- Names match exactly, as ClickHouse matches most of its names;
+  ``@_calls(…, ci=True)`` matches any casing, for the ones ClickHouse
+  registers case-insensitively (``count``, ``any``, ``position``,
+  ``round``, ``cast``, ``extract``, the ``dateDiff`` spellings …).
+- A handler returns the Spark text, raises ``UnsupportedChSql`` to
+  refuse, or returns None to keep the call as written.  ``call.parts``
+  splits the arguments; ``call.has_params`` and ``call.args()`` read
+  the ``name(params)(args)`` form.
+- The name tables (``_RENAMES``, ``_IF_AGGS``, ``_UNSUPPORTED`` …)
+  register each of their names the same way.  Claiming a name twice
+  raises at import, so no entry can shadow another; a ``-State`` /
+  ``-Merge`` spelling that no entry claims is refused by pattern.
+
 Documented deviations from ClickHouse (each also noted at its shim):
 
 - ``toDate(N)`` for a NUMERIC argument that spells a valid yyyyMMdd
@@ -1318,8 +1338,6 @@ _RENAMES = {
     # CH argMax/argMin(ret, by) == Spark max_by/min_by (same arg order)
     "argMax": "max_by",
     "argMin": "min_by",
-    "groupArray": "collect_list",
-    "groupUniqArray": "collect_set",
     # CH arrayJoin expands rows; Spark's explode is the generator
     # equivalent.  Valid only where Spark allows a generator (top-level
     # SELECT item / LATERAL VIEW) — elsewhere Spark raises its own
@@ -1333,15 +1351,12 @@ _RENAMES = {
     "arrayElement": "element_at",
     "arrayStringConcat": "array_join",
     "arrayDistinct": "array_distinct",
-    "arraySort": "array_sort",
     "arrayConcat": "concat",
     "ifNull": "ifnull",
     "lcase": "lower",
     "ucase": "upper",
     # round-8 everyday surface (same arity + arg order on both engines)
     "arrayReverse": "reverse",
-    "arrayMax": "array_max",
-    "arrayMin": "array_min",
     "arraySlice": "slice",
     # NOT mapped: arrayFlatten — CH flattens ALL nesting depths, Spark
     # flatten removes exactly one level; left unmapped (loud
@@ -6272,10 +6287,118 @@ def _age_expr(args: list[str]) -> str:
     raise UnsupportedChSql(f"age unit {unit!r} not supported")
 
 
+# ---- the call registry -------------------------------------------------
+# `_rewrite_calls` is one scan; what each ClickHouse function becomes is
+# decided by the one handler registered for its name.  See "Call
+# registry" in the module docstring.
+
+_IDENT_RX = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+class _Call:
+    """One ``name(…)`` call found by :func:`_rewrite_calls`.
+
+    ``inner`` is the argument text with its nested calls already
+    rewritten; ``gap`` is the original spacing between the name and
+    its ``(``.  ``end`` is where the scan resumes: a handler that also
+    consumes text after the call's ``)`` (the second group of the
+    ``name(params)(args)`` form, an ``OVER (…)`` clause) moves it."""
+
+    __slots__ = ("sql", "name", "start", "gap", "close", "inner", "end")
+
+    def __init__(self, sql: str, name: str, start: int, gap: str,
+                 close: int, inner: str):
+        self.sql, self.name, self.start, self.gap = sql, name, start, gap
+        self.close, self.inner, self.end = close, inner, close + 1
+
+    @property
+    def parts(self) -> list[str]:
+        """``inner`` split on its top-level commas (a fresh list)."""
+        return _split_args(self.inner)
+
+    def after(self) -> int:
+        """Index of the first non-blank character after the call's
+        ``)`` (``len(sql)`` when there is none)."""
+        k = self.close + 1
+        while k < len(self.sql) and self.sql[k] in " \t\n":
+            k += 1
+        return k
+
+    @property
+    def has_params(self) -> bool:
+        """Whether a second ``(…)`` group follows: ``inner`` is then
+        the params of a ``name(params)(args)`` call."""
+        k = self.after()
+        return self.sql[k:k + 1] == "("
+
+    def args(self) -> list[str]:
+        """The rewritten, split second group of a ``(params)(args)``
+        call; the scan resumes after it."""
+        k = self.after()
+        close = _find_close(self.sql, k)
+        self.end = close + 1
+        return _split_args(_rewrite_calls(self.sql[k + 1: close]))
+
+    def plain(self, name: str | None = None) -> str:
+        """The call as written, or renamed to ``name``."""
+        return f"{name or self.name}{self.gap}({self.inner})"
+
+
+#: name → handler; ``_CALLS_CI`` is keyed by the lower-cased name of
+#: the entries ClickHouse registers case-insensitively
+_CALLS: dict[str, Callable[[_Call], "str | None"]] = {}
+_CALLS_CI: dict[str, Callable[[_Call], "str | None"]] = {}
+
+
+def _register(name: str, handler: Callable[[_Call], "str | None"],
+              ci: bool = False) -> None:
+    """Claim ``name`` for ``handler``.  A name claimed twice — in any
+    casing that the two entries' case rules both match, or by a
+    ``-State``/``-Merge`` spelling the refusal below takes first —
+    raises, so no entry can shadow another."""
+    low = name.lower()
+    if (name in _CALLS or low in _CALLS_CI
+            or (ci and any(k.lower() == low for k in _CALLS))
+            or re.match(_STATE_COMBINATOR_RX, name, re.I if ci else 0)):
+        raise ValueError(f"call registry: {name!r} is already claimed")
+    if ci:
+        _CALLS_CI[low] = handler
+    else:
+        _CALLS[name] = handler
+
+
+def _calls(*names: str, ci: bool = False):
+    """Decorator: register the handler for each of ``names``, matched
+    case-insensitively when ``ci``."""
+    def deco(handler):
+        for name in names:
+            _register(name, handler, ci)
+        return handler
+    return deco
+
+
+def _refuse_state_combinator(call: _Call) -> None:
+    raise UnsupportedChSql(
+        f"{call.name}(): -State/-Merge partial-aggregation sketches "
+        "are AggregatingMergeTree machinery — this engine's "
+        "equivalent is operators/aggregating.py (persisted "
+        "per-batch partials, re-merged on read)")
+
+
+def _call_handler(name: str) -> Callable[[_Call], "str | None"] | None:
+    """The registry entry for a call of ``name``, if any."""
+    handler = _CALLS.get(name) or _CALLS_CI.get(name.lower())
+    if handler is None and re.match(_STATE_COMBINATOR_RX, name):
+        return _refuse_state_combinator
+    return handler
+
+
 def _rewrite_calls(sql: str) -> str:
+    """Rewrite every call in ``sql``, innermost first, through its
+    registry entry; quoted spans are copied verbatim, and a call with
+    no entry (or whose handler returns None) is kept as written."""
     out = []
     i, n = 0, len(sql)
-    ident = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
     while i < n:
         c = sql[i]
         if c in "'`":  # copy quoted spans verbatim
@@ -6284,1854 +6407,1837 @@ def _rewrite_calls(sql: str) -> str:
             out.append(sql[i:j])
             i = j
             continue
-        m = ident.match(sql, i)
+        m = _IDENT_RX.match(sql, i)
         if not m:
             out.append(c)
             i += 1
             continue
-        name = m.group(0)
-        j = m.end()
-        # look ahead for a call
-        k = j
+        j = k = m.end()
         while k < n and sql[k] in " \t\n":
             k += 1
         if k >= n or sql[k] != "(":
-            out.append(name)
+            out.append(m.group(0))
             i = j
             continue
         close = _find_close(sql, k)
-        inner = _rewrite_calls(sql[k + 1 : close])
-        # parameterized form: name(params)(args)?
-        k2 = close + 1
-        while k2 < n and sql[k2] in " \t\n":
-            k2 += 1
-        has_second = k2 < n and sql[k2] == "("
-        if name in _UNSUPPORTED:
-            raise UnsupportedChSql(
-                f"{name}() has no faithful SQL mapping here — use the "
-                f"DataFrame operator (see functions/ and datapipe/)"
-            )
-        if name in _UNSUPPORTED_MSG:
-            raise UnsupportedChSql(_UNSUPPORTED_MSG[name])
-        if re.match(_STATE_COMBINATOR_RX, name):
-            raise UnsupportedChSql(
-                f"{name}(): -State/-Merge partial-aggregation sketches "
-                "are AggregatingMergeTree machinery — this engine's "
-                "equivalent is operators/aggregating.py (persisted "
-                "per-batch partials, re-merged on read)")
-        if name in ("topK", "topKWeighted", "uniqUpTo",
-                    "sequenceMatch", "sequenceCount", "windowFunnel",
-                    "sequenceNextNode", "exponentialMovingAverage",
-                    "largestTriangleThreeBuckets", "lttb"):
-            if not has_second:
-                raise UnsupportedChSql(f"{name} expects the (params)(args) form")
-            close2 = _find_close(sql, k2)
-            args = _split_args(_rewrite_calls(sql[k2 + 1 : close2]))
-            if name == "topK":
-                out.append(_topk_expr(inner, args))
-            elif name == "topKWeighted":
-                out.append(_topk_weighted_expr(inner, args))
-            elif name == "uniqUpTo":
-                out.append(_uniq_upto_expr(inner, args))
-            elif name == "windowFunnel":
-                out.append(_funnel_expr(inner, args))
-            elif name == "sequenceNextNode":
-                out.append(_seq_next_node_expr(inner, args))
-            elif name == "exponentialMovingAverage":
-                out.append(_ema_expr(inner, args))
-            elif name in ("largestTriangleThreeBuckets", "lttb"):
-                out.append(_lttb_expr(inner, args))
-            else:
-                out.append(_seq_expr(name, inner, args))
-            i = close2 + 1
-            continue
-        if name == "retention":
-            out.append(_retention_expr(_split_args(inner)))
-            i = close + 1
-            continue
-        if name in ("maxIntersections", "maxIntersectionsPosition"):
-            out.append(_max_intersections_expr(name, _split_args(inner)))
-            i = close + 1
-            continue
-        if name == "multiIf":
-            parts = _split_args(inner)
-            if len(parts) < 3 or len(parts) % 2 == 0:
-                raise UnsupportedChSql("multiIf expects (c1, v1, …, else)")
-            # CH conditions are truthy numbers (multiIf(0, …)); Spark
-            # CASE needs booleans — CAST bridges both spellings
-            whens = " ".join(
-                f"WHEN CAST(({parts[j]}) AS BOOLEAN) THEN {parts[j + 1]}"
-                for j in range(0, len(parts) - 1, 2)
-            )
-            out.append(f"CASE {whens} ELSE {parts[-1]} END")
-            i = close + 1
-            continue
-        if name.lower() == "count" and not inner.strip():
-            out.append("count(*)")  # CH zero-arg count() = row count
-            i = close + 1
-            continue
-        if name in ("positionUTF8", "positionCaseInsensitive",
-                    "positionCaseInsensitiveUTF8") \
-                or name.lower() == "position":
-            # CH position(haystack, needle[, start]) vs Spark's
-            # locate(needle, haystack[, start]) — the bare name would
-            # resolve to Spark's builtin with SWAPPED argument roles
-            # and silently return 0 (dialect probe, round 9).  The
-            # bare spelling is one of CH's CASE-INSENSITIVE (SQL-
-            # standard) registrations, so POSITION(...) must be
-            # intercepted too (review r11a); the CH-specific *UTF8 /
-            # *CaseInsensitive spellings stay exact-case.  CH's
-            # non-UTF8 spellings return BYTE offsets (the 'в' in
-            # 'привет' is at byte 7); Spark locate() is character-based, so the
-            # byte forms re-measure the prefix with octet_length —
-            # identical on ASCII, CH-exact on multi-byte (review r9).
-            parts = _split_args(inner)
-            if len(parts) == 1 and name.lower() == "position":
-                # ANSI alias position(needle IN haystack) — one arg,
-                # no top-level comma (ADVICE r11 #3: the now case-
-                # insensitive interception must not break it).  CH
-                # documents the alias as equivalent to
-                # position(haystack, needle), i.e. byte-based — swap
-                # to haystack-first and fall through.
-                hit = _scan_toplevel(parts[0], r"\bIN\b")
-                if hit is not None:
-                    parts = [parts[0][hit.end():].strip(),
-                             parts[0][:hit.start()].strip()]
-            if len(parts) not in (2, 3):
-                raise UnsupportedChSql(
-                    f"{name}(haystack, needle[, start]) expects 2-3 args")
-            hay, needle = parts[0], parts[1]
-            utf8 = name.endswith("UTF8")
-            if "CaseInsensitive" in name:
-                hay, needle = f"lower({hay})", f"lower({needle})"
-            if utf8:
-                tail = f", {parts[2]}" if len(parts) == 3 else ""
-                out.append(f"locate({needle}, {hay}{tail})")
-            elif len(parts) == 3:
-                raise UnsupportedChSql(
-                    f"{name}() with start_pos: CH counts it in BYTES, "
-                    "which has no faithful character-function mapping "
-                    "here — use positionUTF8(haystack, needle, start) "
-                    "for character-based offsets"
-                )
-            else:
-                out.append(f"ch_position_bytes({hay}, {needle})")
-            i = close + 1
-            continue
-        if name.lower() == "any":
-            # CH any(x) = an arbitrary value (Spark any_value) — but
-            # the SAME spelling is ANSI's quantified comparison
-            # (`price > ANY (SELECT …)`), and Spark's own any() is a
-            # boolean aggregate.  Quantified ANY requires BOTH a
-            # preceding comparison operator AND a subquery argument —
-            # `max(f) = any(f)` on a boolean column is still the CH
-            # aggregate (a char-only check silently rebound it to
-            # bool_or; review r9b).  Case-insensitive dispatch: the
-            # classic aggregates (count/sum/min/max/avg/any) are
-            # CH's case-insensitive registrations, so `ANY(col)` is
-            # the CH aggregate too (probe r11h — the exact-case check
-            # let Spark's boolean any() capture it on bool columns).
-            pprev = i - 1
-            while pprev >= 0 and sql[pprev] in " \t\n":
-                pprev -= 1
-            is_subq = re.match(
-                r"(?i)\s*SELECT\b", _mask_literals(inner)) is not None
-            if pprev >= 0 and sql[pprev] in "=<>!" and is_subq:
-                # quantified comparison: keep the ORIGINAL spelling
-                # and spacing (`> ANY (SELECT …)`) — re-emitting it
-                # as a call (`any(SELECT …)`) fails Spark's parser
-                # (probe r11h)
-                out.append(f"{name}{sql[j:k]}({inner})")
-            else:
-                out.append(f"any_value({inner})")
-            i = close + 1
-            continue
-        if name == "tuple":
-            # named_struct with EXPLICIT colN field names: bare
-            # struct(a, b) names fields after source COLUMNS when the
-            # elements are column references, which breaks
-            # tupleElement's positional .colN access (review r9b)
-            parts = _split_args(inner)
-            if not parts or not parts[0].strip():
-                raise UnsupportedChSql("tuple() needs at least one element")
-            items = ", ".join(
-                f"'col{ix + 1}', {p}" for ix, p in enumerate(parts))
-            out.append(f"named_struct({items})")
-            i = close + 1
-            continue
-        if name == "arrayZip":
-            # structural (NOT arrays_zip, whose struct field names vary
-            # with argument shape): rebuild colN-named structs so
-            # tupleElement(t, N) positional access resolves, exactly
-            # like tuple() above.  All arrays bind ONCE through a
-            # named_struct envelope (nondeterministic args evaluate
-            # once); unequal sizes raise like CH (arrays_zip would
-            # silently pad with NULLs).
-            parts = _split_args(inner)
-            if not parts or not parts[0].strip():
-                raise UnsupportedChSql("arrayZip needs at least one array")
-            if len(parts) == 1:
-                out.append(
-                    f"transform({parts[0]}, "
-                    f"__x -> named_struct('col1', __x))")
-                i = close + 1
-                continue
-            var = f"__zb{next(_BIND_SEQ)}"
-            binds = ", ".join(
-                f"'a{ix}', {p}" for ix, p in enumerate(parts, 1))
-            fields = ", ".join(
-                ["'col1', __x"]
-                + [f"'col{ix}', {var}.a{ix}[__i]"
-                   for ix in range(2, len(parts) + 1)])
-            guard = " OR ".join(
-                f"size({var}.a{ix}) <> size({var}.a1)"
-                for ix in range(2, len(parts) + 1))
-            out.append(
-                f"(transform(array(named_struct({binds})), {var} -> "
-                f"CASE WHEN {guard} THEN raise_error("
-                f"'arrayZip: arrays must have equal sizes') "
-                f"ELSE transform({var}.a1, (__x, __i) -> "
-                f"named_struct({fields})) END))[0]")
-            i = close + 1
-            continue
-        if name == "length":
-            # CH length(String) counts BYTES (lengthUTF8 is the
-            # code-point form) — Spark length() counts characters, a
-            # silent multi-byte diff.  Arrays still error loudly here
-            # (CH length(Array) = element count): spell size().
-            out.append(f"octet_length({inner})")
-            i = close + 1
-            continue
-        if name == "range" and inner.strip():
-            # CH range([start,] end[, step]) = [start, end) — Spark's
-            # closed-interval sequence() with an empty-range guard
-            # (sequence(0, -1) would count DOWN; CH returns []).
-            # NOT in FROM position: there `range()` is Spark's
-            # table-valued generator, which the numbers() bridge
-            # emits — leave it untouched.
-            head_tok = sql[:i].rstrip()
-            if re.search(r"(?i)\b(FROM|JOIN|LATERAL)$", head_tok):
-                out.append(f"range({inner})")
-                i = close + 1
-                continue
-            parts = _split_args(inner)
-            if len(parts) == 1:
-                s_, e_, st_ = "0", parts[0], "1"
-            elif len(parts) == 2:
-                s_, e_, st_ = parts[0], parts[1], "1"
-            elif len(parts) == 3:
-                s_, e_, st_ = parts
-                # positive-step-only contract: CH range(5, 0, -1)
-                # counts DOWN and step=0 throws — the empty-range
-                # guard below would silently return [] for both.
-                # Literal non-positive steps raise here; non-literal
-                # step expressions are passed through on the caller's
-                # word that they are positive (ADVICE r9).
-                st_lit = st_.strip()
-                if re.fullmatch(r"-?\d+", st_lit) and int(st_lit) <= 0:
-                    raise UnsupportedChSql(
-                        "range() with a non-positive literal step — "
-                        "CH counts down for step<0 and throws for "
-                        "step=0; only positive steps are bridged")
-            else:
-                raise UnsupportedChSql("range() expects 1-3 arguments")
-            out.append(
-                f"CASE WHEN ({e_}) <= ({s_}) THEN CAST(array() AS "
-                f"ARRAY<BIGINT>) ELSE sequence(CAST({s_} AS BIGINT), "
-                f"CAST(({e_}) - 1 AS BIGINT), CAST({st_} AS BIGINT)) END"
-            )
-            i = close + 1
-            continue
-        if name == "tupleElement":
-            # tuple() maps to named_struct with explicit col1, col2, …
-            # fields; tupleElement(t, N) / tupleElement(t, 'name') is
-            # field access on either spelling
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("tupleElement(t, index|name)")
-            idx = parts[1].strip()
-            if idx.isdigit():
-                out.append(f"({parts[0]}).col{idx}")
-            elif idx.startswith("'") and idx.endswith("'"):
-                out.append(f"({parts[0]}).`{idx[1:-1]}`")
-            else:
-                raise UnsupportedChSql(
-                    "tupleElement index must be an integer or string "
-                    "literal")
-            i = close + 1
-            continue
-        if name in ("plus", "minus", "multiply"):
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(a, b) expects 2 arguments")
-            op = {"plus": "+", "minus": "-", "multiply": "*"}[name]
-            out.append(f"(({parts[0]}) {op} ({parts[1]}))")
-            i = close + 1
-            continue
-        if name == "divide":
-            # CH divide() is ALWAYS float division and returns
-            # inf/-inf/nan on a zero divisor where Spark's ANSI `/`
-            # raises DIVIDE_BY_ZERO (r10b).  Both operands bind once
-            # (nondeterministic args evaluate once); -0.0 divisors
-            # take the +0.0 sign (documented edge).  Bare `/` keeps
-            # Spark's loud ANSI error — rewriting every operator
-            # would churn all plans for a corner literal case.
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("divide(a, b) expects 2 arguments")
-            out.append(_bind_once(
-                f"named_struct('a', CAST(({parts[0]}) AS DOUBLE), "
-                f"'b', CAST(({parts[1]}) AS DOUBLE))",
-                lambda v: (
-                    f"CASE WHEN {v}.a IS NULL OR {v}.b IS NULL "
-                    f"THEN CAST(NULL AS DOUBLE) "
-                    f"WHEN isnan({v}.a) OR isnan({v}.b) "
-                    f"THEN CAST('NaN' AS DOUBLE) "
-                    f"WHEN {v}.b = 0 THEN CASE "
-                    f"WHEN {v}.a = 0 THEN CAST('NaN' AS DOUBLE) "
-                    f"WHEN {v}.a > 0 THEN CAST('Infinity' AS DOUBLE) "
-                    f"ELSE CAST('-Infinity' AS DOUBLE) END "
-                    f"ELSE {v}.a / {v}.b END")))
-            i = close + 1
-            continue
-        if name in ("dotProduct", "arrayDotProduct", "L1Distance",
-                    "L2Distance", "L2SquaredDistance", "LinfDistance",
-                    "cosineDistance"):
-            # CH vector-distance family over array columns (r10h) —
-            # the expression form of the embedding-search surface the
-            # ANN operators (datapipe/similarity.py) implement at
-            # scale.  Pure codegen zip_with/aggregate folds in DOUBLE
-            # (CH computes Float64 for Float64 inputs); both arrays
-            # bind ONCE; unequal sizes raise like CH.
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(a, b) expects 2 arrays")
-
-            def _fold(pair_expr: str) -> str:
-                return (f"aggregate({pair_expr}, CAST(0 AS DOUBLE), "
-                        f"(__acc, __v) -> __acc + __v)")
-
-            def _vec(a: str, b: str) -> str:
-                guard = (f"CASE WHEN size({a}) <> size({b}) THEN "
-                         f"raise_error('{name}: arrays must have "
-                         f"equal sizes') ")
-                if name in ("dotProduct", "arrayDotProduct"):
-                    body = _fold(
-                        f"zip_with({a}, {b}, (__x, __y) -> "
-                        f"CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE))")
-                elif name == "L1Distance":
-                    body = _fold(
-                        f"zip_with({a}, {b}, (__x, __y) -> "
-                        f"abs(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)))")
-                elif name in ("L2Distance", "L2SquaredDistance"):
-                    sq = _fold(
-                        f"zip_with({a}, {b}, (__x, __y) -> "
-                        f"(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)) "
-                        f"* (CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)))")
-                    body = f"sqrt({sq})" if name == "L2Distance" else sq
-                elif name == "LinfDistance":
-                    body = (f"array_max(zip_with({a}, {b}, "
-                            f"(__x, __y) -> abs(CAST(__x AS DOUBLE) - "
-                            f"CAST(__y AS DOUBLE))))")
-                else:  # cosineDistance = 1 - dot / (|a| * |b|)
-                    dot = _fold(
-                        f"zip_with({a}, {b}, (__x, __y) -> "
-                        f"CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE))")
-                    na = _fold(f"transform({a}, __x -> "
-                               f"CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE))")
-                    nb = _fold(f"transform({b}, __x -> "
-                               f"CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE))")
-                    body = f"(1.0 - ({dot}) / (sqrt({na}) * sqrt({nb})))"
-                return guard + f"ELSE {body} END"
-
-            # a SUBQUERY argument — the nearest-neighbor idiom
-            # `cosineDistance(vec, (SELECT vec FROM … WHERE id=1))` —
-            # cannot live inside a higher-order function at ALL in
-            # Spark (UNSUPPORTED_SUBQUERY_EXPRESSION; SQL UDFs are
-            # equally blocked in Sort), so it raises naming the hoist
-            # that works: CROSS JOIN the query vector as a column
-            if re.search(r"(?is)\bSELECT\b",
-                         _mask_literals(parts[0] + " " + parts[1])):
-                raise UnsupportedChSql(
-                    f"{name} with a scalar-subquery argument: Spark "
-                    "forbids subqueries inside higher-order functions "
-                    "— hoist it (`… FROM t CROSS JOIN (SELECT vec AS "
-                    "q FROM … WHERE id=1) ORDER BY "
-                    f"{name}(t.vec, q)`) or use datapipe/similarity")
-            out.append(_bind_once(
-                f"named_struct('a', ({parts[0]}), "
-                f"'b', ({parts[1]}))",
-                lambda v: _vec(f"{v}.a", f"{v}.b")))
-            i = close + 1
-            continue
-        if name in ("L1Norm", "L2Norm", "LinfNorm", "L2SquaredNorm"):
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(f"{name}(a) expects 1 array")
-            a = parts[0]
-            if name == "L1Norm":
-                out.append(
-                    f"aggregate({a}, CAST(0 AS DOUBLE), (__acc, __x) ->"
-                    f" __acc + abs(CAST(__x AS DOUBLE)))")
-            elif name == "LinfNorm":
-                out.append(
-                    f"array_max(transform({a}, __x -> "
-                    f"abs(CAST(__x AS DOUBLE))))")
-            else:
-                sq = (f"aggregate({a}, CAST(0 AS DOUBLE), (__acc, __x)"
-                      f" -> __acc + CAST(__x AS DOUBLE) * "
-                      f"CAST(__x AS DOUBLE))")
-                out.append(f"sqrt({sq})" if name == "L2Norm" else sq)
-            i = close + 1
-            continue
-        if name == "ifNotFinite":
-            # ifNotFinite(x, alt): x when finite, else alt (r10f) —
-            # x binds once (it may be nondeterministic or expensive)
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("ifNotFinite(x, alt) expects 2 args")
-            alt = parts[1]
-            out.append(_bind_once(
-                f"CAST(({parts[0]}) AS DOUBLE)",
-                lambda v: (
-                    f"CASE WHEN {v} IS NULL THEN CAST(NULL AS DOUBLE) "
-                    f"WHEN isnan({v}) OR {v} = CAST('Infinity' AS "
-                    f"DOUBLE) OR {v} = CAST('-Infinity' AS DOUBLE) "
-                    f"THEN CAST(({alt}) AS DOUBLE) ELSE {v} END")))
-            i = close + 1
-            continue
-        if name == "indexOf":
-            # CH indexOf finds NULL elements ("NULL is handled as a
-            # normal value", the same rule as hasAll/hasAny) where
-            # array_position is null-strict — probe r10i caught
-            # indexOf([…, NULL], NULL) returning NULL instead of the
-            # position.  The <=> comparison finds both; 0 on miss
-            # like CH.  Both args bind once.
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("indexOf(arr, x) expects 2 args")
-            out.append(_bind_once(
-                f"named_struct('a', ({parts[0]}), 'x', ({parts[1]}))",
-                lambda v: (f"array_position(transform({v}.a, "
-                           f"__e -> __e <=> {v}.x), true)")))
-            i = close + 1
-            continue
-        if name.lower() == "monthname":
-            # CH returns the FULL month name ('March'); Spark 4's
-            # monthname() builtin silently answered with the
-            # abbreviation ('Mar') — probe r10i
-            out.append(f"date_format({inner}, 'MMMM')")
-            i = close + 1
-            continue
-        # ---- collision-sweep batch r11a (VERDICT r10 item 2): CH
-        # names a Spark builtin captures with DIFFERENT semantics.
-        # Each rewrite below neutralizes one silent capture found by
-        # tools/collision_sweep.py; tests/test_builtin_collisions.py
-        # pins the values and the sweep's clean classification.
-        # MySQL/SQL-standard names in this batch are among CH's
-        # CASE-INSENSITIVE registrations, so they dispatch on
-        # name.lower() — ROUND(2.5) is valid CH and must not bypass
-        # the bridge into the Spark builtin (review r11a).
-        if name.lower() == "dayname":
-            # same bug class as monthName: Spark 4 dayname() answers
-            # 'Fri'; CH returns 'Friday'
-            out.append(f"date_format({inner}, 'EEEE')")
-            i = close + 1
-            continue
-        if name.upper() == "DAYOFWEEK":
-            # CH DAYOFWEEK (case-insensitive SQL-standard alias of
-            # toDayOfWeek): Monday=1..Sunday=7; Spark dayofweek:
-            # Sunday=1..Saturday=7 — a silent off-by-shift
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(
-                    "DAYOFWEEK(x) maps 1-arg only (toDayOfWeek mode/"
-                    "timezone arguments are not bridged)")
-            out.append(f"(((dayofweek({parts[0]}) + 5) % 7) + 1)")
-            i = close + 1
-            continue
-        if name.lower() == "round":
-            # CH round() uses BANKER'S rounding for Float inputs
-            # (round(2.5) = 2) and half-away-from-zero for Decimal;
-            # Spark round() is HALF_UP everywhere — typeof() constant-
-            # folds per input type, so the dispatch costs nothing
-            parts = _split_args(inner)
-            if len(parts) not in (1, 2):
-                raise UnsupportedChSql("round(x[, n]) expects 1-2 args")
-            nd = parts[1] if len(parts) == 2 else "0"
-            arg = parts[0].strip()
-            if re.search(r"(?<![\w.])(\d+\.\d*|\.\d+|\d+[eE][+-]?\d+|"
-                         r"\d+\.\d*[eE][+-]?\d+)(?![\w.])",
-                         _mask_literals(arg)):
-                # CH types a dot/exponent literal as Float64 — and
-                # float contaminates any expression containing one —
-                # where Spark parses DECIMAL: round(2.5), round((2.5))
-                # and round(2.5 + 0) must all take the banker's branch
-                # like CH, not decimal HALF_UP (review r11a)
-                arg = f"CAST(({arg}) AS DOUBLE)"
-            out.append(_bind_once(
-                f"({arg})",
-                lambda v: (
-                    f"CASE WHEN typeof({v}) IN ('double', 'float') "
-                    f"THEN bround({v}, {nd}) "
-                    f"ELSE round({v}, {nd}) END")))
-            i = close + 1
-            continue
-        if name.lower() in ("trunc", "truncate"):
-            # CH trunc(x[, n]) is NUMERIC truncation toward zero;
-            # Spark trunc(date, fmt) is DATE truncation — a CH call
-            # passed through would ANSI-crash or NULL.  floor/ceil
-            # dispatch on sign reproduces toward-zero exactly; result
-            # is DOUBLE like CH's Float64 return for float input.
-            # Documented deviations: CH returns the INPUT type, so
-            # integers/decimals beyond 2^53 lose low digits through
-            # the DOUBLE path, and |x·10^n| beyond the BIGINT range
-            # hits floor()'s ANSI overflow (loud, never silent).
-            parts = _split_args(inner)
-            if len(parts) not in (1, 2):
-                raise UnsupportedChSql(f"{name}(x[, n]) expects 1-2 args")
-            nd = parts[1] if len(parts) == 2 else "0"
-            out.append(_bind_once(
-                f"CAST(({parts[0]}) AS DOUBLE)",
-                lambda v: (
-                    f"CASE WHEN {v} >= 0 "
-                    f"THEN floor({v} * pow(10, {nd})) / pow(10, {nd}) "
-                    f"ELSE ceil({v} * pow(10, {nd})) / pow(10, {nd}) "
-                    f"END")))
-            i = close + 1
-            continue
-        if name in ("leftUTF8", "rightUTF8") \
-                or name.lower() in ("left", "right"):
-            # CH left/right accept NEGATIVE lengths (left(s, -n) trims
-            # the last n chars; right(s, -n) trims the first n) where
-            # Spark's builtins return '' — both args bind once, and a
-            # NULL length propagates NULL like every ordinary CH
-            # function (review r11a: Spark's greatest() would have
-            # swallowed it).  The non-UTF8 spellings count BYTES in
-            # CH; Spark strings are UTF-8/codepoint-based, and a
-            # byte-split multi-byte char is not representable as a
-            # Spark string — ASCII-equal, codepoint semantics (≡ the
-            # UTF8 forms) beyond that.
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(s, n) expects 2 args")
-            fn = "left" if name.lower().startswith("left") else "right"
-            if fn == "left":
-                neg = ("substr({v}.s, 1, "
-                       "greatest(length({v}.s) + {v}.n, 0))")
-            else:
-                neg = "substr({v}.s, 1 - {v}.n)"
-            out.append(_bind_once(
-                f"named_struct('s', ({parts[0]}), 'n', ({parts[1]}))",
-                lambda v: (
-                    f"CASE WHEN {v}.n IS NULL THEN NULL "
-                    f"WHEN {v}.n >= 0 THEN {fn}({v}.s, {v}.n) "
-                    f"ELSE {neg.format(v=v)} END")))
-            i = close + 1
-            continue
-        if name == "concatWithSeparator" \
-                or name.lower() in ("greatest", "least", "max2",
-                                    "min2", "concat_ws"):
-            # CH propagates NULL through all three families ("returns
-            # NULL if any argument is NULL"); Spark's greatest/least/
-            # concat_ws SKIP null arguments — greatest(1, NULL) is 1
-            # in Spark, NULL in CH (ADVICE r10).  Bind-once struct +
-            # any-arg-NULL guard, same envelope as divide()/format().
-            parts = _split_args(inner)
-            minarg = 2 if name.lower() != "concat_ws" else 1
-            if name.lower() in ("max2", "min2") and len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(a, b) expects 2 args")
-            if len(parts) < minarg:
-                raise UnsupportedChSql(
-                    f"{name} expects at least {minarg} arguments")
-            fn = {"max2": "greatest", "min2": "least",
-                  "concatwithseparator": "concat_ws"}.get(
-                      name.lower(), name.lower())
-            fields = ", ".join(
-                f"'a{ix}', ({p})" for ix, p in enumerate(parts))
-            out.append(_bind_once(
-                f"named_struct({fields})",
-                lambda v: (
-                    "CASE WHEN "
-                    + " OR ".join(f"{v}.a{ix} IS NULL"
-                                  for ix in range(len(parts)))
-                    + " THEN NULL ELSE "
-                    + fn + "("
-                    + ", ".join(f"{v}.a{ix}" for ix in range(len(parts)))
-                    + ") END")))
-            i = close + 1
-            continue
-        if name in ("editDistance", "levenshteinDistance"):
-            # CH's byte-string Levenshtein, exact on ANY input
-            # (r12c — the r11j multi-byte runtime raise is gone):
-            # ASCII stays on Spark's codegen levenshtein (bytes ==
-            # codepoints there); multi-byte rows dispatch to the
-            # ch_levenshtein_bytes fold shim per row
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(a, b) expects 2 args")
-            # the UDF binds each argument once and carries the ASCII
-            # fast path (plain levenshtein) inside — a lambda-var
-            # _bind_once envelope cannot call a SQL UDF (its inlined
-            # subplan cannot see the lambda variable)
-            out.append(
-                f"ch_levenshtein_bytes(({parts[0]}), ({parts[1]}))")
-            i = close + 1
-            continue
-        if name == "JSONExtractKeys":
-            # CH: outermost object keys; [] for invalid JSON or a
-            # non-object (the JSONExtract-family default) where
-            # Spark's json_object_keys answers NULL; NULL input
-            # propagates.  The variadic indices_or_keys walk raises
-            # by name (review r11i).
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(
-                    "JSONExtractKeys(json) is bridged 1-arg only — "
-                    "the indices_or_keys walk is not; extract the "
-                    "nested object with get_json_object first")
-            out.append(_bind_once(
-                f"({parts[0]})",
-                lambda v: (f"CASE WHEN {v} IS NULL THEN NULL ELSE "
-                           f"coalesce(json_object_keys({v}), "
-                           f"array()) END")))
-            i = close + 1
-            continue
-        if name == "arrayEnumerateUniq":
-            # CH: per element, its occurrence index among EQUAL
-            # values so far ([10,20,10] → [1,1,2]); NULL elements
-            # count as normal values (the hasAll/indexOf rule), hence
-            # <=> .  O(n²) per array — array scale, not row scale
-            # (r11i)
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(
-                    "arrayEnumerateUniq(arr) 1-array form only")
-            out.append(_bind_once(
-                f"({parts[0]})",
-                lambda v: (f"transform({v}, (__x, __i) -> 1 + "
-                           f"size(filter(slice({v}, 1, __i), "
-                           f"__y -> __y <=> __x)))")))
-            i = close + 1
-            continue
-        if name == "arrayEnumerateDense":
-            # CH: rank of each element's FIRST occurrence
-            # ([10,20,10] → [1,2,1]) — position in the distinct
-            # array, NULL-safe via the indexOf pattern; the distinct
-            # array binds ONCE in the struct, not per element
-            # (review r11i) (r11i)
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(
-                    "arrayEnumerateDense(arr) expects 1 array")
-            out.append(_bind_once(
-                f"({parts[0]})",
-                lambda v: _bind_once(
-                    f"array_distinct({v})",
-                    lambda d: (f"transform({v}, __x -> CAST("
-                               f"array_position(transform({d}, "
-                               f"__e -> __e <=> __x), true) AS INT))"))))
-            i = close + 1
-            continue
-        if name == "arrayIntersect":
-            # CH: distinct elements present in ALL argument arrays;
-            # CH documents no result ORDER — Spark's array_intersect
-            # keeps first-array order, inside that contract.  The
-            # variadic form folds the binary builtin (r11i)
-            parts = _split_args(inner)
-            if len(parts) < 2:
-                raise UnsupportedChSql(
-                    "arrayIntersect(a, b, …) expects 2+ arrays")
-            expr = f"({parts[0]})"
-            for p in parts[1:]:
-                expr = f"array_intersect({expr}, ({p}))"
-            out.append(expr)
-            i = close + 1
-            continue
-        if name == "multiSearchAny":
-            # CH multiSearchAny(h, [n1, n2, …]): 1 iff ANY needle is
-            # a substring (byte/char-blind for a boolean) (r11i)
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(
-                    "multiSearchAny(haystack, needles) expects 2 args")
-            out.append(_bind_once(
-                f"named_struct('h', ({parts[0]}), 'a', ({parts[1]}))",
-                lambda v: (f"exists({v}.a, __n -> "
-                           f"contains({v}.h, __n))")))
-            i = close + 1
-            continue
-        if name in ("hasToken", "hasTokenOrNull"):
-            # CH hasToken: the needle appears as a WHOLE token under
-            # tokens()'s rule (non-alphanumeric-ASCII separators) —
-            # expressed as membership in the same split the tokens()
-            # bridge emits, so the two stay rule-identical.  CH
-            # THROWS when the needle itself contains a separator
-            # (OrNull answers NULL) — checked at translate time for
-            # literals, at runtime otherwise (r11i).
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(haystack, token) expects 2 args")
-            tok = parts[1].strip()
-            sep_cls = ("[\\\\x00-\\\\x2f\\\\x3a-\\\\x40\\\\x5b-\\\\x60"
-                       "\\\\x7b-\\\\x7f]")
-            # a TRUE literal only (review r11i: `'a' || 'b'` also
-            # starts and ends with a quote); the separator test is
-            # the ASCII class itself — bytes ≥ 0x80 (and astral
-            # chars) are token characters in CH
-            is_lit = (tok.startswith("'") and tok.endswith("'")
-                      and len(tok) >= 2
-                      and "'" not in tok[1:-1].replace("''", ""))
-            if is_lit:
-                interior = tok[1:-1].replace("''", "'")
-                if interior == "" or re.search(
-                        "[\x00-\x2f\x3a-\x40\x5b-\x60\x7b-\x7f]",
-                        interior):
-                    why = ("is empty" if interior == ""
-                           else "contains tokenizer separators")
-                    if name == "hasToken":
-                        raise UnsupportedChSql(
-                            f"hasToken: needle {tok} {why} — "
-                            "ClickHouse throws here; use "
-                            "hasTokenOrNull or position()")
-                    out.append("CAST(NULL AS BOOLEAN)")
-                    i = close + 1
-                    continue
-            bad = (f"rlike({{v}}.t, '{sep_cls}') "
-                   f"OR length({{v}}.t) = 0")
-            body = (f"array_contains(filter(split({{v}}.h, "
-                    f"'{sep_cls}+'), __x -> __x != ''), {{v}}.t)")
-            onbad = ("CAST(NULL AS BOOLEAN)" if name == "hasTokenOrNull"
-                     else "raise_error('hasToken: the token is empty "
-                          "or contains tokenizer separator characters "
-                          "— ClickHouse throws; use hasTokenOrNull')")
-            out.append(_bind_once(
-                f"named_struct('h', ({parts[0]}), 't', ({parts[1]}))",
-                lambda v: (f"CASE WHEN {bad.format(v=v)} THEN {onbad} "
-                           f"ELSE {body.format(v=v)} END")))
-            i = close + 1
-            continue
-        if name == "extractGroups":
-            # CH extractGroups(h, 'pattern'): the capture groups of
-            # the FIRST match as an array; [] when nothing matches.
-            # The group COUNT comes from compiling the literal
-            # pattern at translate time (r11i)
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(
-                    "extractGroups(haystack, pattern) expects 2 args")
-            pat = parts[1].strip()
-            if not (pat.startswith("'") and pat.endswith("'")
-                    and "'" not in pat[1:-1].replace("''", "")):
-                raise UnsupportedChSql(
-                    "extractGroups needs a LITERAL pattern (the group "
-                    "count shapes the result array)")
-            # count CAPTURING groups on the UNESCAPED regex body with
-            # a Java-semantics scanner (review r11i: Python
-            # re.compile over the still-SQL-escaped text miscounted
-            # '\\\\(' shapes, and Python-only syntax like (?P<…>)
-            # passed validation Java then rejects) — '(' counts
-            # unless it opens a (?…) construct, except Java's named
-            # (?<name>…) which IS capturing
-            body_re = (pat[1:-1].replace("''", "'")
-                       .replace("\\\\", "\\"))
-            ngroups, k, in_cls = 0, 0, False
-            while k < len(body_re):
-                ch = body_re[k]
-                if ch == "\\":
-                    k += 2
-                    continue
-                if in_cls:
-                    in_cls = ch != "]"
-                elif ch == "[":
-                    in_cls = True
-                elif ch == "(":
-                    nxt = body_re[k + 1: k + 2]
-                    nxt2 = body_re[k + 2: k + 3]
-                    if nxt != "?" or (nxt2 == "<"
-                                      and body_re[k + 3: k + 4]
-                                      not in ("=", "!")):
-                        ngroups += 1
-                k += 1
-            if ngroups == 0:
-                raise UnsupportedChSql(
-                    "extractGroups pattern has no capture groups")
-            out.append(_bind_once(
-                f"({parts[0]})",
-                lambda v: (f"CASE WHEN {v} RLIKE {pat} THEN array("
-                           + ", ".join(
-                               f"regexp_extract({v}, {pat}, {g})"
-                               for g in range(1, ngroups + 1))
-                           + ") ELSE array() END")))
-            i = close + 1
-            continue
-        if name.lower() in ("overlay", "overlayutf8"):
-            # CH overlay(s, replace, offset[, length]) (24.x, added
-            # for standard compat) ALSO accepts NEGATIVE offsets
-            # counted from the end of s — Spark's captured builtin
-            # does not (review r11g).  offset -1 = the last
-            # character: position = length(s) + offset + 1.  The
-            # UTF8 spelling is the same function here (Spark strings
-            # are codepoint-based).
-            parts = _split_args(inner)
-            if len(parts) not in (3, 4):
-                raise UnsupportedChSql(
-                    f"{name}(s, replace, offset[, length]) expects "
-                    "3-4 args")
-            ln = f", {parts[3]}" if len(parts) == 4 else ""
-            out.append(_bind_once(
-                f"named_struct('s', ({parts[0]}), 'r', ({parts[1]}), "
-                f"'o', CAST(({parts[2]}) AS INT))",
-                lambda v: (
-                    f"CASE WHEN {v}.o >= 1 THEN "
-                    f"overlay({v}.s, {v}.r, {v}.o{ln}) "
-                    f"WHEN {v}.o <= -1 THEN overlay({v}.s, {v}.r, "
-                    f"greatest(length({v}.s) + {v}.o + 1, 1){ln}) "
-                    f"ELSE raise_error('overlay() offset 0: "
-                    f"ClickHouse offsets are 1-based or negative-"
-                    f"from-the-end — 0 has no documented meaning') "
-                    f"END")))
-            i = close + 1
-            continue
-        if name == "boundingRatio":
-            # CH boundingRatio(x, y): the slope between the LEFTMOST
-            # and RIGHTMOST points of the group by x — (y at max x −
-            # y at min x) / (max x − min x).  Pure min/max_by
-            # aggregates (one hash agg, map-side partials); duplicate
-            # extreme x values pick an arbitrary y, CH's own
-            # envelope.  Rows where EITHER argument is NULL are
-            # skipped like CH's aggregate-NULL rule (the filtered x
-            # doubles as the max_by/min_by key, which ignores NULL
-            # keys), and a zero x-span answers nan/±inf through the
-            # divide() float envelope instead of Spark's ANSI
-            # DIVIDE_BY_ZERO (review r11g)
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("boundingRatio(x, y) expects 2 args")
-            x0 = f"CAST(({parts[0]}) AS DOUBLE)"
-            y0 = f"CAST(({parts[1]}) AS DOUBLE)"
-            ok = f"(({x0}) IS NOT NULL AND ({y0}) IS NOT NULL)"
-            xf = f"CASE WHEN {ok} THEN {x0} END"
-            yf = f"CASE WHEN {ok} THEN {y0} END"
-            dy = f"(max_by({yf}, {xf}) - min_by({yf}, {xf}))"
-            dx = f"(max({xf}) - min({xf}))"
-            out.append(_bind_once(
-                f"named_struct('dy', {dy}, 'dx', {dx})",
-                lambda v: (
-                    f"CASE WHEN {v}.dx IS NULL THEN CAST(NULL AS "
-                    f"DOUBLE) WHEN {v}.dx = 0 THEN CASE "
-                    f"WHEN {v}.dy = 0 THEN CAST('NaN' AS DOUBLE) "
-                    f"WHEN {v}.dy > 0 THEN CAST('Infinity' AS DOUBLE) "
-                    f"ELSE CAST('-Infinity' AS DOUBLE) END "
-                    f"ELSE {v}.dy / {v}.dx END")))
-            i = close + 1
-            continue
-        if name == "intervalLengthSum":
-            # CH intervalLengthSum(start, end): total length of the
-            # UNION of the group's segments — overlaps merge, gaps
-            # don't count.  Sorted fold over the collected (s, e)
-            # pairs (the windowFunnel fold pattern): state = (cover
-            # end so far, total); a segment past the cover adds its
-            # whole length, an overlapping one adds only the
-            # extension.  Tie-safe by construction: the MEASURE of a
-            # boundary point is 0, so closed-vs-open touching
-            # segments sum identically (r11g).  Computes in DOUBLE
-            # (CH returns the integer type for integer bounds —
-            # exact through 2^53, the module's standard envelope).
-            # SCALE: the collected state is O(intervals per group) —
-            # the topK-fallback shape; grafana-panel groups are fine,
-            # a million-interval group wants the window spelling
-            # instead (sum over max(e) OVER (PARTITION BY key
-            # ORDER BY s, e ROWS … 1 PRECEDING) — the ev26 oracle's
-            # form; rehearsed in tools/scale_rehearsal_round11.py).
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(
-                    "intervalLengthSum(start, end) expects 2 args")
-            s0 = f"CAST(({parts[0]}) AS DOUBLE)"
-            e0 = f"CAST(({parts[1]}) AS DOUBLE)"
-            evs = (f"array_sort(collect_list(CASE WHEN {s0} IS NOT "
-                   f"NULL AND {e0} IS NOT NULL THEN "
-                   f"named_struct('s', {s0}, 'e', {e0}) END))")
-            out.append(
-                f"aggregate({evs}, "
-                f"named_struct('c', CAST('-Infinity' AS DOUBLE), "
-                f"'t', CAST(0 AS DOUBLE)), "
-                f"(acc, iv) -> named_struct("
-                f"'c', greatest(acc.c, iv.e), "
-                f"'t', acc.t + CASE WHEN iv.e <= acc.c THEN 0.0 "
-                f"WHEN iv.s >= acc.c THEN iv.e - iv.s "
-                f"ELSE iv.e - acc.c END), "
-                f"acc -> acc.t)")
-            i = close + 1
-            continue
-        if name in ("studentTTest", "welchTTest"):
-            # CH studentTTest/welchTTest(sample_data, sample_index):
-            # two-sample t-test over index 0 vs 1, returning the
-            # (t, p) tuple (r12d — the r11k raise is gone).  The t
-            # statistic and degrees of freedom are plain conditional
-            # aggregates; the two-sided p-value is the regularized
-            # incomplete beta I_{df/(df+t^2)}(df/2, 1/2) via the
-            # ch_t_pvalue shim (Lanczos lgamma + a bounded Lentz
-            # continued-fraction fold — pure JVM, no Python).
-            # Degenerate inputs (an empty side, a single point, zero
-            # pooled variance) answer (NaN, NaN) — CH's float NaNs;
-            # nullif guards keep ANSI mode from raising DIVIDE_BY_ZERO.
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(
-                    f"{name}(sample_data, sample_index) expects 2 args"
-                    " — the parameterized confidence-interval form is"
-                    " not bridged")
-            xv = f"CAST(({parts[0]}) AS DOUBLE)"
-            ix = f"({parts[1]})"
-
-            def _agg(fn: str, side: int) -> str:
-                return f"{fn}(CASE WHEN {ix} = {side} THEN {xv} END)"
-
-            n0 = f"nullif(CAST({_agg('count', 0)} AS DOUBLE), 0)"
-            n1 = f"nullif(CAST({_agg('count', 1)} AS DOUBLE), 0)"
-            m0, m1 = _agg("avg", 0), _agg("avg", 1)
-            v0, v1 = _agg("var_samp", 0), _agg("var_samp", 1)
-            if name == "studentTTest":
-                df = f"nullif({n0} + {n1} - 2, 0)"
-                sp2 = (f"((({n0} - 1) * {v0} + ({n1} - 1) * {v1})"
-                       f" / {df})")
-                tstat = (f"(({m0} - {m1}) / nullif(sqrt({sp2} *"
-                         f" (1 / {n0} + 1 / {n1})), 0))")
-            else:
-                se0 = f"({v0} / {n0})"
-                se1 = f"({v1} / {n1})"
-                se2 = f"({se0} + {se1})"
-                tstat = f"(({m0} - {m1}) / nullif(sqrt({se2}), 0))"
-                df = (f"({se2} * {se2} / nullif("
-                      f"{se0} * {se0} / nullif({n0} - 1, 0) +"
-                      f" {se1} * {se1} / nullif({n1} - 1, 0), 0))")
-            nan = "CAST('NaN' AS DOUBLE)"
-            # bind (t, df) ONCE through a one-element transform and
-            # splice the p-value INLINE from the same builders as the
-            # ch_t_pvalue shim — calling the SQL UDF here would break:
-            # extracting a field from a struct that carries both
-            # aggregates and an inlined UDF is unevaluable in Spark
-            # (UDF inlining x SimplifyExtractValueOps, r12d)
-            out.append(
-                f"(transform(array(named_struct("
-                f"'t', {tstat}, 'df', {df})), "
-                f"__ts -> named_struct("
-                f"'col1', coalesce(__ts.t, {nan}), "
-                f"'col2', coalesce("
-                f"{_t_pvalue_text('__ts.t', '__ts.df')}, {nan}))))[0]")
-            i = close + 1
-            continue
-        if name == "simpleLinearRegression":
-            # CH simpleLinearRegression(x, y) fits y ≈ k·x + b and
-            # returns the tuple (k, b) — exactly Spark's OLS pair
-            # regr_slope/regr_intercept with the DEPENDENT variable
-            # first (the argument roles swap); colN field names keep
-            # tupleElement positional access working (r11f)
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(
-                    "simpleLinearRegression(x, y) expects 2 arguments")
-            x = f"CAST(({parts[0]}) AS DOUBLE)"
-            y = f"CAST(({parts[1]}) AS DOUBLE)"
-            # degenerate groups (a single point, zero x-variance, or
-            # no valid pairs): CH answers (nan, nan) where
-            # regr_slope/intercept answer NULL — coalesce to NaN so
-            # downstream isNaN()/comparison logic branches like CH
-            # (review r11f)
-            nan = "CAST('NaN' AS DOUBLE)"
-            out.append(
-                f"named_struct("
-                f"'col1', coalesce(regr_slope({y}, {x}), {nan}), "
-                f"'col2', coalesce(regr_intercept({y}, {x}), {nan}))")
-            i = close + 1
-            continue
-        if name.lower() == "isnan":
-            # CH isNaN(NULL) is NULL (ordinary NULL propagation);
-            # Spark isnan(NULL) is false — silent on nullable columns
-            out.append(_bind_once(
-                f"({inner})",
-                lambda v: (f"CASE WHEN {v} IS NULL THEN NULL "
-                           f"ELSE isnan({v}) END")))
-            i = close + 1
-            continue
-        if name.lower() == "bin":
-            # any casing (CH registers bin case-insensitively); the
-            # exact-case spelling already hit _UNSUPPORTED_MSG above
-            raise UnsupportedChSql(_UNSUPPORTED_MSG["bin"])
-        if name.lower() == "hex":
-            # CH hex() of an INTEGER pads to the source type's byte
-            # width (hex(10) = '0A'); Spark answers the minimal 'A'.
-            # String/binary inputs are byte-identical on both engines
-            # — typeof() dispatch keeps them and turns the integer
-            # path into a RUNTIME raise (loud, never silent).
-            out.append(_bind_once(
-                f"({inner})",
-                lambda v: (
-                    f"CASE WHEN typeof({v}) IN ('string', 'binary') "
-                    f"THEN hex({v}) ELSE raise_error(concat("
-                    f"'hex() over ', typeof({v}), ': CH pads to the "
-                    f"source integer WIDTH, unknowable from Spark''s "
-                    f"BIGINT — use Spark hex() for minimal-width')) "
-                    f"END")))
-            i = close + 1
-            continue
-        if name.lower() == "unhex":
-            # CH unhex returns String (raw bytes); Spark returns
-            # BINARY — CAST bridges (byte-identical for valid UTF-8;
-            # CH strings holding non-UTF8 bytes are not representable)
-            out.append(f"CAST(unhex({inner}) AS STRING)")
-            i = close + 1
-            continue
-        if name.lower() in ("dateadd", "date_add", "datesub",
-                            "date_sub", "timestampsub",
-                            "timestamp_sub"):
-            # CH 3-arg form date_add(unit, n, ts) == Spark
-            # timestampadd's argument order (the timestampAdd rename
-            # above); Spark's captured date_add(date, days) has the
-            # ARGUMENTS REVERSED, so a passthrough would crash or
-            # silently mis-add.  Documented deviation: timestampadd
-            # always returns TIMESTAMP where CH date_add over a Date
-            # returns Date — wrap in toDate() to keep a date.  The
-            # 2-arg INTERVAL form maps to type-PRESERVING +/-
-            # arithmetic instead.  A 2-arg non-INTERVAL call is not
-            # valid CH — it falls through as Spark's own
-            # date_add(date, days).
-            parts = _split_args(inner)
-            neg = "sub" in name.lower()
-            units = {"YEAR", "QUARTER", "MONTH", "WEEK", "DAY",
-                     "HOUR", "MINUTE", "SECOND"}
-            if len(parts) == 3:
-                unit = parts[0].strip().strip("'\"").upper()
-                if unit not in units:
-                    raise UnsupportedChSql(
-                        f"{name}: unit {parts[0].strip()!r} not in "
-                        f"{sorted(units)}")
-                n_expr = f"-({parts[1]})" if neg else parts[1]
-                out.append(f"timestampadd({unit}, {n_expr}, {parts[2]})")
-                i = close + 1
-                continue
-            if len(parts) == 2 and re.match(r"(?is)^\s*INTERVAL\b",
-                                            parts[1]):
-                op = "-" if neg else "+"
-                out.append(f"(({parts[0]}) {op} ({parts[1]}))")
-                i = close + 1
-                continue
-            # fall through to the generic append (Spark-native shape)
-        if name == "isZeroOrNull":
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql("isZeroOrNull(x) expects 1 arg")
-            out.append(_bind_once(
-                f"({parts[0]})",
-                lambda v: f"({v} IS NULL OR {v} = 0)"))
-            i = close + 1
-            continue
-        if name in ("sumArray", "countArray", "avgArray",
-                    "minArray", "maxArray", "groupArrayArray"):
-            # -Array combinator family: aggregate over every ELEMENT
-            # of the array column across rows (r10b).  Decomposable
-            # forms ride plain aggregates of per-row reductions —
-            # partial/final map-side combine preserved, no explode.
-            # sumArray/avgArray share arraySum's documented DOUBLE
-            # accumulation contract.
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(f"{name}(arr) expects 1 argument")
-            a = parts[0]
-            # empty input SET follows the bridge's count/sum
-            # discipline: CH returns 0/0/nan, Spark's bare aggregates
-            # return NULL (review r10b)
-            if name == "sumArray":
-                out.append(f"coalesce(sum({_ARR_SUM.format(a=a)}), "
-                           f"CAST(0 AS DOUBLE))")
-            elif name == "countArray":
-                out.append(
-                    f"CAST(coalesce(sum(size({a})), 0) AS BIGINT)")
-            elif name == "avgArray":
-                # CH avgArray over zero elements (or zero rows) → nan
-                out.append(
-                    f"(CASE WHEN coalesce(sum(size({a})), 0) = 0 "
-                    f"THEN CAST('NaN' AS DOUBLE) "
-                    f"ELSE sum({_ARR_SUM.format(a=a)}) / sum(size({a})) "
-                    f"END)")
-            elif name == "minArray":
-                out.append(f"min(array_min({a}))")
-            elif name == "maxArray":
-                out.append(f"max(array_max({a}))")
-            else:  # groupArrayArray: concatenation, order arbitrary
-                # in BOTH engines (CH documents the order as undefined)
-                out.append(f"flatten(collect_list({a}))")
-            i = close + 1
-            continue
-        if name in ("lagInFrame", "leadInFrame"):
-            # CH has NO plain lag/lead — lagInFrame/leadInFrame over
-            # the explicit full frame IS the CH spelling of ANSI
-            # lag()/lead() (CH window-functions docs' own idiom).
-            # Spark's lag/lead forbid an explicit frame, so the full
-            # frame is stripped from the OVER clause.  Other frames
-            # are frame-dependent in CH (the function reads within
-            # the frame) and raise; frameless lagInFrame equals lag
-            # under CH's default frame, frameless leadInFrame does
-            # NOT equal lead (the default frame ends at the current
-            # row) and raises.
-            base = "lag" if name == "lagInFrame" else "lead"
-            k3 = close + 1
-            while k3 < n and sql[k3] in " \t\n":
-                k3 += 1
-            om = re.match(r"(?is)OVER\s*\(", sql[k3:])
-            if om is None:
-                raise UnsupportedChSql(
-                    f"{name} needs an inline OVER (...) clause — named "
-                    "WINDOW references are not bridged")
-            oopen = k3 + om.end() - 1
-            oclose = _find_close(sql, oopen)
-            over = sql[oopen + 1: oclose]
-            stripped = re.sub(
-                r"(?is)\s*ROWS\s+BETWEEN\s+UNBOUNDED\s+PRECEDING\s+AND"
-                r"\s+UNBOUNDED\s+FOLLOWING\s*$", "", over)
-            if stripped == over and name == "lagInFrame":
-                # frames whose LOWER bound is unbounded still cover
-                # every lag offset — the shorthand `ROWS UNBOUNDED
-                # PRECEDING` and the `BETWEEN UNBOUNDED PRECEDING AND
-                # CURRENT ROW` form are lag-equivalent (review r10b)
-                stripped = re.sub(
-                    r"(?is)\s*(?:ROWS|RANGE|GROUPS)\s+(?:BETWEEN\s+)?"
-                    r"UNBOUNDED\s+PRECEDING"
-                    r"(?:\s+AND\s+CURRENT\s+ROW)?\s*$", "", over)
-            if stripped == over:
-                if re.search(r"(?is)\b(ROWS|RANGE|GROUPS)\b", over) \
-                        or name == "leadInFrame":
-                    raise UnsupportedChSql(
-                        f"{name} with a frame that does not cover the "
-                        "offset reads within that frame in CH and has "
-                        "no Spark lag/lead equivalent — use ROWS "
-                        "BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED "
-                        "FOLLOWING")
-            out.append(
-                f"{base}({inner}) OVER ({_rewrite_calls(stripped)})")
-            i = oclose + 1
-            continue
-        if name.lower() == "extract":
-            # CH extract(haystack, 'regexp') = first match (or the
-            # first capture group if the pattern has one); the name
-            # is a CASE-INSENSITIVE CH registration.  Only the comma
-            # form with a LITERAL pattern rewrites — `EXTRACT(
-            # field FROM ts)` has no top-level comma and passes
-            # through to Spark's builtin untouched.
-            parts = _split_args(inner)
-            if len(parts) == 2 and parts[1].strip().startswith("'"):
-                pat = parts[1].strip()
-                group = 1 if _regex_has_capture_group(pat[1:-1]) else 0
-                out.append(f"regexp_extract({parts[0]}, {pat}, {group})")
-                i = close + 1
-                continue
-            if len(parts) == 2:
-                # a comma form with a NON-literal pattern: the group
-                # index (whole match vs first subpattern) depends on
-                # the pattern's text — raise instead of guessing, and
-                # instead of letting Spark's extract() capture it
-                # (collision sweep r11a)
-                raise UnsupportedChSql(
-                    "extract(haystack, re) needs a LITERAL pattern — "
-                    "CH returns the first capture group when the "
-                    "pattern has one, the whole match otherwise, "
-                    "which a rewrite cannot decide for a runtime "
-                    "pattern; spell regexp_extract(h, p, group)")
-            out.append(f"extract({inner})")
-            i = close + 1
-            continue
-        if name in ("groupArray", "groupUniqArray") and has_second:
-            raise UnsupportedChSql(
-                f"{name}(N)(x) max-size form not supported — CH keeps "
-                "the FIRST N in read order, which Spark's unordered "
-                "collect cannot honor; use the plain form + slice, or "
-                "an explicit window"
-            )
-        if name == "assumeNotNull":  # relational no-op on Spark
-            out.append(f"({inner})")
-            i = close + 1
-            continue
-        if name in _ADDSUB_UNITS:
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(ts, n) expects 2 arguments")
-            unit, sign = _ADDSUB_UNITS[name]
-            n_expr = parts[1] if sign > 0 else f"-({parts[1]})"
-            out.append(f"timestampadd({unit}, {n_expr}, {parts[0]})")
-            i = close + 1
-            continue
-        if name.lower() in ("datediff", "date_diff", "timestamp_diff",
-                            "timestampdiff"):
-            # CH registers these aliases CASE-INSENSITIVELY (its one
-            # exception to case-sensitive function names) — matching
-            # exact spellings only would let TIMESTAMPDIFF fall
-            # through to Spark's complete-interval builtin, the
-            # silent mistranslation _datediff_expr exists to prevent
-            # (review r10g).  The alias spellings accept a BARE
-            # identifier unit (timestamp_diff(DAY, a, b)) — quote it
-            # for the shared boundary-crossing expression.
-            parts = _split_args(inner)
-            if parts and re.fullmatch(r"[A-Za-z]+", parts[0].strip()):
-                parts[0] = f"'{parts[0].strip().lower()}'"
-            out.append(_datediff_expr(parts))
-            i = close + 1
-            continue
-        if name == "sumCount":
-            # CH sumCount(x) → tuple (sum, count) — two sibling
-            # aggregates in a colN-named struct so tupleElement
-            # positional access resolves (r10g)
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql("sumCount(x) expects 1 argument")
-            out.append(
-                f"named_struct('col1', sum({parts[0]}), "
-                f"'col2', count({parts[0]}))")
-            i = close + 1
-            continue
-        if name == "formatDateTime":
-            out.append(_format_datetime_expr(_split_args(inner)))
-            i = close + 1
-            continue
-        if name in _LAMBDA_SWAP:
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(
-                    f"{name}(lambda, arr) with exactly one array is "
-                    "supported (Spark's HOFs take a single array)"
-                )
-            out.append(f"{_LAMBDA_SWAP[name]}({parts[1]}, {parts[0]})")
-            i = close + 1
-            continue
-        if name == "arrayCount":
-            parts = _split_args(inner)
-            if len(parts) == 1:
-                # 1-arg form counts TRUTHY elements (non-zero,
-                # non-NULL) like every CH higher-order default (r10d)
-                out.append(
-                    f"size(filter({parts[0]}, "
-                    f"__x -> __x IS NOT NULL AND __x != 0))")
-                i = close + 1
-                continue
-            if len(parts) != 2:
-                raise UnsupportedChSql("arrayCount(lambda, arr) expects 2 args")
-            out.append(f"size(filter({parts[1]}, {parts[0]}))")
-            i = close + 1
-            continue
-        if name == "arrayFold":
-            # CH arrayFold(lambda, arr, init) ≡ Spark aggregate(arr,
-            # init, lambda) — both lambdas are (acc, x) (r10d)
-            parts = _split_args(inner)
-            if len(parts) != 3 or not _is_lambda_arg(parts[0]):
-                raise UnsupportedChSql(
-                    "arrayFold(lambda, arr, init) with exactly one "
-                    "array is supported")
-            out.append(
-                f"aggregate({parts[1]}, {parts[2]}, {parts[0]})")
-            i = close + 1
-            continue
-        if name == "arrayResize":
-            # 3-arg form (explicit extender) is exact; the 2-arg form
-            # pads with the element TYPE's default, which SQL text
-            # cannot know — raise naming the workaround (r10d)
-            parts = _split_args(inner)
-            if len(parts) == 3:
-                a, sz, ext = parts
-                out.append(_bind_once(
-                    f"named_struct('a', {a}, 'n', CAST(({sz}) AS INT))",
-                    lambda v: (
-                        f"CASE WHEN {v}.n <= 0 THEN slice({v}.a, 1, 0) "
-                        f"WHEN {v}.n <= size({v}.a) "
-                        f"THEN slice({v}.a, 1, {v}.n) "
-                        f"ELSE concat({v}.a, array_repeat(({ext}), "
-                        f"{v}.n - size({v}.a))) END")))
-                i = close + 1
-                continue
-            raise UnsupportedChSql(
-                "arrayResize(arr, size) pads with the element type's "
-                "default — spell the 3-arg form with an explicit "
-                "extender (arrayResize(arr, size, 0))")
-        if name == "format" and inner.strip().startswith("'"):
-            # CH format('{}-{}', a, b) / format('{1} {0}', a, b) →
-            # format_string('%s-%s', args[, reordered]) (r10e).  Only
-            # the literal-pattern form rewrites; CH forbids mixing
-            # auto {} and manual {N} indexing, and so does this.
-            parts = _split_args(inner)
-            pat = parts[0].strip()
-            if not (pat.startswith("'") and pat.endswith("'")):
-                raise UnsupportedChSql(
-                    "format() needs a literal pattern string")
-            body = pat[1:-1]
-            args = parts[1:]
-            toks = re.split(r"(\{\{|\}\}|\{\d*\})", body)
-            auto = manual = 0
-            order: list[int] = []
-            new_body = []    # %-escaped, for format_string
-            plain_body = []  # unescaped, for the zero-placeholder path
-            for t in toks:
-                if t == "{{":
-                    new_body.append("{")
-                    plain_body.append("{")
-                elif t == "}}":
-                    new_body.append("}")
-                    plain_body.append("}")
-                elif re.fullmatch(r"\{\d+\}", t or ""):
-                    manual += 1
-                    order.append(int(t[1:-1]))
-                    new_body.append("%s")
-                elif t == "{}":
-                    auto += 1
-                    order.append(auto - 1)
-                    new_body.append("%s")
-                else:
-                    new_body.append(t.replace("%", "%%"))
-                    plain_body.append(t)
-            if auto and manual:
-                raise UnsupportedChSql(
-                    "format() cannot mix automatic {} and manual {N} "
-                    "indexing (the CH rule)")
-            if any(ix >= len(args) for ix in order):
-                raise UnsupportedChSql(
-                    "format() placeholder index exceeds the argument "
-                    "list")
-            # the body slice is ALREADY in SQL-escaped form ('' for a
-            # quote inside the original literal) — re-escaping would
-            # corrupt the value (review r10f)
-            fmt = "".join(new_body)
-            if not order:
-                # no placeholders: a plain literal, WITHOUT the
-                # %-escaping format_string would need (review r10f)
-                out.append(f"'{''.join(plain_body)}'")
-                i = close + 1
-                continue
-            # NULL arguments propagate NULL like CH string functions
-            # (format_string would render the text \"null\"); args
-            # bind once through the usual envelope
-            binds = ", ".join(
-                f"'a{ix}', CAST(({a}) AS STRING)"
-                for ix, a in enumerate(args, 1))
-            out.append(_bind_once(
-                f"named_struct({binds})",
-                lambda v: (
-                    "CASE WHEN "
-                    + " OR ".join(f"{v}.a{ix + 1} IS NULL"
-                                  for ix in sorted(set(order)))
-                    + " THEN CAST(NULL AS STRING) ELSE format_string('"
-                    + fmt + "'"
-                    + "".join(f", {v}.a{ix + 1}" for ix in order)
-                    + ") END")))
-            i = close + 1
-            continue
-        if name in ("materialize", "identity", "toNullable"):
-            # CH engine hints / type-nullability wrappers: relational
-            # no-ops here (every Spark column is nullable; the
-            # assumeNotNull twin is handled above) (r10e)
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(f"{name}(x) expects 1 argument")
-            out.append(f"({parts[0]})")
-            i = close + 1
-            continue
-        if name == "sign":
-            # CH sign() returns Int8 (-1/0/1); Spark's returns DOUBLE
-            # — numerically equal but a silent TYPE diff in rendered
-            # results (r10e)
-            out.append(f"CAST(sign({inner}) AS INT)")
-            i = close + 1
-            continue
-        if name.startswith("toInterval") and name[10:] in (
-                "Second", "Minute", "Hour", "Day", "Week",
-                "Month", "Quarter", "Year"):
-            # CH toIntervalX(n) → n * INTERVAL 1 X.  DEVIATION: Spark
-            # types date + day-time-interval as TIMESTAMP where CH
-            # keeps Date; year-month intervals keep DATE on both.
-            unit = name[10:].upper()
-            if unit == "WEEK":
-                expr = f"(({inner}) * INTERVAL '7' DAY)"
-            elif unit == "QUARTER":
-                expr = f"(({inner}) * INTERVAL '3' MONTH)"
-            else:
-                expr = f"(({inner}) * INTERVAL '1' {unit})"
-            out.append(expr)
-            i = close + 1
-            continue
-        if name == "tokens":
-            # CH tokens() default tokenizer: NON-ALPHANUMERIC ASCII
-            # characters are the separators — non-ASCII bytes
-            # (Cyrillic letters, unicode punctuation) stay inside
-            # tokens, so the split class is the explicit ASCII
-            # non-alnum ranges, not \\P{Alnum} (r10d)
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(
-                    "tokens(s) 1-arg default tokenizer only")
-            out.append(
-                f"filter(split({parts[0]}, "
-                f"'[\\\\x00-\\\\x2f\\\\x3a-\\\\x40\\\\x5b-\\\\x60"
-                f"\\\\x7b-\\\\x7f]+'), __x -> __x != '')")
-            i = close + 1
-            continue
-        if name == "splitByWhitespace":
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql("splitByWhitespace(s) expects 1 arg")
-            out.append(
-                f"filter(split({parts[0]}, '\\\\s+'), __x -> __x != '')")
-            i = close + 1
-            continue
-        if name == "ngrams":
-            # character n-grams; CH operates on BYTES — identical for
-            # ASCII, code-point-based here (same family of documented
-            # UTF-8 deviations as substring/length) (r10d)
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("ngrams(s, n) expects 2 args")
-            out.append(_bind_once(
-                f"named_struct('s', ({parts[0]}), "
-                f"'n', CAST(({parts[1]}) AS INT))",
-                lambda v: (
-                    # sequence(1, 0) would count DOWN — guard short
-                    # strings to an empty array instead
-                    f"CASE WHEN length({v}.s) < {v}.n "
-                    f"THEN CAST(array() AS ARRAY<STRING>) "
-                    f"ELSE transform(sequence(1, "
-                    f"length({v}.s) - {v}.n + 1), "
-                    f"__i -> substring({v}.s, __i, {v}.n)) END")))
-            i = close + 1
-            continue
-        if name in ("argMaxIf", "argMinIf"):
-            parts = _split_args(inner)
-            if len(parts) != 3:
-                raise UnsupportedChSql(f"{name}(x, by, cond) expects 3 args")
-            base = "max_by" if name == "argMaxIf" else "min_by"
-            x, by, cond = parts
-            out.append(
-                f"{base}(CASE WHEN {cond} THEN {x} END, "
-                f"CASE WHEN {cond} THEN {by} END)"
-            )
-            i = close + 1
-            continue
-        if name in ("splitByString", "splitByChar"):
-            parts = _split_args(inner)
-            if len(parts) != 2 or not (
-                parts[0].startswith("'") and parts[0].endswith("'")
-            ):
-                raise UnsupportedChSql(f"{name} expects a literal separator")
-            out.append(f"split({parts[1]}, '{_sep_regex_lit(parts[0])}')")
-            i = close + 1
-            continue
-        if name in _PARAMETERIZED_PLURAL and has_second:
-            close2 = _find_close(sql, k2)
-            args = _split_args(_rewrite_calls(sql[k2 + 1 : close2]))
-            out.append(
-                f"{_PARAMETERIZED_PLURAL[name]}({args[0]}, array({inner.strip()}))"
-            )
-            i = close2 + 1
-            continue
-        if name in ("quantileExactWeighted", "quantileTimingWeighted") and has_second:
-            close2 = _find_close(sql, k2)
-            args = _split_args(_rewrite_calls(sql[k2 + 1 : close2]))
-            if len(args) != 2:
-                raise UnsupportedChSql(f"{name}(q)(x, w) expects 2 args")
-            # Spark percentile's third argument IS the frequency weight.
-            # TimingWeighted maps to the EXACT weighted percentile —
-            # the same honest-analogue treatment as quantileTiming
-            # (CH's timing sketch is itself approximate).
-            out.append(f"percentile({args[0]}, {inner.strip()}, {args[1]})")
-            i = close2 + 1
-            continue
-        if name in _PARAMETERIZED and has_second:
-            close2 = _find_close(sql, k2)
-            args = _split_args(_rewrite_calls(sql[k2 + 1 : close2]))
-            # quantileDeterministic(x, seed): the seed only stabilizes
-            # CH's sampling — exact/approx percentile ignores it.
-            cols = args[0] if name == "quantileDeterministic" else ", ".join(args)
-            out.append(f"{_PARAMETERIZED[name]}({cols}, {inner.strip()})")
-            i = close2 + 1
-            continue
-        if name in _PARAMETERIZED:  # CH `quantile(x)` defaults to median
-            out.append(f"{_PARAMETERIZED[name]}({inner}, 0.5)")
-            i = close + 1
-            continue
-        if name in _IF_AGGS:
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}() expects 2 arguments")
-            case = f"CASE WHEN {parts[1]} THEN {parts[0]} END"
-            # any_value respects NULLs by default — the CASE injects
-            # one per non-matching row, so pass ignoreNulls=true
-            if _IF_AGGS[name] == "any_value":
-                body = f"any_value({case}, true)"
-            else:
-                body = f"{_IF_AGGS[name]}({case})"
-            # CH's sum family returns 0 (not NULL) when no row matches
-            if name == "sumIf":
-                body = f"coalesce({body}, 0)"
-            # CH's quantile family returns NaN on an empty sequence
-            elif name in ("medianIf", "medianExactIf"):
-                body = f"coalesce({body}, CAST('NaN' AS DOUBLE))"
-            out.append(body)
-            i = close + 1
-            continue
-        if name == "uniqExact":
-            out.append(f"count(DISTINCT {inner})")
-            i = close + 1
-            continue
-        if name == "kurtPop":
-            # Spark kurtosis is EXCESS kurtosis; CH kurtPop is Pearson
-            out.append(f"(kurtosis({inner}) + 3)")
-            i = close + 1
-            continue
-        if name in ("toUnixTimestamp64Milli", "toUnixTimestamp64Micro",
-                    "toUnixTimestamp64Nano", "fromUnixTimestamp64Milli",
-                    "fromUnixTimestamp64Micro"):
-            # clean raise for the optional tz argument (same session-
-            # timezone discipline as now64; the bare shim would die
-            # with an opaque arity error — review r9f)
-            if len(_split_args(inner)) > 1:
-                raise UnsupportedChSql(
-                    f"{name} timezone argument not supported — the "
-                    "session timezone governs rendering")
-            out.append(f"{name}({inner})")
-            i = close + 1
-            continue
-        if name == "now64":
-            # now64([precision[, tz]]): Spark timestamps are fixed
-            # micros; a tz argument would violate the session-zone
-            # discipline
-            parts = [p for p in _split_args(inner) if p.strip()]
-            if len(parts) > 1:
-                raise UnsupportedChSql(
-                    "now64 timezone argument not supported — the "
-                    "session timezone governs rendering")
-            out.append("current_timestamp()")
-            i = close + 1
-            continue
-        if name == "extractAll":
-            # array of matches; like extract(), the first capture
-            # group when the pattern has one, else the whole match
-            parts = _split_args(inner)
-            if len(parts) != 2 or not parts[1].strip().startswith("'"):
-                raise UnsupportedChSql(
-                    "extractAll(haystack, 'regexp') needs a literal "
-                    "pattern")
-            pat = parts[1].strip()
-            group = 1 if _regex_has_capture_group(pat[1:-1]) else 0
-            out.append(f"regexp_extract_all({parts[0]}, {pat}, {group})")
-            i = close + 1
-            continue
-        if name in ("multiSearchAny", "multiSearchAnyCaseInsensitive"):
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(
-                    f"{name}(haystack, [needles]) expects 2 args")
-            hay, arr = parts
-            if "CaseInsensitive" in name:
-                out.append(f"exists({arr}, __x -> "
-                           f"contains(lower({hay}), lower(__x)))")
-            else:
-                out.append(f"exists({arr}, __x -> contains({hay}, __x))")
-            i = close + 1
-            continue
-        if name == "splitByRegexp":
-            # CH argument order is (regexp, haystack); Spark split()
-            # already treats the separator as a regex
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("splitByRegexp(re, s) expects 2 args")
-            out.append(f"split({parts[1]}, {parts[0]})")
-            i = close + 1
-            continue
-        if name in ("like", "notLike", "ilike", "notILike"):
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(haystack, pattern)")
-            op = "ILIKE" if name in ("ilike", "notILike") else "LIKE"
-            neg = "NOT " if name.startswith("not") else ""
-            out.append(f"(({parts[0]}) {neg}{op} ({parts[1]}))")
-            i = close + 1
-            continue
-        if name == "replaceRegexpOne":
-            raise UnsupportedChSql(
-                "replaceRegexpOne (first-match-only) has no Spark "
-                "expression — regexp_replace replaces every match; "
-                "use replaceRegexpAll or anchor the pattern")
-        if name in ("sumDistinct", "countDistinct", "avgDistinct"):
-            base = {"sumDistinct": "sum", "countDistinct": "count",
-                    "avgDistinct": "avg"}[name]
-            out.append(f"{base}(DISTINCT {inner})")
-            i = close + 1
-            continue
-        if name == "uniqExactIf":
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("uniqExactIf(x, cond) expects 2 args")
-            out.append(
-                f"count(DISTINCT CASE WHEN {parts[1]} THEN {parts[0]} END)")
-            i = close + 1
-            continue
-        if name == "countIf":
-            # 1-arg = predicate count (rename path); CH's 2-arg form
-            # counts non-NULL x where cond holds
-            parts = _split_args(inner)
-            if len(parts) == 2:
-                out.append(
-                    f"count(CASE WHEN {parts[1]} THEN {parts[0]} END)")
-                i = close + 1
-                continue
-            out.append(f"count_if({inner})")
-            i = close + 1
-            continue
-        if name == "avgWeighted":
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("avgWeighted(x, w) expects 2 args")
-            x, w = parts
-            # CH skips the whole ROW when x is NULL — the denominator
-            # must not count that row's weight (review r9e); zero or
-            # empty total weight returns NaN like CH (also guards the
-            # ANSI divide-by-zero)
-            wsum = f"sum(CASE WHEN ({x}) IS NOT NULL THEN ({w}) END)"
-            out.append(
-                f"(CASE WHEN coalesce({wsum}, 0) = 0 "
-                f"THEN CAST('NaN' AS DOUBLE) "
-                f"ELSE sum(CAST(({x}) AS DOUBLE) * ({w})) / {wsum} END)")
-            i = close + 1
-            continue
-        if name in ("hasAll", "hasAny"):
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(arr, subset) expects 2 args")
-            # CH treats NULL elements as normal values (hasAll([1,
-            # NULL], [NULL]) = 1) — <=> keeps that; array_contains /
-            # arrays_overlap would return NULL instead (review r9e)
-            outer = "forall" if name == "hasAll" else "exists"
-            out.append(
-                f"{outer}({parts[1]}, __x -> "
-                f"exists({parts[0]}, __y -> __y <=> __x))")
-            i = close + 1
-            continue
-        if name == "countEqual":
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql("countEqual(arr, x) expects 2 args")
-            out.append(
-                f"size(filter({parts[0]}, __x -> __x <=> ({parts[1]})))")
-            i = close + 1
-            continue
-        if name.lower() in _DIGESTS:
-            parts = _split_args(inner)
-            if len(parts) != 1:
-                raise UnsupportedChSql(f"{name}(x) expects 1 argument")
-            out.append(_DIGESTS[name.lower()].format(x=parts[0]))
-            i = close + 1
-            continue
-        if name.lower() in ("rand", "rand32"):
-            # CH rand() (alias rand32; case-insensitive, MySQL
-            # compat) is a uniform UInt32 draw, NOT Spark's [0, 1)
-            # double — `rand() % 100 < 5` would silently select every
-            # row under the bare mapping.  An optional argument is a
-            # CSE-blocking tag in CH: accepted and ignored.
-            out.append("CAST(floor(rand() * 4294967296) AS BIGINT)")
-            i = close + 1
-            continue
-        if name == "rand64":
-            # two 32-bit draws packed into one 64-bit pattern,
-            # interpreted SIGNED (the same 64-bit-signed deviation as
-            # the bit-op family; CH's type is UInt64)
-            draw = "CAST(floor(rand() * 4294967296) AS BIGINT)"
-            out.append(f"(shiftleft({draw}, 32) | {draw})")
-            i = close + 1
-            continue
-        if name == "randCanonical":
-            out.append("rand()")  # both engines: uniform [0, 1) double
-            i = close + 1
-            continue
-        if name in ("arrayMin", "arrayMax"):
-            parts = _split_args(inner)
-            if len(parts) == 2 and _is_lambda_arg(parts[0]):
-                base = "array_min" if name == "arrayMin" else "array_max"
-                out.append(f"{base}(transform({parts[1]}, {parts[0]}))")
-                i = close + 1
-                continue
-            # 1-arg form rides the plain rename below
-            out.append(f"{_RENAMES.get(name, name)}{sql[j:k]}({inner})")
-            i = close + 1
-            continue
-        if name in _ARR_SINGLE:
-            parts = _split_args(inner)
-            # CH's optional (lambda, array) form (arraySum/Avg/Product/
-            # CumSum only) reduces to the single-array form over
-            # transform(array, lambda)
-            takes_lambda = name in ("arraySum", "arrayAvg",
-                                    "arrayProduct", "arrayCumSum")
-            if takes_lambda and len(parts) == 2 and _is_lambda_arg(parts[0]):
-                arr = f"transform({parts[1]}, {parts[0]})"
-            elif len(parts) == 1:
-                arr = parts[0]
-            else:
-                raise UnsupportedChSql(
-                    f"{name} expects one array"
-                    + (" (or a lambda + one array)" if takes_lambda else ""))
-            tpl = _ARR_SINGLE[name]
-            if tpl.count("{a}") > 1:
-                # multi-splice template: bind the array once so a
-                # nondeterministic argument isn't re-evaluated per
-                # reference (ADVICE r9)
-                out.append(_bind_once(arr, lambda v: f"({tpl.format(a=v)})"))
-            else:
-                out.append(f"({tpl.format(a=arr)})")
-            i = close + 1
-            continue
-        if name in _ARR_LAMBDA:
-            parts = _split_args(inner)
-            if len(parts) != 2 or not _is_lambda_arg(parts[0]):
-                raise UnsupportedChSql(f"{name}(lambda, arr) expects 2 args")
-            out.append(_ARR_LAMBDA[name].format(a=parts[1], L=parts[0]))
-            i = close + 1
-            continue
-        if name in ("arraySort", "arrayReverseSort"):
-            parts = _split_args(inner)
-            desc = name == "arrayReverseSort"
-            if len(parts) == 2 and _is_lambda_arg(parts[0]):
-                tpl = _ARR_SORT_LAMBDA_DESC if desc else _ARR_SORT_LAMBDA
-                # the decorate-sort-undecorate template splices the
-                # array twice (key transform + value side of zip_with):
-                # bind it once so nondeterministic arguments can't
-                # mispair keys with values (ADVICE r9)
-                lam = parts[0]
-                out.append(
-                    _bind_once(parts[1], lambda v: tpl.format(a=v, L=lam)))
-            elif len(parts) == 1 and desc:
-                out.append(_ARR_SORT_DESC.format(a=parts[0]))
-            else:
-                # 1-arg arraySort rides the plain rename below (Spark
-                # array_sort is already asc-with-NULLs-last, like CH)
-                out.append(f"{_RENAMES.get(name, name)}{sql[j:k]}({inner})")
-            i = close + 1
-            continue
-        if name == "arrayPushBack" or name == "arrayPushFront":
-            parts = _split_args(inner)
-            if len(parts) != 2:
-                raise UnsupportedChSql(f"{name}(arr, x) expects 2 args")
-            a, x = parts
-            out.append(f"concat({a}, array({x}))" if name == "arrayPushBack"
-                       else f"concat(array({x}), {a})")
-            i = close + 1
-            continue
-        if name == "arrayIntersect":
-            parts = _split_args(inner)
-            if len(parts) < 2:
-                raise UnsupportedChSql("arrayIntersect expects 2+ arrays")
-            body = parts[0]
-            for p in parts[1:]:  # CH is n-ary; Spark's builtin is binary
-                body = f"array_intersect({body}, {p})"
-            out.append(body)
-            i = close + 1
-            continue
-        if name == "arrayReduce":
-            parts = _split_args(inner)
-            if (len(parts) != 2 or not parts[0].strip().startswith("'")
-                    or not parts[0].strip().endswith("'")):
-                raise UnsupportedChSql(
-                    "arrayReduce('agg', arr) expects a literal aggregate "
-                    "name and one array")
-            agg = parts[0].strip()[1:-1]
-            if agg not in _ARR_REDUCE:
-                raise UnsupportedChSql(
-                    f"arrayReduce aggregate {agg!r} not supported — "
-                    f"supported: {', '.join(sorted(_ARR_REDUCE))}")
-            out.append(f"({_ARR_REDUCE[agg].format(a=parts[1])})")
-            i = close + 1
-            continue
-        if name == "transform":
-            # CH's dictionary transform(x, from, to[, default]); the
-            # 2-arg spelling is Spark's own lambda HOF and passes
-            # through untouched
-            parts = _split_args(inner)
-            if len(parts) in (3, 4) and not _is_lambda_arg(parts[1]):
-                x, frm, to = parts[0], parts[1], parts[2]
-                # element_at's index is INT; position 0 (no match) must
-                # become NULL — try_element_at raises on a literal 0
-                idx = f"CAST(nullif(array_position({frm}, {x}), 0) AS INT)"
-                dflt = parts[3] if len(parts) == 4 else x
-                out.append(f"coalesce(try_element_at({to}, {idx}), {dflt})")
-                i = close + 1
-                continue
-            out.append(f"transform{sql[j:k]}({inner})")
-            i = close + 1
-            continue
-        if name in ("toDecimal32", "toDecimal64", "toDecimal128"):
-            parts = _split_args(inner)
-            if len(parts) != 2 or not parts[1].strip().isdigit():
-                raise UnsupportedChSql(
-                    f"{name}(x, scale) expects a literal integer scale")
-            prec = {"toDecimal32": 9, "toDecimal64": 18,
-                    "toDecimal128": 38}[name]
-            out.append(
-                f"CAST(({parts[0]}) AS DECIMAL({prec}, {parts[1].strip()}))")
-            i = close + 1
-            continue
-        if name == "age":
-            out.append(_age_expr(_split_args(inner)))
-            i = close + 1
-            continue
-        if name.lower() == "cast" or name == "accurateCast":
-            accurate = name == "accurateCast"
-            split = _split_top_as(inner)
-            if split is not None:
-                expr_, typetok = split
-                rewritten = _ch_cast_expr(expr_, typetok, accurate)
-                if rewritten is not None:
-                    out.append(rewritten)
-                    i = close + 1
-                    continue
-                # plain ANSI type: CAST passes through untouched
-            else:
-                parts = _split_args(inner)
-                p1 = parts[1].strip() if len(parts) == 2 else ""
-                if p1.startswith("'") and p1.endswith("'"):
-                    # CH's function-form CAST(x, 'Type')
-                    rewritten = _ch_cast_expr(parts[0], p1[1:-1], accurate)
-                    if rewritten is None:  # ANSI spelling in CH syntax
-                        rewritten = f"CAST(({parts[0]}) AS {p1[1:-1]})"
-                    out.append(rewritten)
-                    i = close + 1
-                    continue
-                if accurate:
-                    raise UnsupportedChSql(
-                        "accurateCast(x, 'Type') expects a literal type")
-            out.append(f"{name}{sql[j:k]}({inner})")
-            i = close + 1
-            continue
-        if name == "fromUnixTimestamp":
-            parts = _split_args(inner)
-            if len(parts) == 1:
-                out.append(f"timestamp_seconds({inner})")
-                i = close + 1
-                continue
-            raise UnsupportedChSql(
-                "fromUnixTimestamp(n, fmt) — spell "
-                "formatDateTime(toDateTime(n), fmt)")
-        if name == "makeDate":
-            parts = _split_args(inner)
-            if len(parts) == 3:
-                out.append(f"make_date({inner})")
-            elif len(parts) == 2:  # CH's (year, day_of_year) form
-                out.append(f"date_add(make_date({parts[0]}, 1, 1), "
-                           f"({parts[1]}) - 1)")
-            else:
-                raise UnsupportedChSql(
-                    "makeDate expects (year, month, day) or "
-                    "(year, day_of_year)")
-            i = close + 1
-            continue
-        # untouched/renamed plain call: keep original spacing between
-        # the name and its paren (e.g. ANSI `> ANY (SELECT …)`)
-        out.append(f"{_RENAMES.get(name, name)}{sql[j:k]}({inner})")
-        i = close + 1
+        call = _Call(sql, m.group(0), i, sql[j:k], close,
+                     _rewrite_calls(sql[k + 1: close]))
+        handler = _call_handler(call.name)
+        text = handler(call) if handler is not None else None
+        out.append(call.plain() if text is None else text)
+        i = call.end
     return "".join(out)
+
+
+# -- refusals and plain renames: the module's name tables
+
+def _refuse(message: str) -> Callable[[_Call], None]:
+    def handler(call: _Call) -> None:
+        raise UnsupportedChSql(message)
+    return handler
+
+
+for _name in _UNSUPPORTED:
+    _register(_name, _refuse(
+        f"{_name}() has no faithful SQL mapping here — use the "
+        f"DataFrame operator (see functions/ and datapipe/)"))
+for _name, _msg in _UNSUPPORTED_MSG.items():
+    # CH registers bin case-insensitively: BIN(x) is refused too
+    _register(_name, _refuse(_msg), ci=_name == "bin")
+_register("replaceRegexpOne", _refuse(
+    "replaceRegexpOne (first-match-only) has no Spark "
+    "expression — regexp_replace replaces every match; "
+    "use replaceRegexpAll or anchor the pattern"))
+for _name, _to in _RENAMES.items():
+    _register(_name, lambda call, to=_to: call.plain(to))
+
+
+# -- handlers, one per ClickHouse function (family)
+
+#: ``name(params)(args)`` aggregates with no plain form
+_PARAMS_ONLY = {
+    "topK": _topk_expr,
+    "topKWeighted": _topk_weighted_expr,
+    "uniqUpTo": _uniq_upto_expr,
+    "sequenceMatch": lambda p, a: _seq_expr("sequenceMatch", p, a),
+    "sequenceCount": lambda p, a: _seq_expr("sequenceCount", p, a),
+    "windowFunnel": _funnel_expr,
+    "sequenceNextNode": _seq_next_node_expr,
+    "exponentialMovingAverage": _ema_expr,
+    "largestTriangleThreeBuckets": _lttb_expr,
+    "lttb": _lttb_expr,
+}
+
+
+@_calls(*_PARAMS_ONLY)
+def _params_only_call(call: _Call) -> str:
+    if not call.has_params:
+        raise UnsupportedChSql(
+            f"{call.name} expects the (params)(args) form")
+    return _PARAMS_ONLY[call.name](call.inner, call.args())
+
+
+@_calls("retention")
+def _retention_call(call: _Call) -> str:
+    return _retention_expr(call.parts)
+
+
+@_calls("maxIntersections", "maxIntersectionsPosition")
+def _max_intersections_call(call: _Call) -> str:
+    return _max_intersections_expr(call.name, call.parts)
+
+
+@_calls("multiIf")
+def _multi_if(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) < 3 or len(parts) % 2 == 0:
+        raise UnsupportedChSql("multiIf expects (c1, v1, …, else)")
+    # CH conditions are truthy numbers (multiIf(0, …)); Spark
+    # CASE needs booleans — CAST bridges both spellings
+    whens = " ".join(
+        f"WHEN CAST(({parts[j]}) AS BOOLEAN) THEN {parts[j + 1]}"
+        for j in range(0, len(parts) - 1, 2)
+    )
+    return f"CASE {whens} ELSE {parts[-1]} END"
+
+
+@_calls("count", ci=True)
+def _count(call: _Call) -> str | None:
+    # CH zero-arg count() = row count
+    return None if call.inner.strip() else "count(*)"
+
+
+@_calls("position", ci=True)
+@_calls("positionUTF8", "positionCaseInsensitive",
+        "positionCaseInsensitiveUTF8")
+def _position(call: _Call) -> str:
+    # CH position(haystack, needle[, start]) vs Spark's
+    # locate(needle, haystack[, start]) — the bare name would
+    # resolve to Spark's builtin with SWAPPED argument roles
+    # and silently return 0 (dialect probe, round 9).  The
+    # bare spelling is one of CH's CASE-INSENSITIVE (SQL-
+    # standard) registrations, so POSITION(...) must be
+    # intercepted too (review r11a); the CH-specific *UTF8 /
+    # *CaseInsensitive spellings stay exact-case.  CH's
+    # non-UTF8 spellings return BYTE offsets (the 'в' in
+    # 'привет' is at byte 7); Spark locate() is character-based, so the
+    # byte forms re-measure the prefix with octet_length —
+    # identical on ASCII, CH-exact on multi-byte (review r9).
+    name, parts = call.name, call.parts
+    if len(parts) == 1 and name.lower() == "position":
+        # ANSI alias position(needle IN haystack) — one arg,
+        # no top-level comma (ADVICE r11 #3: the now case-
+        # insensitive interception must not break it).  CH
+        # documents the alias as equivalent to
+        # position(haystack, needle), i.e. byte-based — swap
+        # to haystack-first and fall through.
+        hit = _scan_toplevel(parts[0], r"\bIN\b")
+        if hit is not None:
+            parts = [parts[0][hit.end():].strip(),
+                     parts[0][:hit.start()].strip()]
+    if len(parts) not in (2, 3):
+        raise UnsupportedChSql(
+            f"{name}(haystack, needle[, start]) expects 2-3 args")
+    hay, needle = parts[0], parts[1]
+    if "CaseInsensitive" in name:
+        hay, needle = f"lower({hay})", f"lower({needle})"
+    if name.endswith("UTF8"):
+        tail = f", {parts[2]}" if len(parts) == 3 else ""
+        return f"locate({needle}, {hay}{tail})"
+    if len(parts) == 3:
+        raise UnsupportedChSql(
+            f"{name}() with start_pos: CH counts it in BYTES, "
+            "which has no faithful character-function mapping "
+            "here — use positionUTF8(haystack, needle, start) "
+            "for character-based offsets"
+        )
+    return f"ch_position_bytes({hay}, {needle})"
+
+
+@_calls("any", ci=True)
+def _any(call: _Call) -> str | None:
+    # CH any(x) = an arbitrary value (Spark any_value) — but
+    # the SAME spelling is ANSI's quantified comparison
+    # (`price > ANY (SELECT …)`), and Spark's own any() is a
+    # boolean aggregate.  Quantified ANY requires BOTH a
+    # preceding comparison operator AND a subquery argument —
+    # `max(f) = any(f)` on a boolean column is still the CH
+    # aggregate (a char-only check silently rebound it to
+    # bool_or; review r9b).  Case-insensitive dispatch: the
+    # classic aggregates (count/sum/min/max/avg/any) are
+    # CH's case-insensitive registrations, so `ANY(col)` is
+    # the CH aggregate too (probe r11h — the exact-case check
+    # let Spark's boolean any() capture it on bool columns).
+    head = call.sql[:call.start].rstrip(" \t\n")
+    if head and head[-1] in "=<>!" and re.match(
+            r"(?i)\s*SELECT\b", _mask_literals(call.inner)):
+        # quantified comparison: keep the ORIGINAL spelling
+        # and spacing (`> ANY (SELECT …)`) — re-emitting it
+        # as a call (`any(SELECT …)`) fails Spark's parser
+        # (probe r11h)
+        return None
+    return f"any_value({call.inner})"
+
+
+@_calls("tuple")
+def _tuple(call: _Call) -> str:
+    # named_struct with EXPLICIT colN field names: bare
+    # struct(a, b) names fields after source COLUMNS when the
+    # elements are column references, which breaks
+    # tupleElement's positional .colN access (review r9b)
+    parts = call.parts
+    if not parts or not parts[0].strip():
+        raise UnsupportedChSql("tuple() needs at least one element")
+    items = ", ".join(f"'col{ix + 1}', {p}" for ix, p in enumerate(parts))
+    return f"named_struct({items})"
+
+
+@_calls("arrayZip")
+def _array_zip(call: _Call) -> str:
+    # structural (NOT arrays_zip, whose struct field names vary
+    # with argument shape): rebuild colN-named structs so
+    # tupleElement(t, N) positional access resolves, exactly
+    # like tuple() above.  All arrays bind ONCE through a
+    # named_struct envelope (nondeterministic args evaluate
+    # once); unequal sizes raise like CH (arrays_zip would
+    # silently pad with NULLs).
+    parts = call.parts
+    if not parts or not parts[0].strip():
+        raise UnsupportedChSql("arrayZip needs at least one array")
+    if len(parts) == 1:
+        return f"transform({parts[0]}, __x -> named_struct('col1', __x))"
+    var = f"__zb{next(_BIND_SEQ)}"
+    binds = ", ".join(f"'a{ix}', {p}" for ix, p in enumerate(parts, 1))
+    fields = ", ".join(
+        ["'col1', __x"]
+        + [f"'col{ix}', {var}.a{ix}[__i]"
+           for ix in range(2, len(parts) + 1)])
+    guard = " OR ".join(
+        f"size({var}.a{ix}) <> size({var}.a1)"
+        for ix in range(2, len(parts) + 1))
+    return (f"(transform(array(named_struct({binds})), {var} -> "
+            f"CASE WHEN {guard} THEN raise_error("
+            f"'arrayZip: arrays must have equal sizes') "
+            f"ELSE transform({var}.a1, (__x, __i) -> "
+            f"named_struct({fields})) END))[0]")
+
+
+@_calls("length")
+def _length(call: _Call) -> str:
+    # CH length(String) counts BYTES (lengthUTF8 is the
+    # code-point form) — Spark length() counts characters, a
+    # silent multi-byte diff.  Arrays still error loudly here
+    # (CH length(Array) = element count): spell size().
+    return f"octet_length({call.inner})"
+
+
+@_calls("range")
+def _range(call: _Call) -> str | None:
+    # CH range([start,] end[, step]) = [start, end) — Spark's
+    # closed-interval sequence() with an empty-range guard
+    # (sequence(0, -1) would count DOWN; CH returns []).
+    # NOT in FROM position: there `range()` is Spark's
+    # table-valued generator, which the numbers() bridge
+    # emits — leave it untouched.
+    if not call.inner.strip():
+        return None
+    if re.search(r"(?i)\b(FROM|JOIN|LATERAL)$",
+                 call.sql[:call.start].rstrip()):
+        return f"range({call.inner})"
+    parts = call.parts
+    if len(parts) == 1:
+        s_, e_, st_ = "0", parts[0], "1"
+    elif len(parts) == 2:
+        s_, e_, st_ = parts[0], parts[1], "1"
+    elif len(parts) == 3:
+        s_, e_, st_ = parts
+        # positive-step-only contract: CH range(5, 0, -1)
+        # counts DOWN and step=0 throws — the empty-range
+        # guard below would silently return [] for both.
+        # Literal non-positive steps raise here; non-literal
+        # step expressions are passed through on the caller's
+        # word that they are positive (ADVICE r9).
+        st_lit = st_.strip()
+        if re.fullmatch(r"-?\d+", st_lit) and int(st_lit) <= 0:
+            raise UnsupportedChSql(
+                "range() with a non-positive literal step — "
+                "CH counts down for step<0 and throws for "
+                "step=0; only positive steps are bridged")
+    else:
+        raise UnsupportedChSql("range() expects 1-3 arguments")
+    return (f"CASE WHEN ({e_}) <= ({s_}) THEN CAST(array() AS "
+            f"ARRAY<BIGINT>) ELSE sequence(CAST({s_} AS BIGINT), "
+            f"CAST(({e_}) - 1 AS BIGINT), CAST({st_} AS BIGINT)) END")
+
+
+@_calls("tupleElement")
+def _tuple_element(call: _Call) -> str:
+    # tuple() maps to named_struct with explicit col1, col2, …
+    # fields; tupleElement(t, N) / tupleElement(t, 'name') is
+    # field access on either spelling
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("tupleElement(t, index|name)")
+    idx = parts[1].strip()
+    if idx.isdigit():
+        return f"({parts[0]}).col{idx}"
+    if idx.startswith("'") and idx.endswith("'"):
+        return f"({parts[0]}).`{idx[1:-1]}`"
+    raise UnsupportedChSql(
+        "tupleElement index must be an integer or string literal")
+
+
+@_calls("plus", "minus", "multiply")
+def _arith(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}(a, b) expects 2 arguments")
+    op = {"plus": "+", "minus": "-", "multiply": "*"}[call.name]
+    return f"(({parts[0]}) {op} ({parts[1]}))"
+
+
+@_calls("divide")
+def _divide(call: _Call) -> str:
+    # CH divide() is ALWAYS float division and returns
+    # inf/-inf/nan on a zero divisor where Spark's ANSI `/`
+    # raises DIVIDE_BY_ZERO (r10b).  Both operands bind once
+    # (nondeterministic args evaluate once); -0.0 divisors
+    # take the +0.0 sign (documented edge).  Bare `/` keeps
+    # Spark's loud ANSI error — rewriting every operator
+    # would churn all plans for a corner literal case.
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("divide(a, b) expects 2 arguments")
+    return _bind_once(
+        f"named_struct('a', CAST(({parts[0]}) AS DOUBLE), "
+        f"'b', CAST(({parts[1]}) AS DOUBLE))",
+        lambda v: (
+            f"CASE WHEN {v}.a IS NULL OR {v}.b IS NULL "
+            f"THEN CAST(NULL AS DOUBLE) "
+            f"WHEN isnan({v}.a) OR isnan({v}.b) "
+            f"THEN CAST('NaN' AS DOUBLE) "
+            f"WHEN {v}.b = 0 THEN CASE "
+            f"WHEN {v}.a = 0 THEN CAST('NaN' AS DOUBLE) "
+            f"WHEN {v}.a > 0 THEN CAST('Infinity' AS DOUBLE) "
+            f"ELSE CAST('-Infinity' AS DOUBLE) END "
+            f"ELSE {v}.a / {v}.b END"))
+
+
+def _fold_sum(pair_expr: str) -> str:
+    return (f"aggregate({pair_expr}, CAST(0 AS DOUBLE), "
+            f"(__acc, __v) -> __acc + __v)")
+
+
+def _vector_body(name: str, a: str, b: str) -> str:
+    """The distance ``name`` between the bound arrays ``a`` and ``b``,
+    in DOUBLE."""
+    if name in ("dotProduct", "arrayDotProduct"):
+        return _fold_sum(f"zip_with({a}, {b}, (__x, __y) -> "
+                         f"CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE))")
+    if name == "L1Distance":
+        return _fold_sum(
+            f"zip_with({a}, {b}, (__x, __y) -> "
+            f"abs(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)))")
+    if name in ("L2Distance", "L2SquaredDistance"):
+        sq = _fold_sum(
+            f"zip_with({a}, {b}, (__x, __y) -> "
+            f"(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)) "
+            f"* (CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)))")
+        return f"sqrt({sq})" if name == "L2Distance" else sq
+    if name == "LinfDistance":
+        return (f"array_max(zip_with({a}, {b}, "
+                f"(__x, __y) -> abs(CAST(__x AS DOUBLE) - "
+                f"CAST(__y AS DOUBLE))))")
+    # cosineDistance = 1 - dot / (|a| * |b|)
+    dot = _fold_sum(f"zip_with({a}, {b}, (__x, __y) -> "
+                    f"CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE))")
+    na = _fold_sum(f"transform({a}, __x -> "
+                   f"CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE))")
+    nb = _fold_sum(f"transform({b}, __x -> "
+                   f"CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE))")
+    return f"(1.0 - ({dot}) / (sqrt({na}) * sqrt({nb})))"
+
+
+@_calls("dotProduct", "arrayDotProduct", "L1Distance", "L2Distance",
+        "L2SquaredDistance", "LinfDistance", "cosineDistance")
+def _vector_distance(call: _Call) -> str:
+    # CH vector-distance family over array columns (r10h) —
+    # the expression form of the embedding-search surface the
+    # ANN operators (datapipe/similarity.py) implement at
+    # scale.  Pure codegen zip_with/aggregate folds in DOUBLE
+    # (CH computes Float64 for Float64 inputs); both arrays
+    # bind ONCE; unequal sizes raise like CH.
+    name, parts = call.name, call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{name}(a, b) expects 2 arrays")
+    # a SUBQUERY argument — the nearest-neighbor idiom
+    # `cosineDistance(vec, (SELECT vec FROM … WHERE id=1))` —
+    # cannot live inside a higher-order function at ALL in
+    # Spark (UNSUPPORTED_SUBQUERY_EXPRESSION; SQL UDFs are
+    # equally blocked in Sort), so it raises naming the hoist
+    # that works: CROSS JOIN the query vector as a column
+    if re.search(r"(?is)\bSELECT\b",
+                 _mask_literals(parts[0] + " " + parts[1])):
+        raise UnsupportedChSql(
+            f"{name} with a scalar-subquery argument: Spark "
+            "forbids subqueries inside higher-order functions "
+            "— hoist it (`… FROM t CROSS JOIN (SELECT vec AS "
+            "q FROM … WHERE id=1) ORDER BY "
+            f"{name}(t.vec, q)`) or use datapipe/similarity")
+    return _bind_once(
+        f"named_struct('a', ({parts[0]}), 'b', ({parts[1]}))",
+        lambda v: (f"CASE WHEN size({v}.a) <> size({v}.b) THEN "
+                   f"raise_error('{name}: arrays must have "
+                   f"equal sizes') ELSE "
+                   f"{_vector_body(name, f'{v}.a', f'{v}.b')} END"))
+
+
+@_calls("L1Norm", "L2Norm", "LinfNorm", "L2SquaredNorm")
+def _vector_norm(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql(f"{call.name}(a) expects 1 array")
+    a = parts[0]
+    if call.name == "L1Norm":
+        return (f"aggregate({a}, CAST(0 AS DOUBLE), (__acc, __x) ->"
+                f" __acc + abs(CAST(__x AS DOUBLE)))")
+    if call.name == "LinfNorm":
+        return f"array_max(transform({a}, __x -> abs(CAST(__x AS DOUBLE))))"
+    sq = (f"aggregate({a}, CAST(0 AS DOUBLE), (__acc, __x)"
+          f" -> __acc + CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE))")
+    return f"sqrt({sq})" if call.name == "L2Norm" else sq
+
+
+@_calls("ifNotFinite")
+def _if_not_finite(call: _Call) -> str:
+    # ifNotFinite(x, alt): x when finite, else alt (r10f) —
+    # x binds once (it may be nondeterministic or expensive)
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("ifNotFinite(x, alt) expects 2 args")
+    alt = parts[1]
+    return _bind_once(
+        f"CAST(({parts[0]}) AS DOUBLE)",
+        lambda v: (
+            f"CASE WHEN {v} IS NULL THEN CAST(NULL AS DOUBLE) "
+            f"WHEN isnan({v}) OR {v} = CAST('Infinity' AS "
+            f"DOUBLE) OR {v} = CAST('-Infinity' AS DOUBLE) "
+            f"THEN CAST(({alt}) AS DOUBLE) ELSE {v} END"))
+
+
+@_calls("indexOf")
+def _index_of(call: _Call) -> str:
+    # CH indexOf finds NULL elements ("NULL is handled as a
+    # normal value", the same rule as hasAll/hasAny) where
+    # array_position is null-strict — probe r10i caught
+    # indexOf([…, NULL], NULL) returning NULL instead of the
+    # position.  The <=> comparison finds both; 0 on miss
+    # like CH.  Both args bind once.
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("indexOf(arr, x) expects 2 args")
+    return _bind_once(
+        f"named_struct('a', ({parts[0]}), 'x', ({parts[1]}))",
+        lambda v: (f"array_position(transform({v}.a, "
+                   f"__e -> __e <=> {v}.x), true)"))
+
+
+# ---- collision-sweep batch r11a (VERDICT r10 item 2): CH names a
+# Spark builtin captures with DIFFERENT semantics.  Each rewrite below
+# neutralizes one silent capture found by tools/collision_sweep.py;
+# tests/test_builtin_collisions.py pins the values and the sweep's
+# clean classification.  MySQL/SQL-standard names in this batch are
+# among CH's CASE-INSENSITIVE registrations (ci=True) — ROUND(2.5) is
+# valid CH and must not bypass the bridge into the Spark builtin
+# (review r11a).
+
+@_calls("monthName", ci=True)
+def _month_name(call: _Call) -> str:
+    # CH returns the FULL month name ('March'); Spark 4's
+    # monthname() builtin silently answered with the
+    # abbreviation ('Mar') — probe r10i
+    return f"date_format({call.inner}, 'MMMM')"
+
+
+@_calls("dayName", ci=True)
+def _day_name(call: _Call) -> str:
+    # same bug class as monthName: Spark 4 dayname() answers
+    # 'Fri'; CH returns 'Friday'
+    return f"date_format({call.inner}, 'EEEE')"
+
+
+@_calls("DAYOFWEEK", ci=True)
+def _day_of_week(call: _Call) -> str:
+    # CH DAYOFWEEK (case-insensitive SQL-standard alias of
+    # toDayOfWeek): Monday=1..Sunday=7; Spark dayofweek:
+    # Sunday=1..Saturday=7 — a silent off-by-shift
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql(
+            "DAYOFWEEK(x) maps 1-arg only (toDayOfWeek mode/"
+            "timezone arguments are not bridged)")
+    return f"(((dayofweek({parts[0]}) + 5) % 7) + 1)"
+
+
+@_calls("round", ci=True)
+def _round(call: _Call) -> str:
+    # CH round() uses BANKER'S rounding for Float inputs
+    # (round(2.5) = 2) and half-away-from-zero for Decimal;
+    # Spark round() is HALF_UP everywhere — typeof() constant-
+    # folds per input type, so the dispatch costs nothing
+    parts = call.parts
+    if len(parts) not in (1, 2):
+        raise UnsupportedChSql("round(x[, n]) expects 1-2 args")
+    nd = parts[1] if len(parts) == 2 else "0"
+    arg = parts[0].strip()
+    if re.search(r"(?<![\w.])(\d+\.\d*|\.\d+|\d+[eE][+-]?\d+|"
+                 r"\d+\.\d*[eE][+-]?\d+)(?![\w.])",
+                 _mask_literals(arg)):
+        # CH types a dot/exponent literal as Float64 — and
+        # float contaminates any expression containing one —
+        # where Spark parses DECIMAL: round(2.5), round((2.5))
+        # and round(2.5 + 0) must all take the banker's branch
+        # like CH, not decimal HALF_UP (review r11a)
+        arg = f"CAST(({arg}) AS DOUBLE)"
+    return _bind_once(
+        f"({arg})",
+        lambda v: (
+            f"CASE WHEN typeof({v}) IN ('double', 'float') "
+            f"THEN bround({v}, {nd}) "
+            f"ELSE round({v}, {nd}) END"))
+
+
+@_calls("trunc", "truncate", ci=True)
+def _trunc(call: _Call) -> str:
+    # CH trunc(x[, n]) is NUMERIC truncation toward zero;
+    # Spark trunc(date, fmt) is DATE truncation — a CH call
+    # passed through would ANSI-crash or NULL.  floor/ceil
+    # dispatch on sign reproduces toward-zero exactly; result
+    # is DOUBLE like CH's Float64 return for float input.
+    # Documented deviations: CH returns the INPUT type, so
+    # integers/decimals beyond 2^53 lose low digits through
+    # the DOUBLE path, and |x·10^n| beyond the BIGINT range
+    # hits floor()'s ANSI overflow (loud, never silent).
+    parts = call.parts
+    if len(parts) not in (1, 2):
+        raise UnsupportedChSql(f"{call.name}(x[, n]) expects 1-2 args")
+    nd = parts[1] if len(parts) == 2 else "0"
+    return _bind_once(
+        f"CAST(({parts[0]}) AS DOUBLE)",
+        lambda v: (
+            f"CASE WHEN {v} >= 0 "
+            f"THEN floor({v} * pow(10, {nd})) / pow(10, {nd}) "
+            f"ELSE ceil({v} * pow(10, {nd})) / pow(10, {nd}) "
+            f"END"))
+
+
+@_calls("left", "right", ci=True)
+@_calls("leftUTF8", "rightUTF8")
+def _left_right(call: _Call) -> str:
+    # CH left/right accept NEGATIVE lengths (left(s, -n) trims
+    # the last n chars; right(s, -n) trims the first n) where
+    # Spark's builtins return '' — both args bind once, and a
+    # NULL length propagates NULL like every ordinary CH
+    # function (review r11a: Spark's greatest() would have
+    # swallowed it).  The non-UTF8 spellings count BYTES in
+    # CH; Spark strings are UTF-8/codepoint-based, and a
+    # byte-split multi-byte char is not representable as a
+    # Spark string — ASCII-equal, codepoint semantics (≡ the
+    # UTF8 forms) beyond that.
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}(s, n) expects 2 args")
+    fn = "left" if call.name.lower().startswith("left") else "right"
+    if fn == "left":
+        neg = "substr({v}.s, 1, greatest(length({v}.s) + {v}.n, 0))"
+    else:
+        neg = "substr({v}.s, 1 - {v}.n)"
+    return _bind_once(
+        f"named_struct('s', ({parts[0]}), 'n', ({parts[1]}))",
+        lambda v: (
+            f"CASE WHEN {v}.n IS NULL THEN NULL "
+            f"WHEN {v}.n >= 0 THEN {fn}({v}.s, {v}.n) "
+            f"ELSE {neg.format(v=v)} END"))
+
+
+@_calls("greatest", "least", "max2", "min2", "concat_ws", ci=True)
+@_calls("concatWithSeparator")
+def _null_propagating(call: _Call) -> str:
+    # CH propagates NULL through all three families ("returns
+    # NULL if any argument is NULL"); Spark's greatest/least/
+    # concat_ws SKIP null arguments — greatest(1, NULL) is 1
+    # in Spark, NULL in CH (ADVICE r10).  Bind-once struct +
+    # any-arg-NULL guard, same envelope as divide()/format().
+    name, parts = call.name, call.parts
+    minarg = 2 if name.lower() != "concat_ws" else 1
+    if name.lower() in ("max2", "min2") and len(parts) != 2:
+        raise UnsupportedChSql(f"{name}(a, b) expects 2 args")
+    if len(parts) < minarg:
+        raise UnsupportedChSql(
+            f"{name} expects at least {minarg} arguments")
+    fn = {"max2": "greatest", "min2": "least",
+          "concatwithseparator": "concat_ws"}.get(
+              name.lower(), name.lower())
+    fields = ", ".join(f"'a{ix}', ({p})" for ix, p in enumerate(parts))
+    return _bind_once(
+        f"named_struct({fields})",
+        lambda v: (
+            "CASE WHEN "
+            + " OR ".join(f"{v}.a{ix} IS NULL"
+                          for ix in range(len(parts)))
+            + " THEN NULL ELSE "
+            + fn + "("
+            + ", ".join(f"{v}.a{ix}" for ix in range(len(parts)))
+            + ") END"))
+
+
+@_calls("editDistance", "levenshteinDistance")
+def _edit_distance(call: _Call) -> str:
+    # CH's byte-string Levenshtein, exact on ANY input
+    # (r12c — the r11j multi-byte runtime raise is gone):
+    # ASCII stays on Spark's codegen levenshtein (bytes ==
+    # codepoints there); multi-byte rows dispatch to the
+    # ch_levenshtein_bytes fold shim per row.  The UDF binds each
+    # argument once and carries the ASCII fast path (plain
+    # levenshtein) inside — a lambda-var _bind_once envelope cannot
+    # call a SQL UDF (its inlined subplan cannot see the lambda
+    # variable)
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}(a, b) expects 2 args")
+    return f"ch_levenshtein_bytes(({parts[0]}), ({parts[1]}))"
+
+
+@_calls("JSONExtractKeys")
+def _json_extract_keys(call: _Call) -> str:
+    # CH: outermost object keys; [] for invalid JSON or a
+    # non-object (the JSONExtract-family default) where
+    # Spark's json_object_keys answers NULL; NULL input
+    # propagates.  The variadic indices_or_keys walk raises
+    # by name (review r11i).
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql(
+            "JSONExtractKeys(json) is bridged 1-arg only — "
+            "the indices_or_keys walk is not; extract the "
+            "nested object with get_json_object first")
+    return _bind_once(
+        f"({parts[0]})",
+        lambda v: (f"CASE WHEN {v} IS NULL THEN NULL ELSE "
+                   f"coalesce(json_object_keys({v}), array()) END"))
+
+
+@_calls("arrayEnumerateUniq")
+def _array_enumerate_uniq(call: _Call) -> str:
+    # CH: per element, its occurrence index among EQUAL
+    # values so far ([10,20,10] → [1,1,2]); NULL elements
+    # count as normal values (the hasAll/indexOf rule), hence
+    # <=> .  O(n²) per array — array scale, not row scale
+    # (r11i)
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql("arrayEnumerateUniq(arr) 1-array form only")
+    return _bind_once(
+        f"({parts[0]})",
+        lambda v: (f"transform({v}, (__x, __i) -> 1 + "
+                   f"size(filter(slice({v}, 1, __i), "
+                   f"__y -> __y <=> __x)))"))
+
+
+@_calls("arrayEnumerateDense")
+def _array_enumerate_dense(call: _Call) -> str:
+    # CH: rank of each element's FIRST occurrence
+    # ([10,20,10] → [1,2,1]) — position in the distinct
+    # array, NULL-safe via the indexOf pattern; the distinct
+    # array binds ONCE in the struct, not per element
+    # (review r11i)
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql("arrayEnumerateDense(arr) expects 1 array")
+    return _bind_once(
+        f"({parts[0]})",
+        lambda v: _bind_once(
+            f"array_distinct({v})",
+            lambda d: (f"transform({v}, __x -> CAST("
+                       f"array_position(transform({d}, "
+                       f"__e -> __e <=> __x), true) AS INT))")))
+
+
+@_calls("arrayIntersect")
+def _array_intersect(call: _Call) -> str:
+    # CH: distinct elements present in ALL argument arrays;
+    # CH documents no result ORDER — Spark's array_intersect
+    # keeps first-array order, inside that contract.  The
+    # variadic form folds the binary builtin (r11i)
+    parts = call.parts
+    if len(parts) < 2:
+        raise UnsupportedChSql("arrayIntersect(a, b, …) expects 2+ arrays")
+    expr = f"({parts[0]})"
+    for p in parts[1:]:
+        expr = f"array_intersect({expr}, ({p}))"
+    return expr
+
+
+@_calls("multiSearchAny")
+def _multi_search_any(call: _Call) -> str:
+    # CH multiSearchAny(h, [n1, n2, …]): 1 iff ANY needle is
+    # a substring (byte/char-blind for a boolean) (r11i)
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(
+            "multiSearchAny(haystack, needles) expects 2 args")
+    return _bind_once(
+        f"named_struct('h', ({parts[0]}), 'a', ({parts[1]}))",
+        lambda v: f"exists({v}.a, __n -> contains({v}.h, __n))")
+
+
+@_calls("multiSearchAnyCaseInsensitive")
+def _multi_search_any_ci(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(
+            f"{call.name}(haystack, [needles]) expects 2 args")
+    hay, arr = parts
+    return f"exists({arr}, __x -> contains(lower({hay}), lower(__x)))"
+
+
+#: tokens()'s separator class: the non-alphanumeric ASCII ranges, as
+#: a regex inside a SQL string literal
+_TOKEN_SEP = ("[\\\\x00-\\\\x2f\\\\x3a-\\\\x40\\\\x5b-\\\\x60"
+              "\\\\x7b-\\\\x7f]")
+
+
+@_calls("hasToken", "hasTokenOrNull")
+def _has_token(call: _Call) -> str:
+    # CH hasToken: the needle appears as a WHOLE token under
+    # tokens()'s rule (non-alphanumeric-ASCII separators) —
+    # expressed as membership in the same split the tokens()
+    # bridge emits, so the two stay rule-identical.  CH
+    # THROWS when the needle itself contains a separator
+    # (OrNull answers NULL) — checked at translate time for
+    # literals, at runtime otherwise (r11i).
+    name, parts = call.name, call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{name}(haystack, token) expects 2 args")
+    tok = parts[1].strip()
+    # a TRUE literal only (review r11i: `'a' || 'b'` also
+    # starts and ends with a quote); the separator test is
+    # the ASCII class itself — bytes ≥ 0x80 (and astral
+    # chars) are token characters in CH
+    is_lit = (tok.startswith("'") and tok.endswith("'")
+              and len(tok) >= 2
+              and "'" not in tok[1:-1].replace("''", ""))
+    if is_lit:
+        interior = tok[1:-1].replace("''", "'")
+        if interior == "" or re.search(
+                "[\x00-\x2f\x3a-\x40\x5b-\x60\x7b-\x7f]", interior):
+            why = ("is empty" if interior == ""
+                   else "contains tokenizer separators")
+            if name == "hasToken":
+                raise UnsupportedChSql(
+                    f"hasToken: needle {tok} {why} — "
+                    "ClickHouse throws here; use "
+                    "hasTokenOrNull or position()")
+            return "CAST(NULL AS BOOLEAN)"
+    bad = f"rlike({{v}}.t, '{_TOKEN_SEP}') OR length({{v}}.t) = 0"
+    body = (f"array_contains(filter(split({{v}}.h, "
+            f"'{_TOKEN_SEP}+'), __x -> __x != ''), {{v}}.t)")
+    onbad = ("CAST(NULL AS BOOLEAN)" if name == "hasTokenOrNull"
+             else "raise_error('hasToken: the token is empty "
+                  "or contains tokenizer separator characters "
+                  "— ClickHouse throws; use hasTokenOrNull')")
+    return _bind_once(
+        f"named_struct('h', ({parts[0]}), 't', ({parts[1]}))",
+        lambda v: (f"CASE WHEN {bad.format(v=v)} THEN {onbad} "
+                   f"ELSE {body.format(v=v)} END"))
+
+
+def _capture_groups(body_re: str) -> int:
+    """Count the CAPTURING groups of an unescaped Java regex: ``(``
+    counts unless it opens a ``(?…)`` construct, except Java's named
+    ``(?<name>…)``, which captures."""
+    ngroups, k, in_cls = 0, 0, False
+    while k < len(body_re):
+        ch = body_re[k]
+        if ch == "\\":
+            k += 2
+            continue
+        if in_cls:
+            in_cls = ch != "]"
+        elif ch == "[":
+            in_cls = True
+        elif ch == "(":
+            nxt = body_re[k + 1: k + 2]
+            nxt2 = body_re[k + 2: k + 3]
+            if nxt != "?" or (nxt2 == "<"
+                              and body_re[k + 3: k + 4] not in ("=", "!")):
+                ngroups += 1
+        k += 1
+    return ngroups
+
+
+@_calls("extractGroups")
+def _extract_groups(call: _Call) -> str:
+    # CH extractGroups(h, 'pattern'): the capture groups of
+    # the FIRST match as an array; [] when nothing matches.
+    # The group COUNT comes from compiling the literal
+    # pattern at translate time (r11i)
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(
+            "extractGroups(haystack, pattern) expects 2 args")
+    pat = parts[1].strip()
+    if not (pat.startswith("'") and pat.endswith("'")
+            and "'" not in pat[1:-1].replace("''", "")):
+        raise UnsupportedChSql(
+            "extractGroups needs a LITERAL pattern (the group "
+            "count shapes the result array)")
+    # count on the UNESCAPED regex body with a Java-semantics scanner
+    # (review r11i: Python re.compile over the still-SQL-escaped text
+    # miscounted '\\\\(' shapes, and Python-only syntax like (?P<…>)
+    # passed validation Java then rejects)
+    ngroups = _capture_groups(
+        pat[1:-1].replace("''", "'").replace("\\\\", "\\"))
+    if ngroups == 0:
+        raise UnsupportedChSql("extractGroups pattern has no capture groups")
+    return _bind_once(
+        f"({parts[0]})",
+        lambda v: (f"CASE WHEN {v} RLIKE {pat} THEN array("
+                   + ", ".join(f"regexp_extract({v}, {pat}, {g})"
+                               for g in range(1, ngroups + 1))
+                   + ") ELSE array() END"))
+
+
+@_calls("overlay", "overlayUTF8", ci=True)
+def _overlay(call: _Call) -> str:
+    # CH overlay(s, replace, offset[, length]) (24.x, added
+    # for standard compat) ALSO accepts NEGATIVE offsets
+    # counted from the end of s — Spark's captured builtin
+    # does not (review r11g).  offset -1 = the last
+    # character: position = length(s) + offset + 1.  The
+    # UTF8 spelling is the same function here (Spark strings
+    # are codepoint-based).
+    parts = call.parts
+    if len(parts) not in (3, 4):
+        raise UnsupportedChSql(
+            f"{call.name}(s, replace, offset[, length]) expects 3-4 args")
+    ln = f", {parts[3]}" if len(parts) == 4 else ""
+    return _bind_once(
+        f"named_struct('s', ({parts[0]}), 'r', ({parts[1]}), "
+        f"'o', CAST(({parts[2]}) AS INT))",
+        lambda v: (
+            f"CASE WHEN {v}.o >= 1 THEN "
+            f"overlay({v}.s, {v}.r, {v}.o{ln}) "
+            f"WHEN {v}.o <= -1 THEN overlay({v}.s, {v}.r, "
+            f"greatest(length({v}.s) + {v}.o + 1, 1){ln}) "
+            f"ELSE raise_error('overlay() offset 0: "
+            f"ClickHouse offsets are 1-based or negative-"
+            f"from-the-end — 0 has no documented meaning') "
+            f"END"))
+
+
+@_calls("boundingRatio")
+def _bounding_ratio(call: _Call) -> str:
+    # CH boundingRatio(x, y): the slope between the LEFTMOST
+    # and RIGHTMOST points of the group by x — (y at max x −
+    # y at min x) / (max x − min x).  Pure min/max_by
+    # aggregates (one hash agg, map-side partials); duplicate
+    # extreme x values pick an arbitrary y, CH's own
+    # envelope.  Rows where EITHER argument is NULL are
+    # skipped like CH's aggregate-NULL rule (the filtered x
+    # doubles as the max_by/min_by key, which ignores NULL
+    # keys), and a zero x-span answers nan/±inf through the
+    # divide() float envelope instead of Spark's ANSI
+    # DIVIDE_BY_ZERO (review r11g)
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("boundingRatio(x, y) expects 2 args")
+    x0 = f"CAST(({parts[0]}) AS DOUBLE)"
+    y0 = f"CAST(({parts[1]}) AS DOUBLE)"
+    ok = f"(({x0}) IS NOT NULL AND ({y0}) IS NOT NULL)"
+    xf = f"CASE WHEN {ok} THEN {x0} END"
+    yf = f"CASE WHEN {ok} THEN {y0} END"
+    dy = f"(max_by({yf}, {xf}) - min_by({yf}, {xf}))"
+    dx = f"(max({xf}) - min({xf}))"
+    return _bind_once(
+        f"named_struct('dy', {dy}, 'dx', {dx})",
+        lambda v: (
+            f"CASE WHEN {v}.dx IS NULL THEN CAST(NULL AS "
+            f"DOUBLE) WHEN {v}.dx = 0 THEN CASE "
+            f"WHEN {v}.dy = 0 THEN CAST('NaN' AS DOUBLE) "
+            f"WHEN {v}.dy > 0 THEN CAST('Infinity' AS DOUBLE) "
+            f"ELSE CAST('-Infinity' AS DOUBLE) END "
+            f"ELSE {v}.dy / {v}.dx END"))
+
+
+@_calls("intervalLengthSum")
+def _interval_length_sum(call: _Call) -> str:
+    # CH intervalLengthSum(start, end): total length of the
+    # UNION of the group's segments — overlaps merge, gaps
+    # don't count.  Sorted fold over the collected (s, e)
+    # pairs (the windowFunnel fold pattern): state = (cover
+    # end so far, total); a segment past the cover adds its
+    # whole length, an overlapping one adds only the
+    # extension.  Tie-safe by construction: the MEASURE of a
+    # boundary point is 0, so closed-vs-open touching
+    # segments sum identically (r11g).  Computes in DOUBLE
+    # (CH returns the integer type for integer bounds —
+    # exact through 2^53, the module's standard envelope).
+    # SCALE: the collected state is O(intervals per group) —
+    # the topK-fallback shape; grafana-panel groups are fine,
+    # a million-interval group wants the window spelling
+    # instead (sum over max(e) OVER (PARTITION BY key
+    # ORDER BY s, e ROWS … 1 PRECEDING) — the ev26 oracle's
+    # form; rehearsed in tools/scale_rehearsal_round11.py).
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("intervalLengthSum(start, end) expects 2 args")
+    s0 = f"CAST(({parts[0]}) AS DOUBLE)"
+    e0 = f"CAST(({parts[1]}) AS DOUBLE)"
+    evs = (f"array_sort(collect_list(CASE WHEN {s0} IS NOT "
+           f"NULL AND {e0} IS NOT NULL THEN "
+           f"named_struct('s', {s0}, 'e', {e0}) END))")
+    return (f"aggregate({evs}, "
+            f"named_struct('c', CAST('-Infinity' AS DOUBLE), "
+            f"'t', CAST(0 AS DOUBLE)), "
+            f"(acc, iv) -> named_struct("
+            f"'c', greatest(acc.c, iv.e), "
+            f"'t', acc.t + CASE WHEN iv.e <= acc.c THEN 0.0 "
+            f"WHEN iv.s >= acc.c THEN iv.e - iv.s "
+            f"ELSE iv.e - acc.c END), "
+            f"acc -> acc.t)")
+
+
+@_calls("studentTTest", "welchTTest")
+def _t_test(call: _Call) -> str:
+    # CH studentTTest/welchTTest(sample_data, sample_index):
+    # two-sample t-test over index 0 vs 1, returning the
+    # (t, p) tuple (r12d — the r11k raise is gone).  The t
+    # statistic and degrees of freedom are plain conditional
+    # aggregates; the two-sided p-value is the regularized
+    # incomplete beta I_{df/(df+t^2)}(df/2, 1/2) via the
+    # ch_t_pvalue shim (Lanczos lgamma + a bounded Lentz
+    # continued-fraction fold — pure JVM, no Python).
+    # Degenerate inputs (an empty side, a single point, zero
+    # pooled variance) answer (NaN, NaN) — CH's float NaNs;
+    # nullif guards keep ANSI mode from raising DIVIDE_BY_ZERO.
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(
+            f"{call.name}(sample_data, sample_index) expects 2 args"
+            " — the parameterized confidence-interval form is"
+            " not bridged")
+    xv = f"CAST(({parts[0]}) AS DOUBLE)"
+    ix = f"({parts[1]})"
+
+    def _agg(fn: str, side: int) -> str:
+        return f"{fn}(CASE WHEN {ix} = {side} THEN {xv} END)"
+
+    n0 = f"nullif(CAST({_agg('count', 0)} AS DOUBLE), 0)"
+    n1 = f"nullif(CAST({_agg('count', 1)} AS DOUBLE), 0)"
+    m0, m1 = _agg("avg", 0), _agg("avg", 1)
+    v0, v1 = _agg("var_samp", 0), _agg("var_samp", 1)
+    if call.name == "studentTTest":
+        df = f"nullif({n0} + {n1} - 2, 0)"
+        sp2 = f"((({n0} - 1) * {v0} + ({n1} - 1) * {v1}) / {df})"
+        tstat = (f"(({m0} - {m1}) / nullif(sqrt({sp2} *"
+                 f" (1 / {n0} + 1 / {n1})), 0))")
+    else:
+        se0 = f"({v0} / {n0})"
+        se1 = f"({v1} / {n1})"
+        se2 = f"({se0} + {se1})"
+        tstat = f"(({m0} - {m1}) / nullif(sqrt({se2}), 0))"
+        df = (f"({se2} * {se2} / nullif("
+              f"{se0} * {se0} / nullif({n0} - 1, 0) +"
+              f" {se1} * {se1} / nullif({n1} - 1, 0), 0))")
+    nan = "CAST('NaN' AS DOUBLE)"
+    # bind (t, df) ONCE through a one-element transform and
+    # splice the p-value INLINE from the same builders as the
+    # ch_t_pvalue shim — calling the SQL UDF here would break:
+    # extracting a field from a struct that carries both
+    # aggregates and an inlined UDF is unevaluable in Spark
+    # (UDF inlining x SimplifyExtractValueOps, r12d)
+    return (f"(transform(array(named_struct("
+            f"'t', {tstat}, 'df', {df})), "
+            f"__ts -> named_struct("
+            f"'col1', coalesce(__ts.t, {nan}), "
+            f"'col2', coalesce("
+            f"{_t_pvalue_text('__ts.t', '__ts.df')}, {nan}))))[0]")
+
+
+@_calls("simpleLinearRegression")
+def _simple_linear_regression(call: _Call) -> str:
+    # CH simpleLinearRegression(x, y) fits y ≈ k·x + b and
+    # returns the tuple (k, b) — exactly Spark's OLS pair
+    # regr_slope/regr_intercept with the DEPENDENT variable
+    # first (the argument roles swap); colN field names keep
+    # tupleElement positional access working (r11f)
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(
+            "simpleLinearRegression(x, y) expects 2 arguments")
+    x = f"CAST(({parts[0]}) AS DOUBLE)"
+    y = f"CAST(({parts[1]}) AS DOUBLE)"
+    # degenerate groups (a single point, zero x-variance, or
+    # no valid pairs): CH answers (nan, nan) where
+    # regr_slope/intercept answer NULL — coalesce to NaN so
+    # downstream isNaN()/comparison logic branches like CH
+    # (review r11f)
+    nan = "CAST('NaN' AS DOUBLE)"
+    return (f"named_struct("
+            f"'col1', coalesce(regr_slope({y}, {x}), {nan}), "
+            f"'col2', coalesce(regr_intercept({y}, {x}), {nan}))")
+
+
+@_calls("isNaN", ci=True)
+def _is_nan(call: _Call) -> str:
+    # CH isNaN(NULL) is NULL (ordinary NULL propagation);
+    # Spark isnan(NULL) is false — silent on nullable columns
+    return _bind_once(
+        f"({call.inner})",
+        lambda v: f"CASE WHEN {v} IS NULL THEN NULL ELSE isnan({v}) END")
+
+
+@_calls("hex", ci=True)
+def _hex(call: _Call) -> str:
+    # CH hex() of an INTEGER pads to the source type's byte
+    # width (hex(10) = '0A'); Spark answers the minimal 'A'.
+    # String/binary inputs are byte-identical on both engines
+    # — typeof() dispatch keeps them and turns the integer
+    # path into a RUNTIME raise (loud, never silent).
+    return _bind_once(
+        f"({call.inner})",
+        lambda v: (
+            f"CASE WHEN typeof({v}) IN ('string', 'binary') "
+            f"THEN hex({v}) ELSE raise_error(concat("
+            f"'hex() over ', typeof({v}), ': CH pads to the "
+            f"source integer WIDTH, unknowable from Spark''s "
+            f"BIGINT — use Spark hex() for minimal-width')) "
+            f"END"))
+
+
+@_calls("unhex", ci=True)
+def _unhex(call: _Call) -> str:
+    # CH unhex returns String (raw bytes); Spark returns
+    # BINARY — CAST bridges (byte-identical for valid UTF-8;
+    # CH strings holding non-UTF8 bytes are not representable)
+    return f"CAST(unhex({call.inner}) AS STRING)"
+
+
+_DATE_ADD_UNITS = {"YEAR", "QUARTER", "MONTH", "WEEK", "DAY",
+                   "HOUR", "MINUTE", "SECOND"}
+
+
+@_calls("dateAdd", "date_add", "dateSub", "date_sub", "timestampSub",
+        "timestamp_sub", ci=True)
+def _date_add(call: _Call) -> str | None:
+    # CH 3-arg form date_add(unit, n, ts) == Spark
+    # timestampadd's argument order (the timestampAdd rename);
+    # Spark's captured date_add(date, days) has the
+    # ARGUMENTS REVERSED, so a passthrough would crash or
+    # silently mis-add.  Documented deviation: timestampadd
+    # always returns TIMESTAMP where CH date_add over a Date
+    # returns Date — wrap in toDate() to keep a date.  The
+    # 2-arg INTERVAL form maps to type-PRESERVING +/-
+    # arithmetic instead.  A 2-arg non-INTERVAL call is not
+    # valid CH — it is kept as Spark's own date_add(date, days).
+    parts = call.parts
+    neg = "sub" in call.name.lower()
+    if len(parts) == 3:
+        unit = parts[0].strip().strip("'\"").upper()
+        if unit not in _DATE_ADD_UNITS:
+            raise UnsupportedChSql(
+                f"{call.name}: unit {parts[0].strip()!r} not in "
+                f"{sorted(_DATE_ADD_UNITS)}")
+        n_expr = f"-({parts[1]})" if neg else parts[1]
+        return f"timestampadd({unit}, {n_expr}, {parts[2]})"
+    if len(parts) == 2 and re.match(r"(?is)^\s*INTERVAL\b", parts[1]):
+        op = "-" if neg else "+"
+        return f"(({parts[0]}) {op} ({parts[1]}))"
+    return None
+
+
+@_calls("isZeroOrNull")
+def _is_zero_or_null(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql("isZeroOrNull(x) expects 1 arg")
+    return _bind_once(f"({parts[0]})", lambda v: f"({v} IS NULL OR {v} = 0)")
+
+
+@_calls("sumArray", "countArray", "avgArray", "minArray", "maxArray",
+        "groupArrayArray")
+def _array_combinator(call: _Call) -> str:
+    # -Array combinator family: aggregate over every ELEMENT
+    # of the array column across rows (r10b).  Decomposable
+    # forms ride plain aggregates of per-row reductions —
+    # partial/final map-side combine preserved, no explode.
+    # sumArray/avgArray share arraySum's documented DOUBLE
+    # accumulation contract.
+    name, parts = call.name, call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql(f"{name}(arr) expects 1 argument")
+    a = parts[0]
+    # empty input SET follows the bridge's count/sum
+    # discipline: CH returns 0/0/nan, Spark's bare aggregates
+    # return NULL (review r10b)
+    if name == "sumArray":
+        return f"coalesce(sum({_ARR_SUM.format(a=a)}), CAST(0 AS DOUBLE))"
+    if name == "countArray":
+        return f"CAST(coalesce(sum(size({a})), 0) AS BIGINT)"
+    if name == "avgArray":
+        # CH avgArray over zero elements (or zero rows) → nan
+        return (f"(CASE WHEN coalesce(sum(size({a})), 0) = 0 "
+                f"THEN CAST('NaN' AS DOUBLE) "
+                f"ELSE sum({_ARR_SUM.format(a=a)}) / sum(size({a})) "
+                f"END)")
+    if name == "minArray":
+        return f"min(array_min({a}))"
+    if name == "maxArray":
+        return f"max(array_max({a}))"
+    # groupArrayArray: concatenation, order arbitrary
+    # in BOTH engines (CH documents the order as undefined)
+    return f"flatten(collect_list({a}))"
+
+
+@_calls("lagInFrame", "leadInFrame")
+def _lag_lead_in_frame(call: _Call) -> str:
+    # CH has NO plain lag/lead — lagInFrame/leadInFrame over
+    # the explicit full frame IS the CH spelling of ANSI
+    # lag()/lead() (CH window-functions docs' own idiom).
+    # Spark's lag/lead forbid an explicit frame, so the full
+    # frame is stripped from the OVER clause.  Other frames
+    # are frame-dependent in CH (the function reads within
+    # the frame) and raise; frameless lagInFrame equals lag
+    # under CH's default frame, frameless leadInFrame does
+    # NOT equal lead (the default frame ends at the current
+    # row) and raises.
+    name, sql, k = call.name, call.sql, call.after()
+    base = "lag" if name == "lagInFrame" else "lead"
+    om = re.match(r"(?is)OVER\s*\(", sql[k:])
+    if om is None:
+        raise UnsupportedChSql(
+            f"{name} needs an inline OVER (...) clause — named "
+            "WINDOW references are not bridged")
+    oopen = k + om.end() - 1
+    oclose = _find_close(sql, oopen)
+    over = sql[oopen + 1: oclose]
+    stripped = re.sub(
+        r"(?is)\s*ROWS\s+BETWEEN\s+UNBOUNDED\s+PRECEDING\s+AND"
+        r"\s+UNBOUNDED\s+FOLLOWING\s*$", "", over)
+    if stripped == over and name == "lagInFrame":
+        # frames whose LOWER bound is unbounded still cover
+        # every lag offset — the shorthand `ROWS UNBOUNDED
+        # PRECEDING` and the `BETWEEN UNBOUNDED PRECEDING AND
+        # CURRENT ROW` form are lag-equivalent (review r10b)
+        stripped = re.sub(
+            r"(?is)\s*(?:ROWS|RANGE|GROUPS)\s+(?:BETWEEN\s+)?"
+            r"UNBOUNDED\s+PRECEDING"
+            r"(?:\s+AND\s+CURRENT\s+ROW)?\s*$", "", over)
+    if stripped == over and (
+            re.search(r"(?is)\b(ROWS|RANGE|GROUPS)\b", over)
+            or name == "leadInFrame"):
+        raise UnsupportedChSql(
+            f"{name} with a frame that does not cover the "
+            "offset reads within that frame in CH and has "
+            "no Spark lag/lead equivalent — use ROWS "
+            "BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED "
+            "FOLLOWING")
+    call.end = oclose + 1
+    return f"{base}({call.inner}) OVER ({_rewrite_calls(stripped)})"
+
+
+@_calls("extract", ci=True)
+def _extract(call: _Call) -> str:
+    # CH extract(haystack, 'regexp') = first match (or the
+    # first capture group if the pattern has one); the name
+    # is a CASE-INSENSITIVE CH registration.  Only the comma
+    # form with a LITERAL pattern rewrites — `EXTRACT(
+    # field FROM ts)` has no top-level comma and passes
+    # through to Spark's builtin untouched.
+    parts = call.parts
+    if len(parts) == 2 and parts[1].strip().startswith("'"):
+        pat = parts[1].strip()
+        group = 1 if _regex_has_capture_group(pat[1:-1]) else 0
+        return f"regexp_extract({parts[0]}, {pat}, {group})"
+    if len(parts) == 2:
+        # a comma form with a NON-literal pattern: the group
+        # index (whole match vs first subpattern) depends on
+        # the pattern's text — raise instead of guessing, and
+        # instead of letting Spark's extract() capture it
+        # (collision sweep r11a)
+        raise UnsupportedChSql(
+            "extract(haystack, re) needs a LITERAL pattern — "
+            "CH returns the first capture group when the "
+            "pattern has one, the whole match otherwise, "
+            "which a rewrite cannot decide for a runtime "
+            "pattern; spell regexp_extract(h, p, group)")
+    return f"extract({call.inner})"
+
+
+@_calls("groupArray", "groupUniqArray")
+def _group_array(call: _Call) -> str:
+    if call.has_params:
+        raise UnsupportedChSql(
+            f"{call.name}(N)(x) max-size form not supported — CH keeps "
+            "the FIRST N in read order, which Spark's unordered "
+            "collect cannot honor; use the plain form + slice, or "
+            "an explicit window"
+        )
+    return call.plain("collect_list" if call.name == "groupArray"
+                      else "collect_set")
+
+
+@_calls("assumeNotNull")
+def _assume_not_null(call: _Call) -> str:
+    return f"({call.inner})"  # relational no-op on Spark
+
+
+@_calls(*_ADDSUB_UNITS)
+def _add_sub_unit(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}(ts, n) expects 2 arguments")
+    unit, sign = _ADDSUB_UNITS[call.name]
+    n_expr = parts[1] if sign > 0 else f"-({parts[1]})"
+    return f"timestampadd({unit}, {n_expr}, {parts[0]})"
+
+
+@_calls("dateDiff", "date_diff", "timestamp_diff", "timestampDiff",
+        ci=True)
+def _date_diff(call: _Call) -> str:
+    # CH registers these aliases CASE-INSENSITIVELY (its one
+    # exception to case-sensitive function names) — matching
+    # exact spellings only would let TIMESTAMPDIFF fall
+    # through to Spark's complete-interval builtin, the
+    # silent mistranslation _datediff_expr exists to prevent
+    # (review r10g).  The alias spellings accept a BARE
+    # identifier unit (timestamp_diff(DAY, a, b)) — quote it
+    # for the shared boundary-crossing expression.
+    parts = call.parts
+    if parts and re.fullmatch(r"[A-Za-z]+", parts[0].strip()):
+        parts[0] = f"'{parts[0].strip().lower()}'"
+    return _datediff_expr(parts)
+
+
+@_calls("sumCount")
+def _sum_count(call: _Call) -> str:
+    # CH sumCount(x) → tuple (sum, count) — two sibling
+    # aggregates in a colN-named struct so tupleElement
+    # positional access resolves (r10g)
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql("sumCount(x) expects 1 argument")
+    return f"named_struct('col1', sum({parts[0]}), 'col2', count({parts[0]}))"
+
+
+@_calls("formatDateTime")
+def _format_date_time(call: _Call) -> str:
+    return _format_datetime_expr(call.parts)
+
+
+@_calls(*_LAMBDA_SWAP)
+def _lambda_swap(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(
+            f"{call.name}(lambda, arr) with exactly one array is "
+            "supported (Spark's HOFs take a single array)"
+        )
+    return f"{_LAMBDA_SWAP[call.name]}({parts[1]}, {parts[0]})"
+
+
+@_calls("arrayCount")
+def _array_count(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) == 1:
+        # 1-arg form counts TRUTHY elements (non-zero,
+        # non-NULL) like every CH higher-order default (r10d)
+        return f"size(filter({parts[0]}, __x -> __x IS NOT NULL AND __x != 0))"
+    if len(parts) != 2:
+        raise UnsupportedChSql("arrayCount(lambda, arr) expects 2 args")
+    return f"size(filter({parts[1]}, {parts[0]}))"
+
+
+@_calls("arrayFold")
+def _array_fold(call: _Call) -> str:
+    # CH arrayFold(lambda, arr, init) ≡ Spark aggregate(arr,
+    # init, lambda) — both lambdas are (acc, x) (r10d)
+    parts = call.parts
+    if len(parts) != 3 or not _is_lambda_arg(parts[0]):
+        raise UnsupportedChSql(
+            "arrayFold(lambda, arr, init) with exactly one "
+            "array is supported")
+    return f"aggregate({parts[1]}, {parts[2]}, {parts[0]})"
+
+
+@_calls("arrayResize")
+def _array_resize(call: _Call) -> str:
+    # 3-arg form (explicit extender) is exact; the 2-arg form
+    # pads with the element TYPE's default, which SQL text
+    # cannot know — raise naming the workaround (r10d)
+    parts = call.parts
+    if len(parts) != 3:
+        raise UnsupportedChSql(
+            "arrayResize(arr, size) pads with the element type's "
+            "default — spell the 3-arg form with an explicit "
+            "extender (arrayResize(arr, size, 0))")
+    a, sz, ext = parts
+    return _bind_once(
+        f"named_struct('a', {a}, 'n', CAST(({sz}) AS INT))",
+        lambda v: (
+            f"CASE WHEN {v}.n <= 0 THEN slice({v}.a, 1, 0) "
+            f"WHEN {v}.n <= size({v}.a) "
+            f"THEN slice({v}.a, 1, {v}.n) "
+            f"ELSE concat({v}.a, array_repeat(({ext}), "
+            f"{v}.n - size({v}.a))) END"))
+
+
+@_calls("format")
+def _format(call: _Call) -> str | None:
+    # CH format('{}-{}', a, b) / format('{1} {0}', a, b) →
+    # format_string('%s-%s', args[, reordered]) (r10e).  Only
+    # the literal-pattern form rewrites; CH forbids mixing
+    # auto {} and manual {N} indexing, and so does this.
+    if not call.inner.strip().startswith("'"):
+        return None
+    parts = call.parts
+    pat = parts[0].strip()
+    if not (pat.startswith("'") and pat.endswith("'")):
+        raise UnsupportedChSql("format() needs a literal pattern string")
+    args = parts[1:]
+    auto = manual = 0
+    order: list[int] = []
+    new_body = []    # %-escaped, for format_string
+    plain_body = []  # unescaped, for the zero-placeholder path
+    for t in re.split(r"(\{\{|\}\}|\{\d*\})", pat[1:-1]):
+        if t == "{{":
+            new_body.append("{")
+            plain_body.append("{")
+        elif t == "}}":
+            new_body.append("}")
+            plain_body.append("}")
+        elif re.fullmatch(r"\{\d+\}", t or ""):
+            manual += 1
+            order.append(int(t[1:-1]))
+            new_body.append("%s")
+        elif t == "{}":
+            auto += 1
+            order.append(auto - 1)
+            new_body.append("%s")
+        else:
+            new_body.append(t.replace("%", "%%"))
+            plain_body.append(t)
+    if auto and manual:
+        raise UnsupportedChSql(
+            "format() cannot mix automatic {} and manual {N} "
+            "indexing (the CH rule)")
+    if any(ix >= len(args) for ix in order):
+        raise UnsupportedChSql(
+            "format() placeholder index exceeds the argument list")
+    # the body slice is ALREADY in SQL-escaped form ('' for a
+    # quote inside the original literal) — re-escaping would
+    # corrupt the value (review r10f)
+    fmt = "".join(new_body)
+    if not order:
+        # no placeholders: a plain literal, WITHOUT the
+        # %-escaping format_string would need (review r10f)
+        return f"'{''.join(plain_body)}'"
+    # NULL arguments propagate NULL like CH string functions
+    # (format_string would render the text \"null\"); args
+    # bind once through the usual envelope
+    binds = ", ".join(f"'a{ix}', CAST(({a}) AS STRING)"
+                      for ix, a in enumerate(args, 1))
+    return _bind_once(
+        f"named_struct({binds})",
+        lambda v: (
+            "CASE WHEN "
+            + " OR ".join(f"{v}.a{ix + 1} IS NULL"
+                          for ix in sorted(set(order)))
+            + " THEN CAST(NULL AS STRING) ELSE format_string('"
+            + fmt + "'"
+            + "".join(f", {v}.a{ix + 1}" for ix in order)
+            + ") END"))
+
+
+@_calls("materialize", "identity", "toNullable")
+def _no_op_wrapper(call: _Call) -> str:
+    # CH engine hints / type-nullability wrappers: relational
+    # no-ops here (every Spark column is nullable; the
+    # assumeNotNull twin is handled above) (r10e)
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql(f"{call.name}(x) expects 1 argument")
+    return f"({parts[0]})"
+
+
+@_calls("sign")
+def _sign(call: _Call) -> str:
+    # CH sign() returns Int8 (-1/0/1); Spark's returns DOUBLE
+    # — numerically equal but a silent TYPE diff in rendered
+    # results (r10e)
+    return f"CAST(sign({call.inner}) AS INT)"
+
+
+@_calls(*(f"toInterval{u}" for u in (
+    "Second", "Minute", "Hour", "Day", "Week", "Month", "Quarter",
+    "Year")))
+def _to_interval(call: _Call) -> str:
+    # CH toIntervalX(n) → n * INTERVAL 1 X.  DEVIATION: Spark
+    # types date + day-time-interval as TIMESTAMP where CH
+    # keeps Date; year-month intervals keep DATE on both.
+    unit = call.name[10:].upper()
+    if unit == "WEEK":
+        return f"(({call.inner}) * INTERVAL '7' DAY)"
+    if unit == "QUARTER":
+        return f"(({call.inner}) * INTERVAL '3' MONTH)"
+    return f"(({call.inner}) * INTERVAL '1' {unit})"
+
+
+@_calls("tokens")
+def _tokens(call: _Call) -> str:
+    # CH tokens() default tokenizer: NON-ALPHANUMERIC ASCII
+    # characters are the separators — non-ASCII bytes
+    # (Cyrillic letters, unicode punctuation) stay inside
+    # tokens, so the split class is the explicit ASCII
+    # non-alnum ranges, not \\P{Alnum} (r10d)
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql("tokens(s) 1-arg default tokenizer only")
+    return f"filter(split({parts[0]}, '{_TOKEN_SEP}+'), __x -> __x != '')"
+
+
+@_calls("splitByWhitespace")
+def _split_by_whitespace(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql("splitByWhitespace(s) expects 1 arg")
+    return f"filter(split({parts[0]}, '\\\\s+'), __x -> __x != '')"
+
+
+@_calls("ngrams")
+def _ngrams(call: _Call) -> str:
+    # character n-grams; CH operates on BYTES — identical for
+    # ASCII, code-point-based here (same family of documented
+    # UTF-8 deviations as substring/length) (r10d)
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("ngrams(s, n) expects 2 args")
+    return _bind_once(
+        f"named_struct('s', ({parts[0]}), 'n', CAST(({parts[1]}) AS INT))",
+        lambda v: (
+            # sequence(1, 0) would count DOWN — guard short
+            # strings to an empty array instead
+            f"CASE WHEN length({v}.s) < {v}.n "
+            f"THEN CAST(array() AS ARRAY<STRING>) "
+            f"ELSE transform(sequence(1, "
+            f"length({v}.s) - {v}.n + 1), "
+            f"__i -> substring({v}.s, __i, {v}.n)) END"))
+
+
+@_calls("argMaxIf", "argMinIf")
+def _arg_if(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 3:
+        raise UnsupportedChSql(f"{call.name}(x, by, cond) expects 3 args")
+    base = "max_by" if call.name == "argMaxIf" else "min_by"
+    x, by, cond = parts
+    return (f"{base}(CASE WHEN {cond} THEN {x} END, "
+            f"CASE WHEN {cond} THEN {by} END)")
+
+
+@_calls("splitByString", "splitByChar")
+def _split_by_string(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2 or not (
+            parts[0].startswith("'") and parts[0].endswith("'")):
+        raise UnsupportedChSql(f"{call.name} expects a literal separator")
+    return f"split({parts[1]}, '{_sep_regex_lit(parts[0])}')"
+
+
+@_calls(*_PARAMETERIZED_PLURAL)
+def _quantiles(call: _Call) -> str | None:
+    if not call.has_params:
+        return None
+    args = call.args()
+    return (f"{_PARAMETERIZED_PLURAL[call.name]}({args[0]}, "
+            f"array({call.inner.strip()}))")
+
+
+@_calls("quantileExactWeighted", "quantileTimingWeighted")
+def _quantile_weighted(call: _Call) -> str | None:
+    if not call.has_params:
+        return None
+    args = call.args()
+    if len(args) != 2:
+        raise UnsupportedChSql(f"{call.name}(q)(x, w) expects 2 args")
+    # Spark percentile's third argument IS the frequency weight.
+    # TimingWeighted maps to the EXACT weighted percentile —
+    # the same honest-analogue treatment as quantileTiming
+    # (CH's timing sketch is itself approximate).
+    return f"percentile({args[0]}, {call.inner.strip()}, {args[1]})"
+
+
+@_calls(*_PARAMETERIZED)
+def _quantile(call: _Call) -> str:
+    spark = _PARAMETERIZED[call.name]
+    if not call.has_params:  # CH `quantile(x)` defaults to median
+        return f"{spark}({call.inner}, 0.5)"
+    args = call.args()
+    # quantileDeterministic(x, seed): the seed only stabilizes
+    # CH's sampling — exact/approx percentile ignores it.
+    cols = args[0] if call.name == "quantileDeterministic" else ", ".join(args)
+    return f"{spark}({cols}, {call.inner.strip()})"
+
+
+@_calls(*_IF_AGGS)
+def _if_agg(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}() expects 2 arguments")
+    case = f"CASE WHEN {parts[1]} THEN {parts[0]} END"
+    # any_value respects NULLs by default — the CASE injects
+    # one per non-matching row, so pass ignoreNulls=true
+    if _IF_AGGS[call.name] == "any_value":
+        body = f"any_value({case}, true)"
+    else:
+        body = f"{_IF_AGGS[call.name]}({case})"
+    # CH's sum family returns 0 (not NULL) when no row matches
+    if call.name == "sumIf":
+        body = f"coalesce({body}, 0)"
+    # CH's quantile family returns NaN on an empty sequence
+    elif call.name in ("medianIf", "medianExactIf"):
+        body = f"coalesce({body}, CAST('NaN' AS DOUBLE))"
+    return body
+
+
+@_calls("uniqExact")
+def _uniq_exact(call: _Call) -> str:
+    return f"count(DISTINCT {call.inner})"
+
+
+@_calls("kurtPop")
+def _kurt_pop(call: _Call) -> str:
+    # Spark kurtosis is EXCESS kurtosis; CH kurtPop is Pearson
+    return f"(kurtosis({call.inner}) + 3)"
+
+
+@_calls("toUnixTimestamp64Milli", "toUnixTimestamp64Micro",
+        "toUnixTimestamp64Nano", "fromUnixTimestamp64Milli",
+        "fromUnixTimestamp64Micro")
+def _unix_timestamp64(call: _Call) -> str:
+    # clean raise for the optional tz argument (same session-
+    # timezone discipline as now64; the bare shim would die
+    # with an opaque arity error — review r9f)
+    if len(call.parts) > 1:
+        raise UnsupportedChSql(
+            f"{call.name} timezone argument not supported — the "
+            "session timezone governs rendering")
+    return f"{call.name}({call.inner})"
+
+
+@_calls("now64")
+def _now64(call: _Call) -> str:
+    # now64([precision[, tz]]): Spark timestamps are fixed
+    # micros; a tz argument would violate the session-zone
+    # discipline
+    if len([p for p in call.parts if p.strip()]) > 1:
+        raise UnsupportedChSql(
+            "now64 timezone argument not supported — the "
+            "session timezone governs rendering")
+    return "current_timestamp()"
+
+
+@_calls("extractAll")
+def _extract_all(call: _Call) -> str:
+    # array of matches; like extract(), the first capture
+    # group when the pattern has one, else the whole match
+    parts = call.parts
+    if len(parts) != 2 or not parts[1].strip().startswith("'"):
+        raise UnsupportedChSql(
+            "extractAll(haystack, 'regexp') needs a literal pattern")
+    pat = parts[1].strip()
+    group = 1 if _regex_has_capture_group(pat[1:-1]) else 0
+    return f"regexp_extract_all({parts[0]}, {pat}, {group})"
+
+
+@_calls("splitByRegexp")
+def _split_by_regexp(call: _Call) -> str:
+    # CH argument order is (regexp, haystack); Spark split()
+    # already treats the separator as a regex
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("splitByRegexp(re, s) expects 2 args")
+    return f"split({parts[1]}, {parts[0]})"
+
+
+@_calls("like", "notLike", "ilike", "notILike")
+def _like(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}(haystack, pattern)")
+    op = "ILIKE" if call.name in ("ilike", "notILike") else "LIKE"
+    neg = "NOT " if call.name.startswith("not") else ""
+    return f"(({parts[0]}) {neg}{op} ({parts[1]}))"
+
+
+@_calls("sumDistinct", "countDistinct", "avgDistinct")
+def _distinct_agg(call: _Call) -> str:
+    # sum_distinct/count_distinct are DataFrame-API-only names
+    return f"{call.name[:-len('Distinct')]}(DISTINCT {call.inner})"
+
+
+@_calls("uniqExactIf")
+def _uniq_exact_if(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("uniqExactIf(x, cond) expects 2 args")
+    return f"count(DISTINCT CASE WHEN {parts[1]} THEN {parts[0]} END)"
+
+
+@_calls("countIf")
+def _count_if(call: _Call) -> str:
+    # 1-arg = predicate count; CH's 2-arg form counts non-NULL x
+    # where cond holds
+    parts = call.parts
+    if len(parts) == 2:
+        return f"count(CASE WHEN {parts[1]} THEN {parts[0]} END)"
+    return f"count_if({call.inner})"
+
+
+@_calls("avgWeighted")
+def _avg_weighted(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("avgWeighted(x, w) expects 2 args")
+    x, w = parts
+    # CH skips the whole ROW when x is NULL — the denominator
+    # must not count that row's weight (review r9e); zero or
+    # empty total weight returns NaN like CH (also guards the
+    # ANSI divide-by-zero)
+    wsum = f"sum(CASE WHEN ({x}) IS NOT NULL THEN ({w}) END)"
+    return (f"(CASE WHEN coalesce({wsum}, 0) = 0 "
+            f"THEN CAST('NaN' AS DOUBLE) "
+            f"ELSE sum(CAST(({x}) AS DOUBLE) * ({w})) / {wsum} END)")
+
+
+@_calls("hasAll", "hasAny")
+def _has_all_any(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}(arr, subset) expects 2 args")
+    # CH treats NULL elements as normal values (hasAll([1,
+    # NULL], [NULL]) = 1) — <=> keeps that; array_contains /
+    # arrays_overlap would return NULL instead (review r9e)
+    outer = "forall" if call.name == "hasAll" else "exists"
+    return (f"{outer}({parts[1]}, __x -> "
+            f"exists({parts[0]}, __y -> __y <=> __x))")
+
+
+@_calls("countEqual")
+def _count_equal(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql("countEqual(arr, x) expects 2 args")
+    return f"size(filter({parts[0]}, __x -> __x <=> ({parts[1]})))"
+
+
+@_calls(*_DIGESTS, ci=True)
+def _digest(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 1:
+        raise UnsupportedChSql(f"{call.name}(x) expects 1 argument")
+    return _DIGESTS[call.name.lower()].format(x=parts[0])
+
+
+#: a uniform UInt32 draw
+_RAND32 = "CAST(floor(rand() * 4294967296) AS BIGINT)"
+
+
+@_calls("rand", "rand32", ci=True)
+def _rand(call: _Call) -> str:
+    # CH rand() (alias rand32; case-insensitive, MySQL
+    # compat) is a uniform UInt32 draw, NOT Spark's [0, 1)
+    # double — `rand() % 100 < 5` would silently select every
+    # row under the bare mapping.  An optional argument is a
+    # CSE-blocking tag in CH: accepted and ignored.
+    return _RAND32
+
+
+@_calls("rand64")
+def _rand64(call: _Call) -> str:
+    # two 32-bit draws packed into one 64-bit pattern,
+    # interpreted SIGNED (the same 64-bit-signed deviation as
+    # the bit-op family; CH's type is UInt64)
+    return f"(shiftleft({_RAND32}, 32) | {_RAND32})"
+
+
+@_calls("randCanonical")
+def _rand_canonical(call: _Call) -> str:
+    return "rand()"  # both engines: uniform [0, 1) double
+
+
+@_calls("arrayMin", "arrayMax")
+def _array_min_max(call: _Call) -> str:
+    base = "array_min" if call.name == "arrayMin" else "array_max"
+    parts = call.parts
+    if len(parts) == 2 and _is_lambda_arg(parts[0]):
+        return f"{base}(transform({parts[1]}, {parts[0]}))"
+    return call.plain(base)
+
+
+@_calls(*_ARR_SINGLE)
+def _array_single(call: _Call) -> str:
+    name, parts = call.name, call.parts
+    # CH's optional (lambda, array) form (arraySum/Avg/Product/
+    # CumSum only) reduces to the single-array form over
+    # transform(array, lambda)
+    takes_lambda = name in ("arraySum", "arrayAvg", "arrayProduct",
+                            "arrayCumSum")
+    if takes_lambda and len(parts) == 2 and _is_lambda_arg(parts[0]):
+        arr = f"transform({parts[1]}, {parts[0]})"
+    elif len(parts) == 1:
+        arr = parts[0]
+    else:
+        raise UnsupportedChSql(
+            f"{name} expects one array"
+            + (" (or a lambda + one array)" if takes_lambda else ""))
+    tpl = _ARR_SINGLE[name]
+    if tpl.count("{a}") > 1:
+        # multi-splice template: bind the array once so a
+        # nondeterministic argument isn't re-evaluated per
+        # reference (ADVICE r9)
+        return _bind_once(arr, lambda v: f"({tpl.format(a=v)})")
+    return f"({tpl.format(a=arr)})"
+
+
+@_calls(*_ARR_LAMBDA)
+def _array_lambda(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2 or not _is_lambda_arg(parts[0]):
+        raise UnsupportedChSql(f"{call.name}(lambda, arr) expects 2 args")
+    return _ARR_LAMBDA[call.name].format(a=parts[1], L=parts[0])
+
+
+@_calls("arraySort", "arrayReverseSort")
+def _array_sort(call: _Call) -> str | None:
+    parts = call.parts
+    desc = call.name == "arrayReverseSort"
+    if len(parts) == 2 and _is_lambda_arg(parts[0]):
+        tpl = _ARR_SORT_LAMBDA_DESC if desc else _ARR_SORT_LAMBDA
+        # the decorate-sort-undecorate template splices the
+        # array twice (key transform + value side of zip_with):
+        # bind it once so nondeterministic arguments can't
+        # mispair keys with values (ADVICE r9)
+        lam = parts[0]
+        return _bind_once(parts[1], lambda v: tpl.format(a=v, L=lam))
+    if len(parts) == 1 and desc:
+        return _ARR_SORT_DESC.format(a=parts[0])
+    # 1-arg arraySort is Spark's array_sort (already
+    # asc-with-NULLs-last, like CH)
+    return None if desc else call.plain("array_sort")
+
+
+@_calls("arrayPushBack", "arrayPushFront")
+def _array_push(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2:
+        raise UnsupportedChSql(f"{call.name}(arr, x) expects 2 args")
+    a, x = parts
+    return (f"concat({a}, array({x}))" if call.name == "arrayPushBack"
+            else f"concat(array({x}), {a})")
+
+
+@_calls("arrayReduce")
+def _array_reduce(call: _Call) -> str:
+    parts = call.parts
+    if (len(parts) != 2 or not parts[0].strip().startswith("'")
+            or not parts[0].strip().endswith("'")):
+        raise UnsupportedChSql(
+            "arrayReduce('agg', arr) expects a literal aggregate "
+            "name and one array")
+    agg = parts[0].strip()[1:-1]
+    if agg not in _ARR_REDUCE:
+        raise UnsupportedChSql(
+            f"arrayReduce aggregate {agg!r} not supported — "
+            f"supported: {', '.join(sorted(_ARR_REDUCE))}")
+    return f"({_ARR_REDUCE[agg].format(a=parts[1])})"
+
+
+@_calls("transform")
+def _transform(call: _Call) -> str | None:
+    # CH's dictionary transform(x, from, to[, default]); the
+    # 2-arg spelling is Spark's own lambda HOF and passes
+    # through untouched
+    parts = call.parts
+    if len(parts) not in (3, 4) or _is_lambda_arg(parts[1]):
+        return None
+    x, frm, to = parts[0], parts[1], parts[2]
+    # element_at's index is INT; position 0 (no match) must
+    # become NULL — try_element_at raises on a literal 0
+    idx = f"CAST(nullif(array_position({frm}, {x}), 0) AS INT)"
+    dflt = parts[3] if len(parts) == 4 else x
+    return f"coalesce(try_element_at({to}, {idx}), {dflt})"
+
+
+_DECIMAL_PRECISION = {"toDecimal32": 9, "toDecimal64": 18,
+                      "toDecimal128": 38}
+
+
+@_calls(*_DECIMAL_PRECISION)
+def _to_decimal(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) != 2 or not parts[1].strip().isdigit():
+        raise UnsupportedChSql(
+            f"{call.name}(x, scale) expects a literal integer scale")
+    return (f"CAST(({parts[0]}) AS DECIMAL("
+            f"{_DECIMAL_PRECISION[call.name]}, {parts[1].strip()}))")
+
+
+@_calls("age")
+def _age(call: _Call) -> str:
+    return _age_expr(call.parts)
+
+
+@_calls("cast", ci=True)
+@_calls("accurateCast")
+def _cast(call: _Call) -> str | None:
+    accurate = call.name == "accurateCast"
+    split = _split_top_as(call.inner)
+    if split is not None:
+        # None for a plain ANSI type: CAST is kept untouched
+        return _ch_cast_expr(split[0], split[1], accurate)
+    parts = call.parts
+    p1 = parts[1].strip() if len(parts) == 2 else ""
+    if p1.startswith("'") and p1.endswith("'"):
+        # CH's function-form CAST(x, 'Type'); an ANSI spelling in CH
+        # syntax becomes a plain CAST
+        return (_ch_cast_expr(parts[0], p1[1:-1], accurate)
+                or f"CAST(({parts[0]}) AS {p1[1:-1]})")
+    if accurate:
+        raise UnsupportedChSql(
+            "accurateCast(x, 'Type') expects a literal type")
+    return None
+
+
+@_calls("fromUnixTimestamp")
+def _from_unix_timestamp(call: _Call) -> str:
+    if len(call.parts) != 1:
+        raise UnsupportedChSql(
+            "fromUnixTimestamp(n, fmt) — spell "
+            "formatDateTime(toDateTime(n), fmt)")
+    return f"timestamp_seconds({call.inner})"
+
+
+@_calls("makeDate")
+def _make_date(call: _Call) -> str:
+    parts = call.parts
+    if len(parts) == 3:
+        return f"make_date({call.inner})"
+    if len(parts) == 2:  # CH's (year, day_of_year) form
+        return f"date_add(make_date({parts[0]}, 1, 1), ({parts[1]}) - 1)"
+    raise UnsupportedChSql(
+        "makeDate expects (year, month, day) or (year, day_of_year)")
 
 
 def substitute(sql: str, params: Mapping[str, object]) -> str:
