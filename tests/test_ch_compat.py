@@ -27,11 +27,14 @@ def test_translate_renames_and_if_aggs():
     assert translate_ch_sql("SELECT uniqExact(a, b) FROM t") == (
         "SELECT count(DISTINCT a, b) FROM t"
     )
+    # CH sum returns 0, not NULL, when no row matches; CH conditions
+    # are UInt8, so each one is CAST to a Spark boolean
     assert translate_ch_sql("SELECT sumIf(v, x > 1) FROM t") == (
-        "SELECT coalesce(sum(CASE WHEN x > 1 THEN v END), 0) FROM t"
-    )  # CH sum returns 0, not NULL, when no row matches
+        "SELECT coalesce(sum(CASE WHEN CAST((x > 1) AS BOOLEAN) THEN v END),"
+        " 0) FROM t"
+    )
     assert translate_ch_sql("SELECT countIf(x = 'B') FROM t") == (
-        "SELECT count_if(x = 'B') FROM t"
+        "SELECT count_if(CAST((x = 'B') AS BOOLEAN)) FROM t"
     )
 
 

@@ -869,3 +869,26 @@ def test_r12d_t_tests_exact(spark):
     ):
         val = run_ch_sql(spark, q).collect()[0].p
         assert val != val, q  # NaN
+
+
+def test_if_combinators_take_numeric_conditions(spark):
+    """ClickHouse conditions are UInt8: an INT flag column is a valid
+    condition for every -If aggregate, both countIf forms and
+    argMaxIf/argMinIf (any non-zero value holds).  The f=0 rows carry
+    the extreme x and y values, so a condition that is ignored shows."""
+    r = cc.run_ch_sql(
+        spark,
+        "SELECT sumIf(x, f) AS s, avgIf(x, f) AS a, minIf(x, f) AS mn,"
+        " maxIf(x, f) AS mx, uniqIf(x, f) AS u, uniqExactIf(x, f) AS ue,"
+        " anyIf(x, f) AS an, anyLastIf(x, f) AS al,"
+        " groupArrayIf(x, f) AS ga, groupUniqArrayIf(x, f) AS gu,"
+        " medianIf(x, f) AS md, medianExactIf(x, f) AS me,"
+        " countIf(f) AS c1, countIf(x, f) AS c2,"
+        " argMaxIf(x, y, f) AS amx, argMinIf(x, y, f) AS amn"
+        " FROM VALUES (1, 10, 1), (2, 50, 0), (3, 20, 2), (NULL, 15, 1),"
+        " (4, 1, 0) AS t(x, y, f)").collect()[0]
+    assert (r.s, r.a, r.mn, r.mx, r.u, r.ue) == (4, 2.0, 1, 3, 2, 2)
+    assert r.an in (1, 3) and r.al in (1, 3)
+    assert sorted(r.ga) == [1, 3] and sorted(r.gu) == [1, 3]
+    assert (r.md, r.me) == (2.0, 2.0)
+    assert (r.c1, r.c2, r.amx, r.amn) == (3, 2, 3, 1)

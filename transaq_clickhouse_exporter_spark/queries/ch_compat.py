@@ -30,6 +30,7 @@ Two mechanisms, used together by :func:`run_ch_sql`:
    - ``quantile(q)(x)`` / ``quantileExact(q)(x)`` → ``percentile(x, q)``
    - ``countIf(c)`` / ``countIf(x, c)`` → ``count_if(c)`` / CASE form
    - ``sumIf/avgIf/minIf/maxIf(x, c)`` → ``agg(CASE WHEN c THEN x END)``
+     — each condition ``c`` CAST to BOOLEAN, as CH conditions are UInt8
    - ``any(x)``                  → ``any_value(x)``
    - ``FROM t FINAL``            → ``FROM t`` (the engine's views
      already apply ReplacingMergeTree FINAL on read — op01/op02)
@@ -6487,15 +6488,22 @@ def _max_intersections_call(call: _Call) -> str:
     return _max_intersections_expr(call.name, call.parts)
 
 
+def _ch_cond(cond: str) -> str:
+    """A ClickHouse condition as a Spark BOOLEAN.  CH conditions are
+    UInt8 (any non-zero value holds: ``sumIf(x, flag)``,
+    ``multiIf(0, …)``); Spark's CASE WHEN and count_if need a
+    boolean.  Catalyst drops the CAST of a condition that already is
+    one, so a boolean condition plans as before."""
+    return f"CAST(({cond}) AS BOOLEAN)"
+
+
 @_calls("multiIf")
 def _multi_if(call: _Call) -> str:
     parts = call.parts
     if len(parts) < 3 or len(parts) % 2 == 0:
         raise UnsupportedChSql("multiIf expects (c1, v1, …, else)")
-    # CH conditions are truthy numbers (multiIf(0, …)); Spark
-    # CASE needs booleans — CAST bridges both spellings
     whens = " ".join(
-        f"WHEN CAST(({parts[j]}) AS BOOLEAN) THEN {parts[j + 1]}"
+        f"WHEN {_ch_cond(parts[j])} THEN {parts[j + 1]}"
         for j in range(0, len(parts) - 1, 2)
     )
     return f"CASE {whens} ELSE {parts[-1]} END"
@@ -7842,8 +7850,8 @@ def _arg_if(call: _Call) -> str:
         raise UnsupportedChSql(f"{call.name}(x, by, cond) expects 3 args")
     base = "max_by" if call.name == "argMaxIf" else "min_by"
     x, by, cond = parts
-    return (f"{base}(CASE WHEN {cond} THEN {x} END, "
-            f"CASE WHEN {cond} THEN {by} END)")
+    return (f"{base}(CASE WHEN {_ch_cond(cond)} THEN {x} END, "
+            f"CASE WHEN {_ch_cond(cond)} THEN {by} END)")
 
 
 @_calls("splitByString", "splitByChar")
@@ -7895,7 +7903,7 @@ def _if_agg(call: _Call) -> str:
     parts = call.parts
     if len(parts) != 2:
         raise UnsupportedChSql(f"{call.name}() expects 2 arguments")
-    case = f"CASE WHEN {parts[1]} THEN {parts[0]} END"
+    case = f"CASE WHEN {_ch_cond(parts[1])} THEN {parts[0]} END"
     # any_value respects NULLs by default — the CASE injects
     # one per non-matching row, so pass ignoreNulls=true
     if _IF_AGGS[call.name] == "any_value":
@@ -7992,7 +8000,8 @@ def _uniq_exact_if(call: _Call) -> str:
     parts = call.parts
     if len(parts) != 2:
         raise UnsupportedChSql("uniqExactIf(x, cond) expects 2 args")
-    return f"count(DISTINCT CASE WHEN {parts[1]} THEN {parts[0]} END)"
+    return (f"count(DISTINCT CASE WHEN {_ch_cond(parts[1])} "
+            f"THEN {parts[0]} END)")
 
 
 @_calls("countIf")
@@ -8001,8 +8010,8 @@ def _count_if(call: _Call) -> str:
     # where cond holds
     parts = call.parts
     if len(parts) == 2:
-        return f"count(CASE WHEN {parts[1]} THEN {parts[0]} END)"
-    return f"count_if({call.inner})"
+        return f"count(CASE WHEN {_ch_cond(parts[1])} THEN {parts[0]} END)"
+    return f"count_if({_ch_cond(call.inner)})"
 
 
 @_calls("avgWeighted")
