@@ -6353,10 +6353,10 @@ _CALLS_CI: dict[str, Callable[[_Call], "str | None"]] = {}
 
 def _register(name: str, handler: Callable[[_Call], "str | None"],
               ci: bool = False) -> None:
-    """Claim ``name`` for ``handler``.  A name claimed twice — in any
-    casing that the two entries' case rules both match, or by a
-    ``-State``/``-Merge`` spelling the refusal below takes first —
-    raises, so no entry can shadow another."""
+    """Claim ``name`` for ``handler``.  A name claimed twice (in any
+    casing that both entries' case rules match), or one that the
+    ``-State``/``-Merge`` refusal pattern matches, raises, so no entry
+    can shadow another."""
     low = name.lower()
     if (name in _CALLS or low in _CALLS_CI
             or (ci and any(k.lower() == low for k in _CALLS))
@@ -6451,6 +6451,7 @@ _register("replaceRegexpOne", _refuse(
     "use replaceRegexpAll or anchor the pattern"))
 for _name, _to in _RENAMES.items():
     _register(_name, lambda call, to=_to: call.plain(to))
+del _name, _msg, _to
 
 
 # -- handlers, one per ClickHouse function (family)
