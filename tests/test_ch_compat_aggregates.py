@@ -892,3 +892,25 @@ def test_if_combinators_take_numeric_conditions(spark):
     assert sorted(r.ga) == [1, 3] and sorted(r.gu) == [1, 3]
     assert (r.md, r.me) == (2.0, 2.0)
     assert (r.c1, r.c2, r.amx, r.amn) == (3, 2, 3, 1)
+
+
+def test_conditions_outside_if_combinators_take_numeric_flags(spark):
+    """``if``, ``retention``, ``windowFunnel``, ``sequenceMatch`` and
+    ``sequenceCount`` take UInt8 conditions too: over INT flags (f2 = 2
+    on its one set row, so any non-zero value must hold) each answers
+    what the same statement answers over ``f = 1`` booleans."""
+    t = (" FROM VALUES (1, 0, 1, 10), (0, 2, 2, 20), (0, 0, 1, 30)"
+         " AS t(f1, f2, u, ts)")
+    rows = cc.run_ch_sql(
+        spark, "SELECT ts, if(f1, 'a', 'b') AS s, if(f2, ts, -ts) AS v" + t
+    ).collect()
+    assert sorted((r.ts, r.s, r.v) for r in rows) == [
+        (10, "a", -10), (20, "b", 20), (30, "b", -30)]
+    aggs = ("retention(f1, f2) AS r, windowFunnel(60)(ts, f1, f2) AS w,"
+            " sequenceMatch('(?1)(?2)')(ts, f1, f2) AS m,"
+            " sequenceCount('(?1)(?2)')(ts, f1, f2) AS c")
+    r = cc.run_ch_sql(spark, "SELECT " + aggs + t).collect()[0]
+    assert (list(r.r), r.w, r.m, r.c) == ([1, 1], 2, True, 1)
+    by_u = cc.run_ch_sql(spark, "SELECT u, " + aggs + t + " GROUP BY u").collect()
+    assert sorted((r.u, list(r.r), r.w, r.m, r.c) for r in by_u) == [
+        (1, [1, 0], 1, False, 0), (2, [0, 0], 0, False, 0)]

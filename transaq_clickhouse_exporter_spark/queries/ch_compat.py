@@ -5292,7 +5292,7 @@ def _retention_expr(parts: list[str]) -> str:
         raise UnsupportedChSql("retention() expects at least one condition")
 
     def flag(p: str) -> str:
-        return f"max(CASE WHEN ({p}) THEN 1 ELSE 0 END)"
+        return f"max(CASE WHEN {_ch_cond(p)} THEN 1 ELSE 0 END)"
 
     elems = [flag(parts[0])]
     elems += [f"({flag(parts[0])} * {flag(p)})" for p in parts[1:]]
@@ -5318,7 +5318,7 @@ def _seq_expr(name: str, params: str, args: list[str]) -> str:
         chain_count_fold_sql, parse_chain, translate_pattern,
     )
 
-    ts, conds = args[0], args[1:]
+    ts, conds = args[0], [_ch_cond(c) for c in args[1:]]
     raw_pat = pat[1:-1].replace("''", "'")
     try:
         steps, seps = parse_chain(raw_pat, len(conds))
@@ -5697,7 +5697,7 @@ def _funnel_expr(params: str, args: list[str]) -> str:
             "is not supported (each mode is, alone or with "
             "strict_increase) — the two early-exit rules interleave "
             "per CH's branch order; split the query if you need both")
-    ts, conds = args[0], args[1:]
+    ts, conds = args[0], [_ch_cond(c) for c in args[1:]]
     n = len(conds)
     t_expr = f"CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE)"
     elems = [
@@ -6496,6 +6496,14 @@ def _ch_cond(cond: str) -> str:
     boolean.  Catalyst drops the CAST of a condition that already is
     one, so a boolean condition plans as before."""
     return f"CAST(({cond}) AS BOOLEAN)"
+
+
+@_calls("if", ci=True)
+def _if(call: _Call) -> str | None:
+    parts = call.parts
+    if len(parts) != 3:
+        return None  # Spark reports the arity
+    return f"if({_ch_cond(parts[0])}, {parts[1]}, {parts[2]})"
 
 
 @_calls("multiIf")
