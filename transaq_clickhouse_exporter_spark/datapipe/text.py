@@ -339,7 +339,7 @@ def bigram_lm_scores(
     Tokenization is the portable ASCII form shared with
     :func:`term_stats`.  ``P(w2|w1) = (c(w1,w2) + 1) / (c(w1) + V)``
     where ``c(w1)`` counts bigram prefixes and ``V`` is the corpus
-    vocabulary size.  Output per document:
+    vocabulary size.  Output, one row per ``id_col`` value:
     (``id_col``, ``n_bigrams`` BIGINT, ``logp_micro_sum`` BIGINT — the
     summed natural-log probability in 1e-6 units — and ``avg_logp``,
     the mean rounded to 6).  Docs with fewer than 2 tokens re-enter
@@ -391,25 +391,29 @@ def bigram_lm_scores(
     logp_micro = F.round(F.log(p) * F.lit(1e6), 0).cast("long")
     scored = (
         # c2cu is |distinct bigrams|-sized — web corpora reach 10^8+
-        # bigrams, so it shuffles (equi-join on w1, w2), never broadcasts
-        big.join(c2cu, ["w1", "w2"])
+        # bigrams, so it shuffles (equi-join on w1, w2), never broadcasts;
+        # the hint keeps that shape on small corpora too, where AQE would
+        # otherwise broadcast one side or the other by which stage
+        # finished first
+        big.join(c2cu.hint("merge"), ["w1", "w2"])
         .crossJoin(F.broadcast(vc))
-        .select(F.col(id_col), logp_micro.alias("__lp"))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("__lp").alias("logp_micro_sum"),
-        )
+        .select(F.col(id_col), F.lit(1).alias("__n"), logp_micro.alias("__lp"))
     )
+    # every document also enters as one zero row, so a single aggregate
+    # on the id scores documents with and without bigrams alike — no
+    # join back to the corpus, whose strategy and shuffles would hang
+    # on AQE's stage timing and on the corpus' own partitioning
+    zeros = df.select(F.col(id_col), F.lit(0).alias("__n"), F.lit(0).cast("long").alias("__lp"))
     return (
-        df.select(id_col)
-        .join(scored, id_col, "left")
+        scored.unionByName(zeros)
+        .groupBy(id_col)
+        .agg(F.sum("__n").alias("n_bigrams"), F.sum("__lp").alias("logp_micro_sum"))
         .select(
             F.col(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-            F.coalesce("logp_micro_sum", F.lit(0)).alias("logp_micro_sum"),
+            "n_bigrams",
+            "logp_micro_sum",
             F.when(
-                F.col("n_bigrams").isNotNull() & (F.col("n_bigrams") > 0),
+                F.col("n_bigrams") > 0,
                 F.round(
                     F.col("logp_micro_sum") / F.col("n_bigrams") / F.lit(1e6), 6
                 ),
