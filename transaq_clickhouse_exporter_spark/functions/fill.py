@@ -30,7 +30,8 @@ the tick volume), the join shuffles buckets not ticks when the input
 is already aggregated (the intended use: fill AFTER the bucket agg,
 exactly where CH puts WITH FILL — on the result ORDER BY), and the
 LOCF window is the same single-exchange shape as every window op in
-this repo (PLANS.md).
+this repo (``an08_gap_fill``'s entry in ``tests/plan_budget.json`` pins
+its node counts).
 """
 
 from __future__ import annotations

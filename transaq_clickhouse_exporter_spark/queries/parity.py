@@ -34,7 +34,6 @@ Determinism rules that make exact value-hash matching possible:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -279,16 +278,14 @@ def _register_derived_locked(spark: SparkSession, sf_dir: str, cache: bool, mark
     # plans WITHOUT its Exchange (op01's dedup agg, op07's two-level
     # register aggs, op02/op03's quote windows, the funnels' per-user
     # folds).  Partition count is scale-adaptive, not a local[32]
-    # constant: ~cpus/4 (env `SPARK_GRAFT_CACHE_PARTS` overrides) so a
+    # constant: ~cpus/4 (2 at local[8], 8 at local[32]), so a
     # 16-way concurrent pool is not thrashed (the r16 experiment that
     # re-cached at defaultParallelism lost for exactly that reason) —
     # on a real cluster the same role is played by the table's bucket
     # count.  Key cardinalities (40 sec_codes, ~uniform; unique
     # trade_no/doc_id/user_id) spread evenly over <= cpus/4 buckets.
     if cache:
-        _parts = int(os.environ.get("SPARK_GRAFT_CACHE_PARTS", "0")) or max(
-            2, spark.sparkContext.defaultParallelism // 4
-        )
+        _parts = max(2, spark.sparkContext.defaultParallelism // 4)
         for name, key in (
             ("trades", "sec_code"),
             ("trades_dup", "trade_no"),
@@ -300,8 +297,9 @@ def _register_derived_locked(spark: SparkSession, sf_dir: str, cache: bool, mark
             # union with that still came from raw parquet — its leg's
             # UnknownPartitioning forced a full-union Exchange of
             # trades+windows rows before the bridge Window in op10/
-            # op13/op14 (plans/r17/op1{0,3,4}_*_r17head.txt, Exchange
-            # above Union).  Co-partitioned on sec_code the union
+            # op13/op14 (an Exchange above the Union; their
+            # `exchanges` in tests/plan_budget.json now pin its
+            # absence).  Co-partitioned on sec_code the union
             # propagates the cache partitioning and only the ~|windows|
             # rows ever shuffle.
             ("sess_windows", "sec_code"),
@@ -4848,8 +4846,9 @@ def _operator_specs() -> list[QuerySpec]:
         # three per-batch filters partition rows EXACTLY (pmod(trade_no,
         # 3) ∈ {0,1,2}), so grouping ONE scan by (sec_code, batch)
         # produces state rows identical to three filtered scans unioned
-        # — same per-batch partial states, same merge inputs, proved
-        # value-identical in tools/exp_op07.py.  The r16 experiment
+        # — same per-batch partial states, same merge inputs; this
+        # entry's own DuckDB oracle checks the values on every Tier-1
+        # run.  The r16 experiment
         # rejected this fusion as slower, but that verdict inverted once
         # the cache partitioning change removed the aggregation
         # exchanges: the md5 register pass now dominates, and one scan
