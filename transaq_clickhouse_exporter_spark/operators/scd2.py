@@ -27,8 +27,8 @@ At 100 TB: steps 2–3 are windows over the same (keys, ts) ordering,
 so Catalyst plans ONE Exchange + one sort for both (one sort and no
 Exchange when the input is already partitioned on the keys, as
 ``op06_scd2_history``'s is: its entry in ``tests/plan_budget.json``
-pins both counts); step 1's exchange is on (keys, ts) — finer but compatible
-work, carrying the raw feed once.  State per key is a single lag/lead
+pins both counts); step 1's exchange is on (keys, ts) — finer but
+compatible work, carrying the raw feed once.  State per key is a single lag/lead
 row, never the full history.
 """
 

@@ -4848,12 +4848,12 @@ def _operator_specs() -> list[QuerySpec]:
         # produces state rows identical to three filtered scans unioned
         # — same per-batch partial states, same merge inputs; this
         # entry's own DuckDB oracle checks the values on every Tier-1
-        # run.  The r16 experiment
-        # rejected this fusion as slower, but that verdict inverted once
-        # the cache partitioning change removed the aggregation
-        # exchanges: the md5 register pass now dominates, and one scan
-        # hashes 600k rows where three scans hashed 1.8M (measured
-        # 1.04-1.24 s → 0.64-0.68 s interleaved medians at sf0.1).
+        # run.  The r16 experiment rejected this fusion as slower, but
+        # that verdict inverted once the cache partitioning change
+        # removed the aggregation exchanges: the md5 register pass now
+        # dominates, and one scan hashes 600k rows where three scans
+        # hashed 1.8M (measured 1.04-1.24 s → 0.64-0.68 s interleaved
+        # medians at sf0.1).
         states = partial_states(
             t.withColumn("__batch", F.pmod(F.col("trade_no"), F.lit(3))),
             ("sec_code", "__batch"),
