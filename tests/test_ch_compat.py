@@ -1647,7 +1647,7 @@ def test_scanner_helpers():
     ("SELECT a FROM t WHERE NOT a IN [] OR a GLOBAL NOT IN []",
      "SELECT a FROM t WHERE NOT false OR true"),
     ("SELECT if(a IN [], 1, 2) FROM t WHERE a IN ['[]']",
-     "SELECT if(false, 1, 2) FROM t WHERE a IN ('[]')"),
+     "SELECT if(CAST((false) AS BOOLEAN), 1, 2) FROM t WHERE a IN ('[]')"),
     # the operand ends at the clause keyword or lambda arrow before it
     ("SELECT a FROM t WHERE a > 1 ORDER BY code IN []",
      "SELECT a FROM t WHERE a > 1 ORDER BY false NULLS LAST"),
