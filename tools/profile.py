@@ -42,7 +42,7 @@ as the benchmark's do, and are removed at exit.
 
 Run from the checkout root (add ``2>/dev/null`` to drop Spark's log):
 
-    python3 tools/profile.py catalog [--sf DIR] [--cpus N]
+    python3 tools/profile.py catalog --sf DIR [--cpus N]
         [--shuffle-partitions N] [--out PROFILE.json] [--budget FILE]
         [--plan NAME] [NAME ...]
     python3 tools/profile.py panels [--seed 1] [--refreshes 5] [--json]
@@ -286,7 +286,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     sub = ap.add_subparsers(dest="subject", required=True)
     c = sub.add_parser("catalog", help="parity.catalog() entries at one scale factor")
-    c.add_argument("--sf", default="/root/testdata/sf0.01", help="scale-factor directory")
+    c.add_argument("--sf", required=True, help="scale-factor directory of the base tables")
     c.add_argument("--cpus", type=int, default=None, help="local[N] (default: all cores)")
     c.add_argument("--shuffle-partitions", type=int, default=None)
     c.add_argument("--out", help="write every entry's record as JSON")
