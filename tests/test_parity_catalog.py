@@ -1,8 +1,9 @@
 """Every oracle-paired catalog query must match DuckDB exactly at
-sf0.001 (fast) — the same check the driver runs at sf0.01 — and its
-final plan must hold exactly the node counts ``plan_budget.json`` pins
-for it.  A plan change regenerates the budget in the same commit, with
-the ``spark`` fixture's session and ``sf_smoke`` (``conftest.SF_SMOKE``):
+sf0.001 (fast), the check ``__spark_entry__.oracle_sql`` pairs it with
+at sf0.01, and its final plan must hold exactly the node counts
+``plan_budget.json`` pins for it.  A plan change regenerates the budget
+in the same commit, with the ``spark`` fixture's session and
+``sf_smoke`` (``conftest.SF_SMOKE``):
 
     python3 tools/profile.py catalog --sf <SF_SMOKE> \
         --cpus 8 --shuffle-partitions 8 --budget tests/plan_budget.json
